@@ -1090,7 +1090,7 @@ def _bpe_tables(docs: DataFrame, k: int):
 def _q_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer round-trip (vocab.bpe_decode_ids): learn 6 char merges,
     rank the vocab, encode to ids, decode back — the oracle is
-    CLOSED-FORM (`' '.join(py_tokens(text))`, zero unknowns): if ANY
+    CLOSED-FORM (`' '.join(text.lower().split())`, zero unknowns): if ANY
     stage of the learn->vocab->encode->decode chain corrupts a byte,
     the round-trip identity breaks. Encode is lossy exactly to the
     lowercase/whitespace token normalization, nothing else."""

@@ -342,58 +342,57 @@ def semdedup(
     from pyspark.sql import types as T
 
     id_field = member.schema["_id"]
-    cl_field = member.schema["cluster"]
     out_schema = T.StructType(
-        [
-            T.StructField(id_col, id_field.dataType, id_field.nullable),
-            T.StructField("cluster", cl_field.dataType, cl_field.nullable),
-        ]
+        [T.StructField("_dropped", id_field.dataType, id_field.nullable)]
     )
     thr = float(threshold)
     cap = int(max_cluster)
     BLOCK = 2048  # bounds the per-task Gram block to O(BLOCK^2) doubles
 
-    def prune(pdf: pd.DataFrame) -> pd.DataFrame:
-        survivors = pdf[["_id", "cluster"]].rename(columns={"_id": id_col})
-        if cap and len(pdf) > cap:
-            return survivors  # wide cluster: excluded from pair generation
-        pdf = pdf.sort_values("_id", kind="mergesort").reset_index(drop=True)
-        valid = pdf["_vq"].map(lambda v: v is not None).to_numpy()
-        vi = np.nonzero(valid)[0]
-        n = len(vi)
-        if n > 1:
-            V = np.stack([np.asarray(pdf["_vq"].iloc[i], dtype=np.int64) for i in vi])
-            ids = pdf["_id"].to_numpy()[vi]
-            n2 = np.einsum("ij,ij->i", V, V)
-            sq = np.sqrt(n2.astype(np.float64))
-            keep = np.ones(n, dtype=bool)
-            for s in range(1, n, BLOCK):
-                e = min(s + BLOCK, n)
-                hit = np.zeros(e - s, dtype=bool)
-                for si in range(0, e, BLOCK):
-                    ei = min(si + BLOCK, e)
-                    M = V[si:ei] @ V[s:e].T
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        C = M.astype(np.float64) / (
-                            sq[si:ei, None] * sq[None, s:e]
-                        )
-                    C = np.where(
-                        (n2[si:ei, None] == 0) | (n2[None, s:e] == 0), 0.0, C
-                    )
-                    # strict id-VALUE comparison (not position) — exact
-                    # parity with the former a._id < b._id join predicate
-                    # even under duplicate ids
-                    ilt = ids[si:ei, None] < ids[None, s:e]
-                    hit |= ((C >= thr) & ilt).any(axis=0)
-                keep[s:e] &= ~hit
-            mask = np.ones(len(pdf), dtype=bool)
-            mask[vi] = keep
-            survivors = (
-                pdf.loc[mask, ["_id", "cluster"]].rename(columns={"_id": id_col})
-            )
-        return survivors
+    def _scorable(v) -> bool:
+        # a null vector, or one with a null element, never pairs: its
+        # cosine is null, so it neither drops nor is dropped
+        return v is not None and not pd.isna(v).any()
 
-    return (
-        member.groupBy("cluster")
-        .applyInPandas(prune, schema=out_schema)
-    )
+    def prune(pdf: pd.DataFrame) -> pd.DataFrame:
+        """-> the ids this cluster drops."""
+        none = pd.DataFrame({"_dropped": pdf["_id"].iloc[:0]})
+        if cap and len(pdf) > cap:
+            return none  # wide cluster: excluded from pair generation
+        pdf = pdf.sort_values("_id", kind="mergesort").reset_index(drop=True)
+        vi = np.nonzero(pdf["_vq"].map(_scorable).to_numpy(dtype=bool))[0]
+        n = len(vi)
+        if n < 2:
+            return none
+        V = np.stack([np.asarray(pdf["_vq"].iloc[i], dtype=np.int64) for i in vi])
+        ids = pdf["_id"].to_numpy()[vi]
+        n2 = np.einsum("ij,ij->i", V, V)
+        sq = np.sqrt(n2.astype(np.float64))
+        keep = np.ones(n, dtype=bool)
+        for s in range(1, n, BLOCK):
+            e = min(s + BLOCK, n)
+            hit = np.zeros(e - s, dtype=bool)
+            for si in range(0, e, BLOCK):
+                ei = min(si + BLOCK, e)
+                M = V[si:ei] @ V[s:e].T
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    C = M.astype(np.float64) / (
+                        sq[si:ei, None] * sq[None, s:e]
+                    )
+                C = np.where(
+                    (n2[si:ei, None] == 0) | (n2[None, s:e] == 0), 0.0, C
+                )
+                # strict id-VALUE comparison (not position) — exact
+                # parity with the former a._id < b._id join predicate
+                # even under duplicate ids
+                ilt = ids[si:ei, None] < ids[None, s:e]
+                hit |= ((C >= thr) & ilt).any(axis=0)
+            keep[s:e] &= ~hit
+        return pd.DataFrame({"_dropped": pdf["_id"].iloc[vi[~keep]]})
+
+    dropped = member.groupBy("cluster").applyInPandas(prune, schema=out_schema)
+    # survivors on the `assign` row basis: one output row per input row,
+    # null ids included (an anti-join never matches null)
+    return assign.join(
+        dropped, F.col(id_col) == F.col("_dropped"), "left_anti"
+    ).select(id_col, "cluster")

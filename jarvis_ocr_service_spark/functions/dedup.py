@@ -536,36 +536,6 @@ def minhash_lsh_pairs_between_sh(
     )
 
 
-def drop_near_dups_against(
-    batch: DataFrame,
-    corpus: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    verify_threshold: float = 0.85,
-    **lsh_kwargs,
-) -> DataFrame:
-    """The ingest filter: batch rows whose text is NOT a near-duplicate
-    (Jaccard >= threshold) of anything in ``corpus``. Anti-join on the
-    cross-corpus pair set; the pair frame's caches are released after
-    the keys are derived (the anti-join only needs left keys)."""
-    pairs = minhash_lsh_pairs_between(
-        batch,
-        corpus,
-        text_col=text_col,
-        key_col=key_col,
-        verify_threshold=verify_threshold,
-        **lsh_kwargs,
-    )
-    dup_keys = pairs.select(
-        F.col("left_key").alias(key_col)
-    ).dropDuplicates()
-    from jarvis_ocr_service_spark.plans.caching import attach_cached, carried_cached
-
-    return attach_cached(
-        batch.join(dup_keys, key_col, "left_anti"), carried_cached(pairs)
-    )
-
-
 def minhash_bucket_clusters(
     df: DataFrame,
     text_col: str = "text",

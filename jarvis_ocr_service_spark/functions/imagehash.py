@@ -1,5 +1,5 @@
-"""Perceptual image hashing (pHash) + image near-duplicate pairs — the
-image-side twin of the text near-dup family, built on the repo's own
+"""Perceptual image hashing (pHash) — the image-side twin of the text
+near-dup signatures, built on the repo's own
 from-scratch PNG codec (operators/png_codec) so the whole path runs
 with stdlib + numpy only.
 
@@ -26,10 +26,11 @@ tests, and the fixture-VALUES oracle all call):
      (Spark LongType), i in 0..63 (DC included — it exceeds the median
      for any non-degenerate image).
 
-Near-dup search reuses dedup.hamming_band_pairs: the pigeonhole-banded
-self-join (complete recall at bands = max_hamming + 1) with the same
-opt-in ``max_bucket`` hot-bucket guard — identical 10^12-row shape as
-SimHash text near-dup, one shuffle on (band, band_key).
+Image near-dup search feeds ``with_phash`` output, as (k, sig), into
+dedup.hamming_band_pairs: the pigeonhole-banded self-join (complete
+recall at bands = max_hamming + 1) with the opt-in ``max_bucket``
+hot-bucket guard — the SimHash text near-dup shape, one shuffle on
+(band, band_key).
 
 Reference parity note: the reference service treats images as OCR
 input only; this is part of the training-data layer (SURVEY §2
@@ -44,7 +45,6 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _DCT_N = 32
@@ -117,28 +117,3 @@ def with_phash(
             yield out
 
     return df.mapInPandas(decode, schema=schema)
-
-
-def phash_near_pairs(
-    df: DataFrame,
-    key_col: str = "doc_id",
-    binary_col: str = "html",
-    max_hamming: int = 8,
-    bands: int = 0,
-    max_bucket: int = 0,
-) -> DataFrame:
-    """Image near-duplicate pairs: Hamming(pHash) <= max_hamming over
-    the decodable rows — (key_a, key_b, hamming), key_a < key_b.
-    Same banded shape and guards as dedup.simhash_near_pairs."""
-    from jarvis_ocr_service_spark.functions.dedup import hamming_band_pairs
-
-    sigs = (
-        with_phash(
-            df.select(key_col, binary_col), binary_col, out_col="sig"
-        )
-        .filter(F.col("sig").isNotNull())
-        .select(F.col(key_col).alias("k"), "sig")
-    )
-    return hamming_band_pairs(
-        sigs, max_hamming=max_hamming, bands=bands, max_bucket=max_bucket
-    )

@@ -76,10 +76,12 @@ def _term_tf_col(lowered, term: str):
     is bounded by start/end-of-string or the tokenizer's ``\\s`` class
     (``py_tokens_col`` splits on the same Java ``\\s``). The leading
     boundary is consuming (at most one whitespace char), the trailing one
-    a lookahead, so adjacent occurrences ("x x x") all count. Exactness
-    vs explode+filter is pinned by tests/test_lexsearch.py."""
+    a lookahead, so adjacent occurrences ("x x x") all count. The end
+    anchor is ``\\z``: Java's ``$`` also matches before a final line
+    terminator (U+0085, U+2028, U+2029), which ``\\s`` does not contain.
+    Exactness vs explode+filter is pinned by tests/test_lexsearch.py."""
     return F.regexp_count(
-        lowered, F.lit("(^|\\s)" + _java_quote(term) + "(?=\\s|$)")
+        lowered, F.lit("(^|\\s)" + _java_quote(term) + "(?=\\s|\\z)")
     ).cast("long")
 
 
@@ -193,7 +195,8 @@ def bm25_topk_quantized(
     driver-side with the same integer arithmetic; the scoring pass is
     map-only ending in TakeOrderedAndProject. ``n_docs``/``total_tokens``
     are accepted for API compatibility (the aggregate is one pass either
-    way and also carries df). Returns (key, score) — score an exact
+    way and also carries df); an ``n_docs`` below a query term's df
+    raises ``ValueError``. Returns (key, score) — score an exact
     BIGINT."""
     terms = sorted({t for t in query.lower().split() if t})
     if not terms:
@@ -224,6 +227,14 @@ def bm25_topk_quantized(
     if total_tokens is None:
         total_tokens = row["_tt"] or 0
     avgdl_q = max(1, int(total_tokens) // max(1, int(n_docs)))
+    short = [t for i, t in enumerate(terms) if row[f"_df{i}"] > int(n_docs)]
+    if short:
+        # N - df < 0 would make the idf numerator negative, where the
+        # Python floor division here and SQL `div` part ways
+        raise ValueError(
+            f"n_docs={n_docs} is smaller than the document frequency of "
+            f"query term(s) {short}"
+        )
     # Robertson idf with the *2+1 trick — exact same integer arithmetic
     # as the former per-term SQL (scale * (2*(N-df)+1)) div (2*df+1)
     idf = {

@@ -1,18 +1,13 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
-Real, tested Spark stages for image/audio/video columns:
+Real, tested Spark stages for image and audio columns:
 
 * ``with_image_meta`` — PNG IHDR / JPEG / GIF header decode into a typed
   struct (fully real, stdlib).
-* ``resize_images`` — REAL for PNG payloads via the from-scratch codec
-  (operators/png_codec: zlib + numpy, all five scanline filters,
-  deterministic nearest-neighbor resample, PNG re-encode); JPEG/GIF pixel
-  decode stays import-gated (PIL if present, else null output;
-  ``fake=True`` keeps the deterministic plumbing fake for non-PNG).
 * ``with_pixel_stats`` — real pixel features (dims/channels/mean
-  intensity) for PNG payloads, null struct otherwise.
-* ``sample_frames`` — video-sampler stub: the row-expanding UDTF shape is
-  real and tested; frame decode gated (no video libs here).
+  intensity) for PNG payloads via the from-scratch codec
+  (operators/png_codec: zlib + numpy, all five scanline filters), null
+  struct otherwise.
 """
 
 from __future__ import annotations
@@ -22,7 +17,6 @@ from typing import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from jarvis_ocr_service_spark.operators.extract_image import (
@@ -79,80 +73,6 @@ def with_image_meta(df: DataFrame, binary_col: str = "html") -> DataFrame:
     return df.mapInPandas(decode, schema=schema)
 
 
-def _require_backend(fake: bool):
-    if fake:
-        return
-    try:  # pragma: no cover — not installed here
-        import PIL.Image  # noqa: F401
-    except ImportError:
-        raise NotImplementedError(
-            "pixel decode requires an imaging backend (PIL) which is not "
-            "installed; pass fake=True for the deterministic test fake"
-        )
-
-
-def resize_images(
-    df: DataFrame, binary_col: str = "html", width: int = 64, height: int = 64,
-    fake: bool = False,
-) -> DataFrame:
-    """Resize stage. REAL for PNG payloads: from-scratch decode
-    (operators/png_codec — stdlib zlib + numpy, all five scanline
-    filters), deterministic nearest-neighbor resample, PNG re-encode. For
-    non-PNG payloads (JPEG/GIF need a DCT/LZW decoder): decoded via PIL
-    when importable, else ``resized`` is null (``fake=True`` substitutes
-    the old deterministic fake bytes for plumbing tests)."""
-    schema = T.StructType(
-        [
-            T.StructField("resized", T.BinaryType(), True),
-            T.StructField("out_width", T.LongType(), False),
-            T.StructField("out_height", T.LongType(), False),
-        ]
-        + df.schema.fields
-    )
-    cols = df.columns
-
-    def one(payload, hashlib_mod):
-        from jarvis_ocr_service_spark.operators.png_codec import (
-            decode_png_pixels,
-            encode_png_pixels,
-            resize_nearest,
-        )
-
-        raw = bytes(payload or b"")
-        try:
-            arr = decode_png_pixels(raw)
-            return encode_png_pixels(resize_nearest(arr, width, height))
-        except ValueError:
-            pass
-        if fake:
-            return hashlib_mod.md5(raw).digest() * 4
-        try:  # pragma: no cover — no imaging backend in this sandbox
-            import io
-
-            import PIL.Image
-
-            img = PIL.Image.open(io.BytesIO(raw)).resize((width, height))
-            buf = io.BytesIO()
-            img.save(buf, format="PNG")
-            return buf.getvalue()
-        except Exception:
-            return None  # undecodable in this environment
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for b in batches:
-            out = pd.DataFrame(index=b.index)
-            out["resized"] = [one(p, hashlib) for p in b[binary_col]]
-            out["out_width"] = width
-            out["out_height"] = height
-            for c in cols:
-                out[c] = b[c]
-            yield out
-
-    return df.mapInPandas(work, schema=schema)
-
-
 PIXEL_STATS_TYPE = T.StructType(
     [
         T.StructField("px_width", T.LongType(), True),
@@ -194,54 +114,6 @@ def with_pixel_stats(df: DataFrame, binary_col: str = "html") -> DataFrame:
             yield out
 
     return df.mapInPandas(decode, schema=schema)
-
-
-def sample_frames(
-    df: DataFrame, binary_col: str = "html", every_n: int = 10, fake: bool = False
-) -> DataFrame:
-    """Video frame-sampling stub: emits (frame_idx, frame) rows per input
-    row — the row-expanding UDTF shape a real sampler needs."""
-    schema = T.StructType(
-        [
-            T.StructField("frame_idx", T.LongType(), False),
-            T.StructField("frame", T.BinaryType(), True),
-        ]
-        + df.schema.fields
-    )
-    cols = df.columns
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        import numpy as np
-
-        _require_backend(fake)
-        for b in batches:
-            # Vectorized row expansion (no iterrows — the template must be
-            # scale-correct for when a real video backend lands): compute
-            # per-row frame counts, then np.repeat the batch index.
-            payloads = [bytes(p or b"") for p in b[binary_col]]
-            n_frames = np.array(
-                [max(1, len(p) // max(every_n, 1) % 4 + 1) for p in payloads],
-                dtype=np.int64,
-            )
-            src = np.repeat(np.arange(len(b)), n_frames)
-            frame_idx = np.concatenate(
-                [np.arange(k) for k in n_frames]
-            ) if len(b) else np.array([], dtype=np.int64)
-            out = b.iloc[src].reset_index(drop=True)[cols]
-            out.insert(0, "frame_idx", frame_idx)
-            out.insert(
-                1,
-                "frame",
-                [
-                    hashlib.md5(payloads[int(s)] + bytes([int(k)])).digest()
-                    for s, k in zip(src, frame_idx)
-                ],
-            )
-            yield out
-
-    return df.mapInPandas(work, schema=schema)
 
 
 AUDIO_FEATURES_TYPE = T.StructType(

@@ -139,26 +139,3 @@ def with_repetition_stats(
             yield pd.DataFrame(rows, columns=fields)
 
     return df.withColumn(out_col, rep(F.col(text_col)))
-
-
-def gopher_repetition_gate(
-    df: DataFrame,
-    text_col: str = "text",
-    max_dup_line_frac: float = 0.30,
-    max_dup_line_char_frac: float = 0.20,
-    max_top2_char_frac: float = 0.20,
-    max_dup5_char_frac: float = 0.15,
-    max_chars: int = 20000,
-) -> DataFrame:
-    """Filter rows whose repetition stats exceed the (Gopher-default-like)
-    thresholds — the composable quality gate form."""
-    out = with_repetition_stats(
-        df, text_col, "_rep", top_grams=(2,), dup_grams=(5,), max_chars=max_chars
-    )
-    keep = (
-        (F.col("_rep.dup_line_frac") <= max_dup_line_frac)
-        & (F.col("_rep.dup_line_char_frac") <= max_dup_line_char_frac)
-        & (F.col("_rep.top2_char_frac") <= max_top2_char_frac)
-        & (F.col("_rep.dup5_char_frac") <= max_dup5_char_frac)
-    )
-    return out.filter(keep).drop("_rep")

@@ -607,47 +607,53 @@ def embedding_near_dup_pairs(
     staged = (
         df.select(id_col, vec_col).mapInPandas(stage, schema=staged_schema).persist()
     )
-    banded = staged.select(
-        "k",
-        F.posexplode("bkeys").alias("band", "bkey"),
-    )
-    if max_bucket:
-        widths = banded.groupBy("band", "bkey").agg(
-            F.count(F.lit(1)).alias("_w")
+    # the persist above must not outlive a failed plan build: on success
+    # the caller releases it via attach_cached, on failure nobody would
+    try:
+        banded = staged.select(
+            "k",
+            F.posexplode("bkeys").alias("band", "bkey"),
         )
-        banded = banded.join(
-            widths.filter(F.col("_w") <= max_bucket).drop("_w"),
-            ["band", "bkey"],
+        if max_bucket:
+            widths = banded.groupBy("band", "bkey").agg(
+                F.count(F.lit(1)).alias("_w")
+            )
+            banded = banded.join(
+                widths.filter(F.col("_w") <= max_bucket).drop("_w"),
+                ["band", "bkey"],
+            )
+        cand = (
+            banded.alias("a")
+            .join(
+                banded.alias("b"),
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.bkey") == F.col("b.bkey"))
+                & (F.col("a.k") < F.col("b.k")),
+            )
+            .select(F.col("a.k").alias("key_a"), F.col("b.k").alias("key_b"))
+            .dropDuplicates(["key_a", "key_b"])
         )
-    cand = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.k") < F.col("b.k")),
+        vq_only = staged.select("k", "vq")
+        pairs = cand.join(
+            vq_only.withColumnRenamed("k", "key_a").withColumnRenamed("vq", "vq_a"),
+            "key_a",
+        ).join(
+            vq_only.withColumnRenamed("k", "key_b").withColumnRenamed("vq", "vq_b"),
+            "key_b",
         )
-        .select(F.col("a.k").alias("key_a"), F.col("b.k").alias("key_b"))
-        .dropDuplicates(["key_a", "key_b"])
-    )
-    vq_only = staged.select("k", "vq")
-    pairs = cand.join(
-        vq_only.withColumnRenamed("k", "key_a").withColumnRenamed("vq", "vq_a"),
-        "key_a",
-    ).join(
-        vq_only.withColumnRenamed("k", "key_b").withColumnRenamed("vq", "vq_b"),
-        "key_b",
-    )
-    # pairwise scoring in the Arrow/numpy stage (bit-identical to
-    # quantized_cosine_col; interpreted per-pair HOFs were the dominant
-    # cost of the whole operator — guide §4)
-    out = pair_cosine_arrow(pairs.select("key_a", "key_b", "vq_a", "vq_b"))
-    if float(threshold) > -1.0:
-        out = out.filter(F.col("cos_sim") >= float(threshold))
-    # threshold <= -1 means "rank ALL candidates" (knn_graph's sentinel):
-    # make that structural rather than a float comparison — the quantized
-    # cosine of near-opposite vectors can round to just below -1.0, and a
-    # `>= -1.0` filter would silently drop that edge (r6 ADVICE item).
+        # pairwise scoring in the Arrow/numpy stage (bit-identical to
+        # quantized_cosine_col; interpreted per-pair HOFs were the dominant
+        # cost of the whole operator — guide §4)
+        out = pair_cosine_arrow(pairs.select("key_a", "key_b", "vq_a", "vq_b"))
+        if float(threshold) > -1.0:
+            out = out.filter(F.col("cos_sim") >= float(threshold))
+        # threshold <= -1 means "rank ALL candidates" (knn_graph's sentinel):
+        # make that structural rather than a float comparison — the quantized
+        # cosine of near-opposite vectors can round to just below -1.0, and a
+        # `>= -1.0` filter would silently drop that edge (r6 ADVICE item).
+    except BaseException:
+        staged.unpersist()
+        raise
     from jarvis_ocr_service_spark.plans.caching import attach_cached
 
     return attach_cached(out.select("key_a", "key_b", "cos_sim"), [staged])

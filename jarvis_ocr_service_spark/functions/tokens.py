@@ -19,8 +19,3 @@ def py_tokens_col(col):
     """Lowercased Python-str.split()-equivalent tokens (drops empties)."""
     t = F.trim(F.lower(F.coalesce(col, F.lit(""))))
     return F.filter(F.split(t, r"\s+"), lambda tk: tk != F.lit(""))
-
-
-def py_tokens(text) -> list:
-    """The pure-Python twin — same semantics, for oracles/driver-side."""
-    return (text or "").lower().split()

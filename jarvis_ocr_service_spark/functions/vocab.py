@@ -716,7 +716,7 @@ def bpe_decode_ids(
     ordered ``symbols`` table, concatenate symbol strings, strip the
     intra-symbol ``BPE_JOIN`` markers, turn each ``BPE_EOW`` into a
     word boundary, trim the trailing space. For any document, 
-    ``decode(encode_ids(text)) == ' '.join(py_tokens(text))`` — the
+    ``decode(encode_ids(text)) == ' '.join(text.lower().split())`` — the
     lowercased whitespace-normalized token stream (encode is lossy
     exactly to that normalization, nothing else). Ids outside the
     table decode to ``unk_char`` and are counted in ``n_unknown``

@@ -1,25 +1,22 @@
 """Text normalization and byte-safe truncation.
 
-Three equivalent forms of each operator:
+Two equivalent forms:
 
-1. pure-Python scalar (the oracle; byte-identical to the reference
-   semantics of /root/reference/app/text_utils.py:8-76 — verified by
-   tests/test_textops.py which replays the reference's documented edge
-   cases),
-2. vectorized pandas form (used inside Arrow-batched UDFs),
-3. for normalize only, a pure Spark-SQL Column expression (JVM-side,
+1. pure-Python scalar (the oracle, and what the fused cascade runs per
+   row; byte-identical to the reference service's semantics in its
+   app/text_utils.py:8-76 — verified by tests/test_textops.py, which
+   replays the reference's documented edge cases),
+2. for normalize only, a pure Spark-SQL Column expression (JVM-side,
    whole-stage-codegen'd — the fast path when the input is already a
    string column and no Python stage is otherwise needed).
 
-Property tests assert 1 == 2 == 3 on arbitrary input (tests/test_textops.py).
+Property tests assert 1 == 2 on arbitrary input (tests/test_textops.py).
 """
 
 from __future__ import annotations
 
 import re
 from typing import Optional, Tuple
-
-import pandas as pd
 
 from jarvis_ocr_service_spark.config import MAX_TEXT_BYTES
 
@@ -133,42 +130,7 @@ def truncate_with_len(
 
 
 # ---------------------------------------------------------------------------
-# 2. Vectorized pandas forms (for Arrow-batched UDFs)
-# ---------------------------------------------------------------------------
-
-def normalize_series(s: pd.Series) -> pd.Series:
-    """Vectorized normalize_text over a string Series (NaN -> "").
-
-    Deliberately ``map(normalize_text)``: per-element application of the
-    *shared* scalar guarantees byte-identity with the oracle (pandas string
-    ops are per-element on object dtype anyway, so there is no meaningful
-    speed loss, and normalize is negligible next to the DOM parse).
-    """
-    return s.fillna("").map(normalize_text)
-
-
-def truncate_series(s: pd.Series, max_bytes: Optional[int] = None):
-    """Vectorized truncate_text. Returns (text Series, truncated bool Series).
-
-    Fast path: rows whose *character* count <= max_bytes/4 cannot exceed the
-    byte budget (max 4 bytes per UTF-8 char) and skip encoding entirely.
-    """
-    if max_bytes is None:
-        max_bytes = MAX_TEXT_BYTES
-    s = s.fillna("")
-    out_text = s.copy()
-    flags = pd.Series(False, index=s.index)
-    maybe = s.index[s.str.len() * 4 > max_bytes]
-    for i in maybe:
-        t, fl = truncate_text(s.at[i], max_bytes)
-        if fl:
-            out_text.at[i] = t
-            flags.at[i] = True
-    return out_text, flags
-
-
-# ---------------------------------------------------------------------------
-# 3. Spark-SQL Column expression (JVM-side normalize)
+# 2. Spark-SQL Column expression (JVM-side normalize)
 # ---------------------------------------------------------------------------
 
 def normalize_text_col(col):

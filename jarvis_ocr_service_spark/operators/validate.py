@@ -29,8 +29,6 @@ from __future__ import annotations
 import re
 from typing import Tuple
 
-import pandas as pd
-
 from jarvis_ocr_service_spark.config import (
     ALPHA_RATIO_MIN,
     GARBLED_RATIO_MAX,
@@ -159,19 +157,6 @@ def validate_text(text: str) -> Tuple[bool, float, str]:
 
     reason = f"Readable content: alpha={alpha_ratio:.2f}, lines={len(lines)}"
     return True, confidence, reason[:MAX_REASON_CHARS]
-
-
-def validate_series(s: pd.Series) -> pd.DataFrame:
-    """Vectorized wrapper: Series[str] -> DataFrame(is_valid, confidence, reason)."""
-    triples = s.fillna("").map(validate_text)
-    return pd.DataFrame(
-        {
-            "is_valid": triples.map(lambda t: t[0]),
-            "confidence": triples.map(lambda t: t[1]),
-            "reason": triples.map(lambda t: t[2]),
-        },
-        index=s.index,
-    )
 
 
 def min_valid_chars_col(col):

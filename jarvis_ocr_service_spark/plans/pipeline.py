@@ -1,20 +1,15 @@
 """The extraction pipeline: pages -> results (+ job-status aggregate).
 
-Two physical strategies for the same logical cascade (results proven
-identical by tests/test_pipeline.py):
-
-* ``fused`` (default, the 100-TB path): one ``mapInPandas`` stage runs the
-  whole per-row cascade. Zero shuffles end-to-end for extraction — a pure
-  map job; scan -> Arrow stage -> sink. Scales linearly with cores.
-* ``staged``: the SURVEY §4.2 filter-and-union layout — tier k runs only on
-  rows still invalid after tier k-1, composed with DataFrame filters +
-  unionByName. One Arrow crossing *per tier* and a recompute-or-cache
-  tradeoff; kept for A/B evidence and for heterogeneous-tier deployments.
+Extraction has one physical form: one ``mapInPandas`` stage runs the whole
+per-row cascade (dispatch -> tier extract -> normalize -> validate ->
+truncate, first valid tier wins). Zero shuffles end-to-end — a pure map
+job; scan -> Arrow stage -> sink — and one Python-boundary crossing per
+Arrow batch. Scales linearly with cores.
 
 Aggregates (relational, JVM-side):
 * job/host status: ``success`` iff any row valid (reference bool_or rule,
   app/queue_schemas.py:139-147) — `status_by_host`.
-* extraction counters per partition feed the checkpoint manifest.
+* failure-rate-by-code counters — `error_counters`.
 """
 
 from __future__ import annotations
@@ -24,9 +19,9 @@ from typing import List, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from jarvis_ocr_service_spark.config import AVAILABLE_TIERS, MAX_TEXT_BYTES
+from jarvis_ocr_service_spark.config import MAX_TEXT_BYTES
 from jarvis_ocr_service_spark.operators.cascade import PDF_MODE_PARSE
-from jarvis_ocr_service_spark.operators.udfs import make_extract_map_fn, run_extract
+from jarvis_ocr_service_spark.operators.udfs import run_extract
 from jarvis_ocr_service_spark.plans.skew import url_host
 
 
@@ -51,7 +46,6 @@ def run_pipeline(
     enabled_tiers: Optional[List[str]] = None,
     pdf_mode: str = PDF_MODE_PARSE,
     max_text_bytes: int = MAX_TEXT_BYTES,
-    strategy: str = "fused",
     pinned_tier: Optional[str] = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> RESULTS_SCHEMA DataFrame.
@@ -66,181 +60,12 @@ def run_pipeline(
             max_text_bytes=max_text_bytes,
             pinned_tier=pinned_tier,
         )
-    if strategy == "fused":
-        return run_extract(
-            pages,
-            enabled_tiers=enabled_tiers,
-            pdf_mode=pdf_mode,
-            max_text_bytes=max_text_bytes,
-        )
-    if strategy == "staged":
-        return _run_staged(pages, enabled_tiers, pdf_mode, max_text_bytes)
-    if strategy == "dedup_extract":
-        return _run_dedup_extract(pages, enabled_tiers, pdf_mode, max_text_bytes)
-    raise ValueError(f"unknown strategy: {strategy}")
-
-
-def _run_dedup_extract(
-    pages: DataFrame,
-    enabled_tiers: Optional[List[str]],
-    pdf_mode: str,
-    max_text_bytes: int,
-) -> DataFrame:
-    """Extract once per *distinct* (payload, lang), then join results back
-    to every row — row-for-row identical to ``fused`` (extraction is a pure
-    function of payload+lang).
-
-    When to pick it: only when per-document extraction is *expensive*
-    relative to a shuffle of the results — e.g. a real pixel-OCR tier at
-    10-100ms/doc over a dup-heavy crawl (~30% of Common-Crawl payload
-    bytes repeat). Measured honestly on THIS engine's fast HTML parse
-    (~0.35ms/doc): it loses — even at 80% duplicate rows the two
-    exchanges (payload-digest distinct + result join carrying up-to-50KB
-    texts) cost more than the saved Python (same-window A/B, 50k rows,
-    local[16]: fused ~3s vs dedup ~4.3s best-run). ``fused`` stays the
-    default; this strategy exists for deployments whose tiers are orders
-    of magnitude slower than the shuffle.
-    """
-    from jarvis_ocr_service_spark.schema import RESULT_FIELDS
-
-    src = pages.select("url", "warc_ts", "html", "lang")
-    keyed = src.withColumn(
-        "_digest", F.md5(F.coalesce(F.col("html"), F.lit(b"")))
-    )
-    as_pages = (
-        keyed.select("_digest", "lang", "html")
-        .dropDuplicates(["_digest", "lang"])
-        .select(
-            # run_extract's stage passes url/warc_ts through untouched, so
-            # the digest can ride in the url slot as the join-back key
-            F.col("_digest").alias("url"),
-            F.lit(None).cast("timestamp").alias("warc_ts"),
-            "html",
-            "lang",
-        )
-    )
-    res = run_extract(
-        as_pages,
+    return run_extract(
+        pages,
         enabled_tiers=enabled_tiers,
         pdf_mode=pdf_mode,
         max_text_bytes=max_text_bytes,
     )
-    result_cols = [f.name for f in RESULT_FIELDS.fields]
-    res_keyed = res.select(
-        F.col("url").alias("_rdigest"),
-        F.col("lang").alias("_rlang"),
-        *[F.col(c) for c in result_cols],
-    )
-    # prune the payload bytes BEFORE the join — only the 16-byte digest
-    # rides the shuffle on the row side
-    rows = keyed.select("url", "warc_ts", "lang", "_digest")
-    joined = rows.join(
-        res_keyed,
-        (rows["_digest"] == res_keyed["_rdigest"])
-        & rows["lang"].eqNullSafe(res_keyed["_rlang"]),
-    )
-    return joined.select("url", "warc_ts", "lang", *result_cols)
-
-
-def _run_staged(
-    pages: DataFrame,
-    enabled_tiers: Optional[List[str]],
-    pdf_mode: str,
-    max_text_bytes: int,
-) -> DataFrame:
-    """Filter-and-union tier cascade: each pass runs exactly one tier on the
-    rows every earlier tier rejected.
-
-    Implementation note: each single-tier pass reuses the same fused stage
-    restricted to one tier, so the per-tier semantics (including the
-    all-failed error row) stay shared. Rows accepted (or terminally
-    errored) at pass k leave the cascade; rows whose single-tier pass says
-    ``ocr_no_valid_output`` continue. The intermediate frame is cached —
-    without it every pass would re-scan + re-extract all earlier tiers.
-    """
-    from jarvis_ocr_service_spark.config import (
-        MSG_ALL_TIERS_FAILED,
-        get_tier_order,
-    )
-
-    tiers = get_tier_order(enabled_tiers if enabled_tiers is not None
-                           else AVAILABLE_TIERS)
-    src = pages.select("url", "warc_ts", "html", "lang")
-    # Cursor columns carried across passes: the last tier that *actually
-    # attempted* the row and its rejection reason (reference last_tier /
-    # last_error, worker.py:157-158).
-    remaining = src.withColumn("_prev_tier", F.lit(None).cast("string")).withColumn(
-        "_prev_reason", F.lit(None).cast("string")
-    )
-    accepted: List[DataFrame] = []
-    final_failed: Optional[DataFrame] = None
-    persisted: List[DataFrame] = []
-
-    terminal = F.col("is_valid") | F.col("error_code").isin(
-        "unsupported_media", "image_not_found"
-    )
-    # A single-tier pass marks not-applicable/skipped rows with
-    # tier='unknown' + the all-failed message; a *real* attempt carries the
-    # tier name.
-    attempted = F.col("tier") != F.lit("unknown")
-
-    for i, tier in enumerate(tiers):
-        # Join on (url, warc_ts): a crawl can hold multiple snapshots of one
-        # url (that is why the schema carries warc_ts), so url alone is not
-        # a row key and would fan the cursor join out.
-        cursor = remaining.select("url", "warc_ts", "_prev_tier", "_prev_reason")
-        pass_df = join_on_row_key(
-            run_extract(
-                remaining,
-                enabled_tiers=[tier],
-                pdf_mode=pdf_mode,
-                max_text_bytes=max_text_bytes,
-            ),
-            cursor,
-            ["url", "warc_ts"],
-        ).persist()
-        persisted.append(pass_df)
-
-        accepted.append(pass_df.filter(terminal).drop("_prev_tier", "_prev_reason"))
-        failed = pass_df.filter(~terminal)
-        # Update the cursor from this pass where it really attempted.
-        failed = failed.withColumn(
-            "_prev_tier",
-            F.when(attempted, F.col("tier")).otherwise(F.col("_prev_tier")),
-        ).withColumn(
-            "_prev_reason",
-            F.when(attempted, F.col("validation_reason")).otherwise(
-                F.col("_prev_reason")
-            ),
-        )
-        if i < len(tiers) - 1:
-            remaining = join_on_row_key(
-                failed.select("url", "warc_ts", "_prev_tier", "_prev_reason"),
-                src,
-                ["url", "warc_ts"],
-            )
-        else:
-            final_failed = failed
-
-    out = accepted[0]
-    for df in accepted[1:]:
-        out = out.unionByName(df)
-    if final_failed is not None:
-        # Re-attribute the all-tiers-failed row to the last tier that truly
-        # attempted it (reference worker.py:248-258: last_tier wins).
-        reason = F.coalesce(F.col("_prev_reason"), F.lit(MSG_ALL_TIERS_FAILED))
-        fixed = (
-            final_failed.withColumn(
-                "tier", F.coalesce(F.col("_prev_tier"), F.lit("unknown"))
-            )
-            .withColumn("validation_reason", reason)
-            .withColumn("error_message", reason)
-            .drop("_prev_tier", "_prev_reason")
-        )
-        out = out.unionByName(fixed)
-    from jarvis_ocr_service_spark.plans.caching import attach_cached
-
-    return attach_cached(out.select(*accepted[0].columns), persisted)
 
 
 # ---------------------------------------------------------------------------
@@ -251,8 +76,7 @@ def refresh_pages_text(pages: DataFrame, results: DataFrame) -> DataFrame:
     """Write-back contract (north star: 'writes extracted text plus
     character-span offsets back'): a new pages-shaped table whose ``text``
     column is the extracted text (empty where extraction failed), plus the
-    spans. One url-keyed join; when both sides are written url-bucketed
-    (sources/io.write_results_bucketed) this is shuffle-free."""
+    spans. One (url, warc_ts)-keyed join."""
     extracted = results.select(
         "url",
         "warc_ts",
@@ -294,196 +118,9 @@ def status_by_host(results: DataFrame) -> DataFrame:
     )
 
 
-def completion_messages(
-    results: DataFrame,
-    job_col: str = "url",
-    max_per_job: int = 8,
-    include_text: bool = True,
-) -> DataFrame:
-    """Assemble the reference's ``ocr.completed`` envelope per job
-    (app/queue_schemas.py:123-173): ``results[]`` ordered by image index,
-    ``payload.status`` from the any-valid rule, constant envelope fields.
-
-    Rows group into jobs by host ("everything from one site in this
-    batch"), CHUNKED to ``max_per_job`` images per envelope — the
-    reference's own job cap (queue_schemas.py:67-68 caps a job at 8
-    images). The cap is what makes this corpus-safe: without it, job=host
-    means one hot host (a 20% host is in the repo's own fixtures) builds
-    a single multi-GB collect_list row carrying full 50KB texts (r3
-    verdict). With it, every collected array is <= max_per_job structs;
-    a host with more images emits multiple envelopes sharing its
-    ``workflow_id``, each with index restarting at 0 — exactly how the
-    reference splits a large workflow into jobs. ``max_per_job=0``
-    restores the unbounded one-envelope-per-host form (compat/testing
-    only — not for corpus-wide runs).
-
-    ``include_text=False`` drops ``ocr_text`` from results[] (meta,
-    including text_len, is kept) for callers that only need the
-    bookkeeping envelope — no reason to shuffle full texts for that.
-
-    Index = arrival order within the job (deterministic: url sort).
-    The per-host row_number window still sorts each host's rows in one
-    partition — a spillable sort of (url, text) rows, not an in-memory
-    array build, which is the part that must stay bounded.
-    uuid/created_at are stamped at write time and excluded from golden
-    comparison (SURVEY T16)."""
-    from pyspark.sql import Window
-
-    host = url_host(F.col("url")).alias("job_key")
-    w = Window.partitionBy("job_key").orderBy("url")
-    result_cols = ["index", "url", "ocr_text", "truncated", "meta"]
-    if not include_text:
-        result_cols.remove("ocr_text")
-    per_image = results.select(
-        host,
-        F.col("url"),
-        *([F.col("text").alias("ocr_text")] if include_text else []),
-        F.col("truncated"),
-        F.struct(
-            F.col("language"),
-            F.col("confidence"),
-            F.col("text_len"),
-            F.col("is_valid"),
-            F.col("tier"),
-            F.col("validation_reason"),
-        ).alias("meta"),
-    ).withColumn("_pos", (F.row_number().over(w) - 1).cast("long"))
-    if max_per_job:
-        per_image = per_image.withColumn(
-            "_chunk", F.floor(F.col("_pos") / max_per_job)
-        ).withColumn("index", F.col("_pos") % max_per_job)
-    else:
-        per_image = per_image.withColumn("_chunk", F.lit(0)).withColumn(
-            "index", F.col("_pos")
-        )
-    grouped = per_image.groupBy("job_key", "_chunk").agg(
-        F.array_sort(
-            F.collect_list(F.struct(*result_cols))
-        ).alias("results"),
-        F.max(F.col("meta.is_valid")).alias("_any_valid"),
-    )
-    return grouped.select(
-        F.lit(1).alias("schema_version"),
-        F.expr("uuid()").alias("job_id"),
-        F.lit("ocr.completed").alias("job_type"),
-        F.lit("jarvis-ocr-service-spark").alias("source"),
-        F.col("job_key").alias("workflow_id"),
-        F.current_timestamp().alias("created_at"),
-        F.lit(1).alias("attempt"),
-        F.struct(
-            F.when(F.col("_any_valid"), F.lit("success"))
-            .otherwise(F.lit("failed"))
-            .alias("status"),
-            F.col("results"),
-        ).alias("payload"),
-    )
-
-
 def error_counters(results: DataFrame) -> DataFrame:
     """Failure-rate-by-code counters (reference prds/queue-flow.md:469-479)."""
     return (
         results.groupBy(F.coalesce(F.col("error_code"), F.lit("ok")).alias("code"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-
-
-def batch_escalation_gate(results: DataFrame, batch_col: str = "lang") -> DataFrame:
-    """A4: the HTTP-batch-mode all-valid gate — bool_and per batch decides
-    whole-batch tier escalation (provider_manager.py:437-464). Exposed as a
-    tested aggregate; the flagship semantic stays per-row."""
-    return results.groupBy(batch_col).agg(
-        F.min(F.col("is_valid")).alias("all_valid"),
-        F.count(F.lit(1)).alias("batch_size"),
-    )
-
-
-def run_batch_escalation(
-    pages: DataFrame,
-    batch_col,
-    enabled_tiers: Optional[List[str]] = None,
-    pdf_mode: str = PDF_MODE_PARSE,
-    max_text_bytes: int = MAX_TEXT_BYTES,
-) -> DataFrame:
-    """The reference's HTTP-batch semantic as a pipeline *mode*
-    (provider_manager.py:437-464): a batch accepts tier k only if EVERY
-    row in the batch validates at tier k; any invalid row escalates the
-    WHOLE batch to tier k+1 (rows already valid are re-extracted at the
-    higher tier too — that is the reference behavior). Batches that no
-    tier fully satisfies keep their per-row results from the LAST tier.
-
-    ``batch_col`` is a Column keying the batches (e.g. host, lang).
-    Physical shape per tier: single-tier fused pass -> bool_and gate
-    (map-side partial agg) -> broadcast the (small) still-escalating key
-    set into the next pass's semi-join.
-    """
-    from jarvis_ocr_service_spark.config import AVAILABLE_TIERS, get_tier_order
-
-    tiers = get_tier_order(enabled_tiers if enabled_tiers is not None
-                           else AVAILABLE_TIERS)
-    src = pages.select(batch_col.alias("_batch"), "url", "warc_ts", "html", "lang")
-    remaining = src.persist()
-    persisted: List[DataFrame] = [remaining]
-    out: List[DataFrame] = []
-    history: List[DataFrame] = []  # failing-batch passes, for the fallback
-    bad_keys = None
-
-    for i, tier in enumerate(tiers):
-        pass_res = run_extract(
-            remaining,
-            enabled_tiers=[tier],
-            pdf_mode=pdf_mode,
-            max_text_bytes=max_text_bytes,
-        )
-        pass_res = join_on_row_key(
-            pass_res, remaining.select("_batch", "url", "warc_ts"),
-            ["url", "warc_ts"],
-        ).persist()
-        persisted.append(pass_res)
-        # terminal errors (pdf-reject / empty) never block the batch:
-        # the gate counts only rows a tier could conceivably improve.
-        gate = pass_res.groupBy("_batch").agg(
-            F.min(
-                F.col("is_valid")
-                | F.col("error_code").isin("unsupported_media", "image_not_found")
-            ).alias("all_ok")
-        )
-        ok_keys = gate.filter("all_ok").select("_batch")
-        out.append(pass_res.join(F.broadcast(ok_keys), "_batch"))
-        bad_keys = gate.filter(~F.col("all_ok")).select("_batch")
-        history.append(
-            pass_res.join(F.broadcast(bad_keys), "_batch").withColumn(
-                "_pass", F.lit(i)
-            )
-        )
-        if i < len(tiers) - 1:
-            remaining = src.join(F.broadcast(bad_keys), "_batch").persist()
-            persisted.append(remaining)
-
-    # Batches no tier fully satisfied: each row keeps its result from the
-    # last pass that actually *attempted* it (a pass whose single tier is
-    # inapplicable to the row's content kind marks tier='unknown' — e.g.
-    # the PDF tier over an HTML row — and must not erase an earlier real
-    # attempt).
-    hist = history[0]
-    for df in history[1:]:
-        hist = hist.unionByName(df)
-    final_bad = hist.join(F.broadcast(bad_keys), "_batch")
-    attempted_pass = F.when(
-        (F.col("tier") != "unknown") | F.col("is_valid"), F.col("_pass")
-    )
-    sel = final_bad.groupBy("url", "warc_ts").agg(
-        F.coalesce(F.max(attempted_pass), F.lit(0)).alias("_sel")
-    )
-    fallback = (
-        join_on_row_key(final_bad, sel, ["url", "warc_ts"])
-        .filter(F.col("_pass") == F.col("_sel"))
-        .drop("_pass", "_sel")
-    )
-    out.append(fallback)
-
-    result = out[0]
-    for df in out[1:]:
-        result = result.unionByName(df.select(*out[0].columns))
-    from jarvis_ocr_service_spark.plans.caching import attach_cached
-
-    return attach_cached(result.withColumnRenamed("_batch", "batch_key"), persisted)

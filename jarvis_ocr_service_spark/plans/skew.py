@@ -1,47 +1,17 @@
-"""Skew handling: url-host salted bucketing.
+"""Url-host column shared by the per-host aggregates.
 
 A web corpus is Zipf-skewed by host — one hot domain can own a double-digit
-percentage of rows (the synthetic fixture gives the hot host ~20%). A plain
-hash-partition on host stragglers the partition holding it; at 1000
-executors that is the whole job's critical path. Per the north rule we
-bucket by ``xxhash64(host, salt)`` where ``salt = pmod(xxhash64(url), S)``
-— the hot host fans out over S buckets while small hosts stay co-located
-enough for downstream per-host aggregation (which then needs a two-phase
-agg: partial per (host, salt), final per host — Spark's hash aggregate
-already does exactly that, so for *aggregations* salting is free; explicit
-salted repartition matters for the extraction stage balance and for joins).
+percentage of rows (the synthetic fixture gives the hot host ~20%). Per-host
+aggregations need no salting for that: Spark's hash aggregate runs a
+partial aggregate per input partition first, so the hot host's reducer
+receives one partial row per partition, not the host's rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-DEFAULT_SALT_BUCKETS = 16
 
 
 def url_host(col):
     """Host part of a url column (JVM-side; empty string when absent)."""
     return F.coalesce(F.parse_url(col, F.lit("HOST")), F.lit(""))
-
-
-def with_host_salt(df: DataFrame, url_col: str = "url",
-                   salt_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
-    """Add ``host`` and ``host_salt`` columns (salt deterministic per url)."""
-    return df.withColumn("host", url_host(F.col(url_col))).withColumn(
-        "host_salt", F.pmod(F.xxhash64(F.col(url_col)), F.lit(salt_buckets))
-    )
-
-
-def repartition_by_host_salted(
-    df: DataFrame,
-    num_partitions: int,
-    url_col: str = "url",
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
-) -> DataFrame:
-    """Repartition so the hot host spreads across ``salt_buckets`` partitions
-    while keeping host-locality for everything else."""
-    salted = with_host_salt(df, url_col, salt_buckets)
-    return salted.repartition(num_partitions, F.col("host"), F.col("host_salt")).drop(
-        "host", "host_salt"
-    )

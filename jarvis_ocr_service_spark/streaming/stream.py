@@ -169,9 +169,9 @@ def run_stream_prepare(
     Dedup runs FIRST here (on the payload digest, before extraction) —
     in a continuous ingest the same page recrawled minutes apart is the
     common case, and dropping it before the cascade saves the extraction
-    work entirely (the batch pipeline dedups after extraction because
-    there the cost trade goes the other way — see
-    plans/pipeline._run_dedup_extract's measured A/B).
+    work entirely (the batch pipeline dedups after extraction: there a
+    digest shuffle plus a result join-back costs more than the fused
+    cascade it would save).
 
     ``neardup_against_committed=True`` (r4 verdict item 4) additionally
     drops each micro-batch's NEAR-duplicates — recrawls that were
@@ -357,47 +357,6 @@ def run_stream_prepare(
 
     writer = (
         deduped.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def run_stream_dedup(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    available_now: bool = True,
-    watermark: str = "1 hour",
-):
-    """Streaming exact dedup over the pages stream: first snapshot of each
-    distinct payload digest wins; later exact duplicates are dropped
-    *across micro-batches* (Spark keeps the digest-set in checkpointed
-    state; the watermark on warc_ts bounds that state — a duplicate
-    arriving later than the watermark re-emits, the standard bounded-state
-    tradeoff for unbounded streams).
-
-    At 10^12 rows the state is 16 bytes per distinct digest inside the
-    watermark horizon, not per row — the streaming twin of dedup_exact's
-    one-shuffle batch shape.
-    """
-    from pyspark.sql import functions as F
-
-    pages = spark.readStream.schema(PAGES_SCHEMA).parquet(input_path)
-    deduped = (
-        pages.withColumn(
-            "_digest", F.md5(F.coalesce(F.col("html"), F.lit(b"")))
-        )
-        .withWatermark("warc_ts", watermark)
-        .dropDuplicatesWithinWatermark(["_digest"])
-        .drop("_digest")
-    )
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_path)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
     )

@@ -1,47 +1,13 @@
-"""Watermarked event-time windowed aggregation (Structured Streaming).
+"""Event-time session windows (batch, or Structured Streaming with a
+watermark).
 
 The reference has no watermark/window semantics (SURVEY §2.7) — this is
-part of the engine's *beyond-reference* streaming surface: per-window
-extraction-throughput counters over a stream of result/event rows, with
-late data bounded by a watermark so state stays finite at 10^12-row
-scale.
+part of the engine's *beyond-reference* streaming surface.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-
-
-def run_windowed_counts(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    schema: str = "event_id long, ts timestamp, user_id long, event_type string,"
-    " value double, props string",
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    available_now: bool = True,
-):
-    """Stream (parquet dir of event rows) -> tumbling-window counts with a
-    watermark; append mode emits each window once it is final."""
-    ev = spark.readStream.schema(schema).parquet(input_path)
-    agg = (
-        ev.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("w_start"), F.col("w.end").alias("w_end"), "n")
-    )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def sessionize(

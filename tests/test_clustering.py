@@ -185,3 +185,22 @@ def test_semdedup_max_cluster_guard_skips_hot_cluster(spark):
     )
     out = semdedup(df, k=1, iters=1, threshold=0.9, max_cluster=3).collect()
     assert sorted(r.vec_id for r in out) == [0, 1, 2, 3]
+
+
+def test_semdedup_null_elements_survive_on_input_row_basis(spark):
+    """A vector with a null element is treated like a null vector: it
+    survives and never pairs. The output keeps one row per input row —
+    a null id passes through and a duplicated id is not multiplied."""
+    rows = [
+        (0, [1.0, 2.0]),
+        (1, [1.0, 2.0]),      # twin of 0 -> dropped
+        (2, [1.0, None]),     # null element -> survives, drops nothing
+        (3, [1.0, 2.0]),      # twin of 0 -> dropped
+        (None, [9.0, -4.0]),  # null id -> passes through
+        (7, [-3.0, 8.0]),
+        (7, [8.0, 3.0]),      # duplicated id, orthogonal vectors
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = semdedup(df, k=1, iters=1, threshold=0.99).collect()
+    got = sorted((r.vec_id for r in out), key=lambda v: (v is None, v))
+    assert got == [0, 2, 7, 7, None]

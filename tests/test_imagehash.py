@@ -1,13 +1,13 @@
-"""pHash: pinned perceptual hashing + banded image near-dup pairs."""
+"""pHash: pinned perceptual hashing + banded image near-dup pairs
+(with_phash signatures through dedup.hamming_band_pairs)."""
 
 import numpy as np
 import pytest
 
-from jarvis_ocr_service_spark.functions.imagehash import (
-    phash64,
-    phash_near_pairs,
-    with_phash,
-)
+from pyspark.sql import functions as F
+
+from jarvis_ocr_service_spark.functions.dedup import hamming_band_pairs
+from jarvis_ocr_service_spark.functions.imagehash import phash64, with_phash
 from jarvis_ocr_service_spark.operators.png_codec import encode_png_pixels
 
 
@@ -56,6 +56,15 @@ def test_undecodable_yields_null():
     assert phash64(b"\xff\xd8\xffnot-a-png") is None
 
 
+def _phash_pairs(df, **kw):
+    sigs = (
+        with_phash(df, out_col="sig")
+        .filter(F.col("sig").isNotNull())
+        .select(F.col("doc_id").alias("k"), "sig")
+    )
+    return hamming_band_pairs(sigs, **kw)
+
+
 def test_with_phash_and_pairs_match_brute_force(spark):
     # 5 base classes x 4 copies; copy j of class c perturbs j pixels
     rows = []
@@ -86,7 +95,7 @@ def test_with_phash_and_pairs_match_brute_force(spark):
     )
     got = sorted(
         (r.key_a, r.key_b, r.hamming)
-        for r in phash_near_pairs(df, max_hamming=max_h).collect()
+        for r in _phash_pairs(df, max_hamming=max_h).collect()
     )
     assert got == want
     assert len(got) > 0  # within-class copies must actually pair
@@ -99,7 +108,7 @@ def test_phash_pairs_hot_bucket_guard(spark):
     df = spark.createDataFrame(
         [(i, payload) for i in range(40)], "doc_id long, html binary"
     )
-    uncapped = phash_near_pairs(df, max_hamming=4).count()
-    capped = phash_near_pairs(df, max_hamming=4, max_bucket=10).count()
+    uncapped = _phash_pairs(df, max_hamming=4).count()
+    capped = _phash_pairs(df, max_hamming=4, max_bucket=10).count()
     assert uncapped == 40 * 39 // 2
     assert capped == 0

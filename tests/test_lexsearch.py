@@ -7,9 +7,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from jarvis_ocr_service_spark.functions.lexsearch import (
+    bm25_topk_quantized,
     build_term_index,
     tfidf_topk_quantized,
 )
+from jarvis_ocr_service_spark.functions.tokens import py_tokens_col
 
 DOCS = [
     (0, "apple banana apple cherry"),
@@ -185,3 +187,33 @@ def test_bm25_plan_is_map_only_topk(docs_df):
     assert "Join" not in plan, plan
     assert "Generate" not in plan, plan
     assert "TakeOrderedAndProject" in plan, plan
+
+
+def test_term_tf_ignores_trailing_line_terminators(spark):
+    """Java's ``$`` matches before a final U+0085/U+2028/U+2029, but the
+    py-token rule splits on Java ``\\s``, which has none of them: a doc
+    ending "apple<NEL>" has the token "apple<NEL>", not "apple"."""
+    docs = [
+        (0, "apple\u0085"),
+        (1, "banana apple\u2028"),
+        (2, "apple\u2029"),
+        (3, "apple"),
+        (4, "apple\n"),
+        (5, "x apple\u0085 apple"),
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    toks = df.select("doc_id", py_tokens_col(F.col("text")).alias("t")).collect()
+    tf = {r.doc_id: r.t.count("apple") for r in toks}
+    assert tf == {0: 0, 1: 0, 2: 0, 3: 1, 4: 1, 5: 1}
+    got = {r.key for r in tfidf_topk_quantized(df, "apple").collect()}
+    assert got == {k for k, n in tf.items() if n}
+    got = {r.key for r in bm25_topk_quantized(df, "apple").collect()}
+    assert got == {k for k, n in tf.items() if n}
+
+
+def test_bm25_rejects_n_docs_below_df(docs_df):
+    """'apple' occurs in 3 docs: a caller-supplied n_docs of 2 would make
+    N - df negative, so it is refused rather than scored."""
+    with pytest.raises(ValueError, match="apple"):
+        bm25_topk_quantized(docs_df, "apple banana", n_docs=2)
+    assert bm25_topk_quantized(docs_df, "apple", n_docs=3).collect()

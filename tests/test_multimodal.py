@@ -1,13 +1,9 @@
-"""Multimodal: header decode real; PNG pixel path REAL (from-scratch
-codec); JPEG/GIF pixel work stays gated."""
+"""Multimodal: header decode real; PNG pixel stats REAL (from-scratch
+codec); WAV features real."""
 
 import pytest
 
-from jarvis_ocr_service_spark.functions.multimodal import (
-    resize_images,
-    sample_frames,
-    with_image_meta,
-)
+from jarvis_ocr_service_spark.functions.multimodal import with_image_meta
 from jarvis_ocr_service_spark.sources.pages import synthesize_pages
 
 
@@ -29,47 +25,6 @@ def test_image_meta_decode(pages):
     assert all(r.image_meta.n_bytes == (len(r.html) if r.html else 0) for r in out)
 
 
-def test_resize_real_for_png_null_for_undecodable(pages):
-    """PNG rows get a REAL nearest-neighbor resize (decode -> resample ->
-    re-encode, all from-scratch); non-PNG rows yield null without a
-    backend — never a task failure."""
-    from jarvis_ocr_service_spark.operators.png_codec import decode_png_pixels
-
-    out = resize_images(pages, width=32, height=32, fake=False).collect()
-    assert len(out) == 50
-    png_rows = [r for r in out if r.html and bytes(r.html).startswith(b"\x89PNG")]
-    assert png_rows
-    for r in png_rows:
-        arr = decode_png_pixels(bytes(r.resized))
-        assert arr.shape == (32, 32, 3)
-        assert (arr == 255).all()  # the 1x1 white fixture upsampled
-    for r in out:
-        if r not in png_rows and not (
-            r.html and bytes(r.html).startswith(b"\x89PNG")
-        ):
-            assert r.resized is None
-
-
-def test_resize_real_gradient_content(spark):
-    """Resize a real multi-pixel image and check actual pixel content."""
-    import numpy as np
-
-    from jarvis_ocr_service_spark.operators.png_codec import (
-        decode_png_pixels,
-        encode_png_pixels,
-    )
-
-    grad = np.stack(
-        [np.tile(np.arange(0, 256, 32, dtype=np.uint8), (8, 1))] * 3, axis=-1
-    )  # 8x8 horizontal gradient
-    df = spark.createDataFrame([(encode_png_pixels(grad),)], "html binary")
-    r = resize_images(df, width=4, height=4).collect()[0]
-    arr = decode_png_pixels(bytes(r.resized))
-    # nearest-neighbor with center mapping picks columns 1,3,5,7
-    assert arr.shape == (4, 4, 3)
-    assert [int(v) for v in arr[0, :, 0]] == [32, 96, 160, 224]
-
-
 def test_pixel_stats_real(pages):
     from jarvis_ocr_service_spark.functions.multimodal import with_pixel_stats
 
@@ -81,28 +36,6 @@ def test_pixel_stats_real(pages):
                 r.pixel_stats.channels) == (1, 1, 3)
         assert r.pixel_stats.mean_intensity == 255.0  # white pixel
     assert any(r.pixel_stats.px_width is None for r in out)  # non-PNG rows
-
-
-def test_resize_fake_plumbing(pages):
-    """fake=True keeps the deterministic fake for NON-PNG payloads (PNG
-    rows now take the real path even in fake mode)."""
-    base = pages.filter(
-        "html IS NULL OR substring(hex(html), 1, 8) != '89504E47'"
-    )
-    out = resize_images(base, width=32, height=32, fake=True).collect()
-    assert out
-    for r in out:
-        assert r.out_width == 32 and r.out_height == 32
-        assert len(r.resized) == 64  # md5*4
-        assert r.url  # passthrough preserved
-
-
-def test_sample_frames_fake_expands_rows(pages):
-    base = pages.limit(10)
-    out = sample_frames(base, fake=True).collect()
-    assert len(out) >= 10  # row-expanding
-    for r in out:
-        assert r.frame_idx >= 0 and len(r.frame) == 16
 
 
 def test_audio_features_real_wav_decode(spark):

@@ -118,19 +118,6 @@ def test_embedding_near_dup_quantization_staged_once(spark):
     assert n <= 8, f"quantization inlined {n}x — staging regressed"
 
 
-def test_dedup_extract_join_sheds_payload_bytes(spark, pages_path):
-    """dedup_extract's join-back must shuffle only the digest + result
-    columns — the html payload bytes stay below the distinct."""
-    plan = _plan(
-        run_pipeline(spark.read.parquet(pages_path), strategy="dedup_extract")
-    )
-    assert "CartesianProduct" not in plan
-    # the join output carries no html column
-    join_lines = [l for l in plan.splitlines() if "Join" in l]
-    assert join_lines
-    assert not any("html" in l for l in join_lines), join_lines
-
-
 def test_r5_ops_plan_shapes(spark):
     """Round-5 operator plan gates: line dedup's hot-line agg combines
     map-side and never nest-loops; surprisal's token-surprisal join is a

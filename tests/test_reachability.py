@@ -1,0 +1,135 @@
+"""Every public top-level library function is reachable from a real entry
+point, or it is deleted.
+
+AST scan of ``jarvis_ocr_service_spark/``. Roots: ``__spark_entry__.py``,
+the CLI (``jarvis_ocr_service_spark/__main__.py``), ``bench*.py``,
+``perfbench/*.py``, and every library module's top-level statements other
+than defs (they run on import). A top-level def or class is reachable when
+a reachable body names it: a Name, an Attribute, an import alias, or an
+identifier-shaped string constant (getattr-style lookups). Names resolve
+by bare name across modules, which only over-approximates reachability, so
+the scan never flags a function some entry point really calls.
+
+``ALLOWED`` lists the public functions still reachable only from tests (or
+from nowhere). It may only shrink: a name that is deleted or becomes
+reachable must leave the list.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+from typing import Dict, Set, Tuple
+
+REPO = Path(__file__).resolve().parent.parent
+PKG = REPO / "jarvis_ocr_service_spark"
+
+# Reference contracts and run-report inputs; wiring or deleting each is a
+# decision of its own.
+_REFERENCE_CONTRACTS = {
+    "bpe_merges_char_local": "parity reference and the planned local BPE merge loop",
+    "run_with_retries": "plans/retry.py reference contract",
+    "should_retry_col": "plans/retry.py reference contract",
+    "split_retryable": "plans/retry.py reference contract",
+    "accumulate_verdicts": "streaming/stateful.py reference contract",
+    "run_pending_validation_stream": "streaming/stateful.py reference contract",
+    "extract_pdf_layout": "reference contract (PDF layout spans)",
+    "refresh_pages_text": "write-back reference contract",
+    "join_on_row_key": "used by refresh_pages_text and plans/retry.py",
+    "error_counters": "run-report input (verify recipe)",
+    "manifest_counters": "run-report input",
+}
+# Slow references that kept tests pin a fast path against.
+_SLOW_REFERENCES = {
+    "parse_blocks_stdlib": "reference for extract_html.parse_blocks",
+    "simhash64_one": "reference for the vectorized simhash stage",
+    "truncate_text": "reference for textops.truncate_with_len",
+    "stopword_hits_from_toks": "reference for the regexp_count stopword counters",
+}
+# Test-only API not yet wired to an entry point or deleted.
+_UNDECIDED = {
+    "build_term_index": "lexsearch",
+    "committed_batches": "checkpoint manifest reader",
+    "read_committed": "checkpoint output reader",
+    "dedup_by_canonical_url": "urls",
+    "exact_duplicate_groups": "dedup",
+    "extract_raw": "scalar html tier wrapper",
+    "extract_main": "scalar html tier wrapper",
+    "lang_id_col": "textstats Column expression",
+    "quality_score_col": "textstats Column expression",
+    "token_count_col": "textstats Column expression",
+    "stopword_hits_col": "textstats Column expression",
+    "map_language_hints": "OCR language-hint map",
+    "outlink_host_edges": "urls",
+}
+ALLOWED: Dict[str, str] = {**_REFERENCE_CONTRACTS, **_SLOW_REFERENCES, **_UNDECIDED}
+
+
+def _names(node: ast.AST) -> Set[str]:
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+        elif (
+            isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and n.value.isidentifier()
+        ):
+            out.add(n.value)
+    return out
+
+
+def _scan() -> Tuple[Dict[str, str], Set[str]]:
+    """-> (public top-level function name -> module path, reachable names)."""
+    roots: Set[str] = set()
+    root_files = [
+        REPO / "__spark_entry__.py",
+        PKG / "__main__.py",
+        *REPO.glob("bench*.py"),
+        *(REPO / "perfbench").glob("*.py"),
+    ]
+    for f in root_files:
+        roots |= _names(ast.parse(f.read_text()))
+
+    public: Dict[str, str] = {}
+    body_names: Dict[str, Set[str]] = {}
+    for f in sorted(PKG.rglob("*.py")):
+        for st in ast.parse(f.read_text()).body:
+            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                body_names.setdefault(st.name, set()).update(_names(st) - {st.name})
+                if not isinstance(st, ast.ClassDef) and not st.name.startswith("_"):
+                    public[st.name] = str(f.relative_to(REPO))
+            else:
+                roots |= _names(st)
+
+    reachable: Set[str] = set()
+    stack = [n for n in roots if n in body_names]
+    while stack:
+        name = stack.pop()
+        if name not in reachable:
+            reachable.add(name)
+            stack.extend((body_names[name] & body_names.keys()) - reachable)
+    return public, reachable
+
+
+def test_no_public_function_is_test_only():
+    public, reachable = _scan()
+    dead = {
+        name: mod
+        for name, mod in public.items()
+        if name not in reachable and name not in ALLOWED
+    }
+    assert not dead, (
+        "public functions no entry point reaches — wire them to one or "
+        f"delete them: {sorted(dead.items())}"
+    )
+
+
+def test_allowlist_only_shrinks():
+    public, reachable = _scan()
+    stale = sorted(n for n in ALLOWED if n not in public or n in reachable)
+    assert not stale, f"deleted or now reachable — drop from ALLOWED: {stale}"

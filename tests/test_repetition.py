@@ -1,12 +1,11 @@
 """Gopher-style repetition filters: hand-pinned values, brute-force
-property, Spark/pure parity, and the composable gate."""
+property, Spark/pure parity, and the single-Arrow-stage plan."""
 
 import random
 
 import pytest
 
 from jarvis_ocr_service_spark.functions.repetition import (
-    gopher_repetition_gate,
     repetition_stats_one,
     with_repetition_stats,
 )
@@ -94,17 +93,6 @@ def test_spark_matches_pure(spark):
     }
     for i, t in enumerate(texts):
         assert out[i] == repetition_stats_one(t), (i, t)
-
-
-def test_gate_filters_spam(spark):
-    rows = [
-        (0, "normal sentence with varied words and no repetition at all"),
-        (1, "buy now " * 50),  # top-2-gram dominated
-        (2, "same line\n" * 20),  # duplicate lines
-    ]
-    df = spark.createDataFrame(rows, "i long, text string")
-    kept = [r.i for r in gopher_repetition_gate(df).collect()]
-    assert kept == [0]
 
 
 def test_single_arrow_stage(spark):

@@ -468,3 +468,37 @@ def test_pair_cosine_arrow_bit_identical(spark):
         a = struct.pack("<d", exp[pid])
         b = struct.pack("<d", got[pid])
         assert a == b, (pid, exp[pid], got[pid])
+
+
+def test_embedding_near_dup_pairs_unpersists_on_failed_build(spark, monkeypatch):
+    """A plan build that throws after the staged frame is persisted must
+    release it: nothing else holds a handle to that frame."""
+    from jarvis_ocr_service_spark.functions import simsearch
+
+    df = spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.5]) for i in range(8)],
+        "vec_id long, embedding array<double>",
+    )
+    frame_cls = type(df)
+    persisted = []
+    real_persist = frame_cls.persist
+
+    def spy(self, *args, **kwargs):
+        persisted.append(self)
+        return real_persist(self, *args, **kwargs)
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected plan-build failure")
+
+    monkeypatch.setattr(frame_cls, "persist", spy)
+    monkeypatch.setattr(simsearch, "pair_cosine_arrow", boom)
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="injected"):
+        simsearch.embedding_near_dup_pairs(
+            df, threshold=0.9, n_planes=4, bands=2, dim=3
+        )
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+    assert persisted
+    for frame in persisted:
+        level = frame.storageLevel
+        assert not (level.useMemory or level.useDisk), level

@@ -37,38 +37,6 @@ def test_stream_drains_and_is_exactly_once(spark, tmp_path):
     assert spark.read.parquet(out).count() == 40 + n_new
 
 
-def test_stream_dedup_exact_across_microbatches(spark, tmp_path):
-    """Streaming dedup: exact-duplicate payloads arriving in LATER
-    micro-batches are dropped by checkpointed state (watermark-bounded)."""
-    from pyspark.sql import functions as F
-
-    from jarvis_ocr_service_spark.sources.pages import synthesize_pages
-    from jarvis_ocr_service_spark.streaming.stream import run_stream_dedup
-
-    src = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-    base = synthesize_pages(spark, 40, num_partitions=2).cache()
-    base.write.mode("overwrite").parquet(src)
-    q = run_stream_dedup(spark, src, out, ck, watermark="10 days")
-    q.awaitTermination(120)
-    first = spark.read.parquet(out).count()
-
-    # a second file-drop: same payloads under new urls, same event time
-    base.withColumn("url", F.concat(F.col("url"), F.lit("-again"))).write.mode(
-        "append"
-    ).parquet(src)
-    q2 = run_stream_dedup(spark, src, out, ck, watermark="10 days")
-    q2.awaitTermination(120)
-    after = spark.read.parquet(out)
-    assert after.count() == first  # every payload in batch 2 was a dup
-    # distinct payload set unchanged
-    n_digests = after.select(F.md5(F.coalesce("html", F.lit(b"")))).distinct().count()
-    assert n_digests == first == base.select(
-        F.md5(F.coalesce("html", F.lit(b"")))
-    ).distinct().count()
-
-
 def test_stream_prepare_dedups_then_extracts_and_gates(spark, tmp_path):
     """Streaming prepare: cross-micro-batch payload dedup feeds the
     extraction cascade + quality gate; a recrawl drop adds ZERO corpus

@@ -1,22 +1,23 @@
 """normalize_text / truncate_text: reference edge cases + equivalence
-properties across the scalar, pandas, and SQL forms.
+properties between the scalar forms, their fast paths, and the SQL form.
 
 Edge cases mirror the reference's own unit tests
 (/root/reference/tests/test_text_utils.py — behaviourally replayed, not
 copied)."""
 
-import pandas as pd
+import re
+
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from jarvis_ocr_service_spark.operators.textops import (
-    normalize_series,
+    _needs_line_pass,
     normalize_text,
     normalize_text_sql,
     text_len_bytes,
-    truncate_series,
     truncate_text,
+    truncate_with_len,
 )
 
 
@@ -87,25 +88,32 @@ class TestTruncate:
 
 
 # ---------------------------------------------------------------------------
-# Property: scalar == pandas form on arbitrary text
+# Property: fast paths == their slow references on arbitrary text
 # ---------------------------------------------------------------------------
 
-@given(st.lists(st.text(max_size=80), max_size=10))
-@settings(max_examples=60, deadline=None)
-def test_normalize_series_equals_scalar(texts):
-    s = pd.Series(texts, dtype=object)
-    got = normalize_series(s).tolist()
-    assert got == [normalize_text(t) for t in texts]
+_RE_LINE_PASS = re.compile(r"[^\S\n ]|  | \n|\n ")
+_ws_heavy = st.text(
+    alphabet=st.sampled_from(
+        list("ab \n\t\r\x0b\x0c\x1c\x1d\x1e\x1fé") + ["\x85", "\xa0", "\u2028"]
+    ),
+    max_size=40,
+)
 
 
-@given(st.lists(st.text(max_size=60), max_size=8), st.integers(1, 40))
+@given(st.one_of(st.text(max_size=80), _ws_heavy))
+@settings(max_examples=400, deadline=None)
+def test_needs_line_pass_matches_regex(text):
+    """normalize_text's skip predicate is the alternation regex its comment
+    names, decomposed into substring checks."""
+    assert _needs_line_pass(text) == (_RE_LINE_PASS.search(text) is not None)
+
+
+@given(st.text(max_size=60), st.integers(1, 40))
 @settings(max_examples=60, deadline=None)
-def test_truncate_series_equals_scalar(texts, max_bytes):
-    s = pd.Series(texts, dtype=object)
-    out, flags = truncate_series(s, max_bytes)
-    for t, o, f in zip(texts, out.tolist(), flags.tolist()):
-        eo, ef = truncate_text(t, max_bytes)
-        assert (o, f) == (eo, ef)
+def test_truncate_with_len_equals_scalar(text, max_bytes):
+    """The cascade's single-encode truncate == truncate_text + byte length."""
+    eo, ef = truncate_text(text, max_bytes)
+    assert truncate_with_len(text, max_bytes) == (eo, ef, text_len_bytes(eo))
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,15 @@
 """Deterministic validator: reference gates + heuristic behavior."""
 
-from jarvis_ocr_service_spark.operators.validate import validate_series, validate_text
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from jarvis_ocr_service_spark.config import GARBLED_WORD_MIN_LEN
+from jarvis_ocr_service_spark.operators.validate import (
+    _ASCII_LETTERS,
+    _RE_GARBLED_TOKEN,
+    _VOWELS,
+    validate_text,
+)
 
 
 def test_min_chars_gate_exact_reference_semantics():
@@ -55,11 +64,46 @@ def test_unicode_text_not_garbled():
     assert ok
 
 
-def test_series_matches_scalar():
-    texts = ["", "ab", "hello world this is text", "xkcd qwrtz bcdfg hjklm"]
-    import pandas as pd
+def _any_garbled_word(text):
+    """The per-word loop's rule, verbatim: an all-ASCII token with a
+    letter, >= GARBLED_WORD_MIN_LEN chars and no vowel."""
+    return any(
+        w.isascii()
+        and not _ASCII_LETTERS.isdisjoint(w)
+        and len(w) >= GARBLED_WORD_MIN_LEN
+        and _VOWELS.isdisjoint(w)
+        for w in text.split()
+    )
 
-    df = validate_series(pd.Series(texts))
-    for t, (_, row) in zip(texts, df.iterrows()):
-        ok, conf, reason = validate_text(t)
-        assert (row.is_valid, row.confidence, row.reason) == (ok, conf, reason)
+
+# Token characters: consonants, vowels, digits/punctuation, ASCII control
+# characters (some are str.isspace(), most are not), non-ASCII letters and
+# non-ASCII whitespace (NEL, NBSP, LINE SEPARATOR).
+_TOKEN_CHARS = st.sampled_from(
+    list("bcdfgxzBXZ" "aeiouyAY" "07_-.'") + [chr(c) for c in range(32)]
+    + ["\x7f", "é", "ß", "ÿ", "ж", "\x85", "\xa0", "\u2028"]
+)
+_TOKENS = st.one_of(
+    st.text(_TOKEN_CHARS, min_size=GARBLED_WORD_MIN_LEN - 1,
+            max_size=GARBLED_WORD_MIN_LEN + 1),
+    st.text(_TOKEN_CHARS, max_size=2 * GARBLED_WORD_MIN_LEN),
+)
+_SEPS = st.sampled_from([" ", "\n", "\t", "  ", "\x0b", "\x1c", "\x85"])
+
+
+@given(st.lists(st.tuples(_TOKENS, _SEPS), max_size=8))
+@settings(max_examples=400, deadline=None)
+def test_garbled_regex_fast_path_matches_word_loop(parts):
+    text = "".join(tok + sep for tok, sep in parts)
+    fast_says_garbled = _RE_GARBLED_TOKEN.search(text) is not None
+    assert fast_says_garbled == _any_garbled_word(text), repr(text)
+
+
+def test_garbled_regex_fast_path_boundary_lengths():
+    n = GARBLED_WORD_MIN_LEN
+    for word, garbled in (("x" * (n - 1), False), ("x" * n, True),
+                          ("x" * (n + 1), True), ("x" * (n - 1) + "é", False),
+                          ("x" * n + "a", False), ("\x01" + "x" * n, True)):
+        for text in (word, "ok " + word, word + "\n", "a\x85" + word):
+            assert (_RE_GARBLED_TOKEN.search(text) is not None) == garbled \
+                == _any_garbled_word(text), repr(text)

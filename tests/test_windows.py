@@ -1,35 +1,4 @@
-"""Watermarked windowed streaming aggregation."""
-
-from jarvis_ocr_service_spark.streaming.windows import run_windowed_counts
-
-
-def test_windowed_counts_with_watermark(spark, tmp_path):
-    inp, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    ev.coalesce(2).write.parquet(inp)
-
-    q = run_windowed_counts(spark, inp, out, ckpt, window="30 minutes",
-                            watermark="10 minutes")
-    q.awaitTermination(180)
-
-    got = spark.read.parquet(out)
-    n_windows = got.count()
-    assert n_windows > 0
-    # append mode + watermark: only finalized windows emitted — the total
-    # must be <= batch count and match the batch aggregate for the windows
-    # that did emit
-    from pyspark.sql import functions as F
-
-    batch = (
-        ev.groupBy(F.window("ts", "30 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("w_start"), "n")
-    )
-    exp = {r.w_start: r.n for r in batch.collect()}
-    for r in got.collect():
-        assert exp[r.w_start] == r.n
-    assert n_windows <= len(exp)
-    assert n_windows >= len(exp) - 2  # only trailing windows may be held back
+"""Session windows: batch and streaming forms."""
 
 
 def test_sessionize_batch_matches_islands(spark):
