@@ -144,20 +144,18 @@ def main(argv=None) -> int:
         return 0
 
     if args.cmd == "prepare":
+        from jarvis_ocr_service_spark.plans.caching import cache_scope
         from jarvis_ocr_service_spark.plans.prepare import prepare_training_data
 
         pages = spark.read.parquet(args.input)
-        corpus = prepare_training_data(
-            pages,
-            min_quality=args.min_quality,
-            near_dup_threshold=args.near_dup_threshold or None,
-            pdf_mode=args.pdf_mode,
-            keep_ppl_buckets=_parse_ppl_buckets(args.keep_ppl_buckets),
-        )
-        corpus.write.mode("overwrite").parquet(args.output)
-        from jarvis_ocr_service_spark.plans.caching import release_cached
-
-        release_cached(corpus)  # drop the LSH plan's persisted blocks
+        with cache_scope():
+            prepare_training_data(
+                pages,
+                min_quality=args.min_quality,
+                near_dup_threshold=args.near_dup_threshold or None,
+                pdf_mode=args.pdf_mode,
+                keep_ppl_buckets=_parse_ppl_buckets(args.keep_ppl_buckets),
+            ).write.mode("overwrite").parquet(args.output)
         n = spark.read.parquet(args.output).count()
         print(f"prepared {n} clean documents -> {args.output}")
         return 0

@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 
 from jarvis_ocr_service_spark.functions.report import size_bucket_col
 from jarvis_ocr_service_spark.functions.tokens import py_tokens_col as _tokens
+from jarvis_ocr_service_spark.plans.caching import persist
 
 
 def nb_train(
@@ -82,13 +83,11 @@ def nb_train(
     toks = df.select(
         lab.alias("_y"), F.explode(_tokens(F.col(text_col))).alias("token")
     )
-    counts = (
-        toks.groupBy("token")
-        .agg(
+    counts = persist(
+        toks.groupBy("token").agg(
             F.sum(F.when(F.col("_y"), 1).otherwise(0)).cast("long").alias("cpos"),
             F.sum(F.when(F.col("_y"), 0).otherwise(1)).cast("long").alias("cneg"),
         )
-        .persist()
     )
     tot = counts.agg(
         F.coalesce(F.sum("cpos"), F.lit(0)).alias("np"),
@@ -121,9 +120,7 @@ def nb_train(
         "n_neg": n_neg,
         "v": v,
     }
-    from jarvis_ocr_service_spark.plans.caching import attach_cached
-
-    return attach_cached(weights, [counts]), params
+    return weights, params
 
 
 def nb_score(
@@ -176,11 +173,7 @@ def nb_quality_classifier(
 ) -> DataFrame:
     """Train-and-score convenience over one corpus (the CCNet shape:
     label a slice you trust — e.g. wiki-like sources — and score
-    everything). Returns ``(key, score, pred)``; the training counts
-    cache rides along (attach_cached) for the caller's
-    release_cached() contract."""
-    from jarvis_ocr_service_spark.plans.caching import attach_cached, carried_cached
-
+    everything). Returns ``(key, score, pred)``; the persisted training
+    counts belong to the caller's ``cache_scope`` (plans/caching)."""
     weights, params = nb_train(df, label_col, text_col=text_col)
-    scored = nb_score(df, weights, params, text_col=text_col, key_col=key_col)
-    return attach_cached(scored, carried_cached(weights))
+    return nb_score(df, weights, params, text_col=text_col, key_col=key_col)

@@ -53,6 +53,7 @@ from jarvis_ocr_service_spark.functions.simsearch import (
     quantized_cosine_col,
     quantized_vec,
 )
+from jarvis_ocr_service_spark.plans.caching import local_checkpoint, persist, release
 
 #: shift making every quantized coordinate nonnegative (|round(x*scale)|
 #: must stay below this — asserted in the quantize stage). 2^20 keeps the
@@ -64,10 +65,11 @@ OFFSET = 1 << 20
 
 def _quantize_shift_np(mat: np.ndarray, scale: int) -> np.ndarray:
     """round(x*scale) HALF_UP (away from zero, = F.round / SQL round on
-    doubles) then +OFFSET, as exact int64."""
+    doubles) then +OFFSET, as exact int64. NaN fails the envelope check
+    (it would cast to garbage)."""
     v = mat.astype(np.float64) * float(scale)
     q = np.where(v >= 0.0, np.floor(v + 0.5), np.ceil(v - 0.5))
-    if np.abs(q).max(initial=0.0) >= float(OFFSET):
+    if not (np.abs(q) < float(OFFSET)).all():
         raise ValueError("quantized coordinate exceeds OFFSET envelope")
     return q.astype(np.int64) + OFFSET
 
@@ -75,15 +77,20 @@ def _quantize_shift_np(mat: np.ndarray, scale: int) -> np.ndarray:
 def _quantized_base(
     df: DataFrame, vec_col: str, id_col: str, scale: int
 ) -> DataFrame:
-    """(id, q array<long>) with shifted quantized coordinates."""
+    """(id, q array<long>) with shifted quantized coordinates; ``q`` is
+    null for a null vector or one with a null (or NaN) element, which
+    k-means leaves out of the fit and assigns to no cluster."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            q = _quantize_shift_np(mat, scale)
-            yield pd.DataFrame({"id": pdf[id_col].values, "q": list(q)})
+            vecs = pdf[vec_col]
+            ok = vecs.map(lambda v: v is not None and not pd.isna(v).any())
+            mat = np.array(list(vecs[ok]), dtype=np.float64)
+            rows = iter(_quantize_shift_np(mat, scale))
+            q = [next(rows) if good else None for good in ok]
+            yield pd.DataFrame({"id": pdf[id_col].values, "q": q})
 
     return df.select(id_col, vec_col).mapInPandas(
         gen, schema="id long, q array<long>"
@@ -111,7 +118,8 @@ def _fit_centroids(
 ) -> np.ndarray:
     """Fit loop over the persisted quantized base: smallest-id init,
     ``iters`` (assign, update) rounds; returns the (k, dim) int64
-    centroid matrix."""
+    centroid matrix. Points with a null ``q`` take no part."""
+    pts = pts.filter(F.col("q").isNotNull())
     init = pts.orderBy("id").limit(k).collect()  # TakeOrdered, k rows
     if len(init) < k:
         raise ValueError(f"k={k} but only {len(init)} points")
@@ -179,10 +187,12 @@ def kmeans_assign(
 
     ``iters`` full (assign, update) rounds run first; the returned frame
     is one final assignment pass against the resulting centroids, with
-    ``dist2`` the exact int64 squared quantized L2 distance."""
+    ``dist2`` the exact int64 squared quantized L2 distance. A null
+    vector, or one with a null element, is left out of the fit and gets
+    a null ``cluster`` and ``dist2`` (one output row per input row)."""
     if k < 1 or iters < 0:
         raise ValueError("k >= 1 and iters >= 0 required")
-    pts = _quantized_base(df, vec_col, id_col, scale).persist()
+    pts = persist(_quantized_base(df, vec_col, id_col, scale))
     try:
         cent_fin = _fit_centroids(pts, k, iters, chunk_rows)
 
@@ -190,8 +200,12 @@ def kmeans_assign(
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                q = np.array(list(pdf["q"]), dtype=np.int64)
-                c, d2 = _assign_np(q, cent_fin, chunk_rows)
+                ok = pdf["q"].notna().to_numpy()
+                c = pd.array([None] * len(pdf), dtype="Int64")
+                d2 = c.copy()
+                if ok.any():
+                    q = np.array(list(pdf["q"][ok]), dtype=np.int64)
+                    c[ok], d2[ok] = _assign_np(q, cent_fin, chunk_rows)
                 yield pd.DataFrame(
                     {"id": pdf["id"].values, "cluster": c, "dist2": d2}
                 )
@@ -201,10 +215,10 @@ def kmeans_assign(
         )
         # materialize before releasing the base cache (the repo's
         # count()-before-unpersist contract)
-        out = out.localCheckpoint(eager=True)
+        out = local_checkpoint(out)
         return out.withColumnRenamed("id", id_col)
     finally:
-        pts.unpersist()
+        release(pts)
 
 
 def ivf_topk_quantized(
@@ -242,7 +256,8 @@ def ivf_topk_quantized(
     Probe selection is driver-side exact int64 (centroid distance in
     the shifted quantized space, tie-break lowest cluster id); scoring
     matches cosine_topk_quantized bit-for-bit. Returns (id, cos_sim),
-    cos_sim descending, id ascending."""
+    cos_sim descending, id ascending. A null vector, or one with a null
+    element, is never a candidate."""
     from jarvis_ocr_service_spark.functions.simsearch import (
         _round_half_up,
         quantized_cosine_col,
@@ -251,7 +266,7 @@ def ivf_topk_quantized(
 
     if nprobe < 1 or nprobe > n_clusters:
         raise ValueError("1 <= nprobe <= n_clusters required")
-    pts = _quantized_base(df, vec_col, id_col, scale).persist()
+    pts = persist(_quantized_base(df, vec_col, id_col, scale))
     try:
         cent = _fit_centroids(pts, n_clusters, iters, chunk_rows)
         qs = _quantize_shift_np(
@@ -271,11 +286,11 @@ def ivf_topk_quantized(
                 keep = np.isin(c, list(probe_set))
                 yield pd.DataFrame({"id": pdf["id"].values[keep]})
 
-        ids = pts.mapInPandas(cand, schema="id long").localCheckpoint(
-            eager=True
+        ids = local_checkpoint(
+            pts.filter(F.col("q").isNotNull()).mapInPandas(cand, schema="id long")
         )
     finally:
-        pts.unpersist()
+        release(pts)
 
     qq = [_round_half_up(float(x) * scale) for x in query_vec]
     qlit = F.array(*[F.lit(v).cast("long") for v in qq])

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from jarvis_ocr_service_spark.plans.caching import persist, release
+
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -357,9 +359,9 @@ def minhash_lsh_pairs(
     # ~32k interpreted element evaluations per 2000-token document,
     # measured 0.6 core-sec/doc (a composed-pipeline run over 300k pages
     # DNF'd at 10 min). This form: ~1.5 ms/doc (see test_dedup perf note).
-    shingled = _shingled_with_signatures(
-        df, text_col, key_col, k, max_tokens, num_hashes
-    ).persist()  # referenced on both sides of the self-join + verify
+    shingled = persist(  # referenced on both sides of the self-join + verify
+        _shingled_with_signatures(df, text_col, key_col, k, max_tokens, num_hashes)
+    )
     banded = shingled.select(
         "k",
         F.posexplode(
@@ -402,13 +404,10 @@ def minhash_lsh_pairs(
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
-    from jarvis_ocr_service_spark.plans.caching import attach_cached
-
-    return attach_cached(
+    return (
         pairs.withColumn("jaccard", inter / union)
         .filter(F.col("jaccard") >= verify_threshold)
-        .select("key_a", "key_b", "jaccard"),
-        [shingled],
+        .select("key_a", "key_b", "jaccard")
     )
 
 
@@ -436,12 +435,12 @@ def minhash_lsh_pairs_between(
     RIGHT (corpus) side — the side that can concentrate templated mass.
     Keys need not be disjoint across the two tables (they're separate
     key spaces in the output columns)."""
-    lsh_sh = _shingled_with_signatures(
-        left, text_col, key_col, k, max_tokens, num_hashes
-    ).persist()
-    rsh_sh = _shingled_with_signatures(
-        right, text_col, key_col, k, max_tokens, num_hashes
-    ).persist()
+    lsh_sh = persist(
+        _shingled_with_signatures(left, text_col, key_col, k, max_tokens, num_hashes)
+    )
+    rsh_sh = persist(
+        _shingled_with_signatures(right, text_col, key_col, k, max_tokens, num_hashes)
+    )
     return minhash_lsh_pairs_between_sh(
         lsh_sh,
         rsh_sh,
@@ -449,7 +448,6 @@ def minhash_lsh_pairs_between(
         bands=bands,
         verify_threshold=verify_threshold,
         max_bucket=max_bucket,
-        _release=[lsh_sh, rsh_sh],
     )
 
 
@@ -482,7 +480,6 @@ def minhash_lsh_pairs_between_sh(
     bands: int = 4,
     verify_threshold: float = 0.7,
     max_bucket: int = 0,
-    _release=None,
 ) -> DataFrame:
     """:func:`minhash_lsh_pairs_between` over PRECOMPUTED (k, sh, sig)
     frames (``_shingled_with_signatures`` output). The 10^12-row
@@ -526,13 +523,10 @@ def minhash_lsh_pairs_between_sh(
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
-    from jarvis_ocr_service_spark.plans.caching import attach_cached
-
-    return attach_cached(
+    return (
         pairs.withColumn("jaccard", inter / union)
         .filter(F.col("jaccard") >= verify_threshold)
-        .select("left_key", "right_key", "jaccard"),
-        _release if _release is not None else [],
+        .select("left_key", "right_key", "jaccard")
     )
 
 
@@ -585,9 +579,9 @@ def minhash_bucket_clusters(
     keep-one-per-cluster — this is the accepted trade at scale;
     callers needing exact pair semantics use the pair route.
     """
-    shingled = _shingled_with_signatures(
-        df, text_col, key_col, k, max_tokens, num_hashes
-    ).persist()
+    shingled = persist(
+        _shingled_with_signatures(df, text_col, key_col, k, max_tokens, num_hashes)
+    )
     banded = band_keys_from_sig(shingled, num_hashes, bands)
     reps = (
         banded.groupBy("band", "band_hash")
@@ -630,7 +624,7 @@ def minhash_bucket_clusters(
         # so the shingle cache can be released as soon as it returns
         clusters = dup_clusters(edges, key_a="key_a", key_b="key_b")
     finally:
-        shingled.unpersist()
+        release(shingled)
     return clusters
 
 
@@ -849,17 +843,16 @@ def dup_clusters(
     # and the logical plan doubles each iteration (analyzer OOM by ~12
     # rounds; each round is persisted+materialized, so lineage growth is
     # the only thing at stake, and it must stay linear).
-    edges = (
+    edges = persist(
         e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .unionByName(
             nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
         )
-        .persist()
     )
-    labels = nodes.select("node", F.col("node").alias("label")).persist()
+    labels = persist(nodes.select("node", F.col("node").alias("label")))
     converged = False
     for _ in range(max_iters):
-        new_labels = (
+        new_labels = persist(
             edges.join(
                 labels.select(
                     F.col("node").alias("dst"), F.col("label").alias("nl")
@@ -869,7 +862,6 @@ def dup_clusters(
             .groupBy("src")
             .agg(F.min("nl").alias("label"))
             .withColumnRenamed("src", "node")
-            .persist()
         )
         changed = (
             new_labels.join(
@@ -883,24 +875,19 @@ def dup_clusters(
         # partitions recomputing through the whole prior-round lineage
         # after the unpersist (quadratic per-round work on deep clusters).
         done = changed.count() == 0
-        labels.unpersist()
+        release(labels)
         labels = new_labels
         if done:
             converged = True
             break
-    edges.unpersist()
+    release(edges)
     if not converged:
-        labels.unpersist()
+        release(labels)
         raise RuntimeError(
             f"dup_clusters did not converge within {max_iters} rounds — "
             "pathological pair graph (diameter > cap); raise max_iters"
         )
-    from jarvis_ocr_service_spark.plans.caching import attach_cached
-
-    return attach_cached(
-        labels.select(F.col("node").alias("key"), F.col("label").alias("cluster")),
-        [labels],
-    )
+    return labels.select(F.col("node").alias("key"), F.col("label").alias("cluster"))
 
 
 # ---------------------------------------------------------------------------
@@ -1191,7 +1178,7 @@ def dedup_ngram_spans(
             )
 
     grams = src.mapInPandas(gram_rows, schema="key long, pos long, h long")
-    grams = grams.persist()  # count + position join share one computation
+    grams = persist(grams)  # count + position join share one computation
     dup = (
         grams.groupBy("h")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -1229,10 +1216,7 @@ def dedup_ngram_spans(
                 }
             )
 
-    from jarvis_ocr_service_spark.plans.caching import attach_cached
-
-    out = joined.mapInPandas(
+    return joined.mapInPandas(
         rebuild,
         schema="key long, clean_text string, n_tokens long, n_removed long",
     )
-    return attach_cached(out, [grams])

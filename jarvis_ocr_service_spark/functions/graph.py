@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from jarvis_ocr_service_spark.plans.caching import local_checkpoint, persist, release
+
 DEFAULT_SCALE = 10**12
 
 
@@ -80,10 +82,9 @@ def pagerank_quantized(
     graphs. The value affects physical scheduling only — results are
     bit-identical (pinned by test).
 
-    The returned frame carries ONE persisted (node, long) frame; callers
-    who materialize it should release it via plans/caching.release_cached
-    (attach_cached pattern) — otherwise that small cache lives until the
-    session ends."""
+    The returned frame reads ONE checkpointed (node, long) frame, owned by
+    the caller's ``cache_scope`` (plans/caching); each earlier round's
+    checkpoint is released as soon as the next one exists."""
     if dangling not in ("leak", "renormalize"):
         raise ValueError("dangling must be 'leak' or 'renormalize'")
     if shuffle_partitions:
@@ -110,11 +111,10 @@ def pagerank_quantized(
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).distinct()
-    nodes = (
+    nodes = persist(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
     )
     if n_nodes is None:
         n_nodes = nodes.count()
@@ -123,7 +123,7 @@ def pagerank_quantized(
     if n_nodes == 0:
         # empty edge table -> empty ranking (not a ZeroDivisionError);
         # a crawl slice with no qualifying links is a normal input
-        nodes.unpersist()
+        release(nodes)
         from pyspark.sql import types as _T
 
         node_type = e.schema["src"].dataType
@@ -153,26 +153,28 @@ def pagerank_quantized(
     # recompute quadratically under the lazy chain)
     deep = until_fixpoint or dangling == "renormalize" or rounds > 8
 
-    e_deg = e.join(
-        e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), "src"
-    ).persist()
+    e_deg = persist(
+        e.join(e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), "src")
+    )
     if deep:
         e_deg.count()
 
     dangling_nodes = None
     if dangling == "renormalize":
-        dangling_nodes = nodes.join(
-            e.select("src").distinct().withColumnRenamed("src", "node"),
-            "node",
-            "left_anti",
-        ).persist()
+        dangling_nodes = persist(
+            nodes.join(
+                e.select("src").distinct().withColumnRenamed("src", "node"),
+                "node",
+                "left_anti",
+            )
+        )
         dangling_nodes.count()
 
     # eager localCheckpoint: materializes AND cuts lineage (module
     # docstring; at cluster scale prefer sc.setCheckpointDir + .checkpoint())
     ranks = nodes.select("node", F.lit(init).cast("long").alias("rank"))
     if deep:
-        ranks = ranks.localCheckpoint()
+        ranks = local_checkpoint(ranks)
     converged = not until_fixpoint
     for _ in range(rounds):
         dm_share = 0
@@ -203,7 +205,7 @@ def pagerank_quantized(
             ).cast("long").alias("rank"),
         )
         if deep:
-            new_ranks = new_ranks.localCheckpoint()  # materialized + lineage cut
+            new_ranks = local_checkpoint(new_ranks)  # materialized + lineage cut
         if until_fixpoint:
             changed = (
                 new_ranks.join(
@@ -212,32 +214,24 @@ def pagerank_quantized(
                 .filter(F.col("rank") != F.col("_old"))
                 .count()
             )
-            ranks.unpersist()  # checkpoint blocks of the old round
-            ranks = new_ranks
-            if changed == 0:
-                converged = True
-                break
-        else:
-            if deep:
-                ranks.unpersist()
-            ranks = new_ranks
+        release(ranks)  # the old round's checkpoint (the shallow chain has none)
+        ranks = new_ranks
+        if until_fixpoint and changed == 0:
+            converged = True
+            break
     if not deep:
         # one materialization for the whole chain: lineage cut + the
-        # persisted frame the attach_cached contract promises callers
-        ranks = ranks.localCheckpoint()
-    e_deg.unpersist()
-    nodes.unpersist()
+        # frame the returned plan reads
+        ranks = local_checkpoint(ranks)
+    release(e_deg)
+    release(nodes)
     if dangling_nodes is not None:
-        dangling_nodes.unpersist()
+        release(dangling_nodes)
     if not converged:
-        ranks.unpersist()
+        release(ranks)
         raise RuntimeError(
             f"pagerank_quantized did not reach a quantized fixpoint within "
             f"{max_iters} rounds — integer dynamics can (rarely) oscillate; "
             "use a fixed iters instead"
         )
-    from jarvis_ocr_service_spark.plans.caching import attach_cached
-
-    return attach_cached(
-        ranks.select("node", F.col("rank").alias("rank_q")), [ranks]
-    )
+    return ranks.select("node", F.col("rank").alias("rank_q"))

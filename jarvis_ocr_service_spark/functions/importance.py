@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from jarvis_ocr_service_spark.functions.report import size_bucket_col
 from jarvis_ocr_service_spark.functions.sampling import _shifted
 from jarvis_ocr_service_spark.functions.tokens import py_tokens_col
+from jarvis_ocr_service_spark.plans.caching import persist
 
 
 def _gram_stream(
@@ -180,13 +181,11 @@ def corpus_divergence(
     tagged = tok_p.withColumn("_p", F.lit(1)).withColumn("_q", F.lit(0)).unionByName(
         tok_q.withColumn("_p", F.lit(0)).withColumn("_q", F.lit(1))
     )
-    counts = (
-        tagged.groupBy("token")
-        .agg(
+    counts = persist(
+        tagged.groupBy("token").agg(
             F.sum("_p").cast("long").alias("np"),
             F.sum("_q").cast("long").alias("nq"),
         )
-        .persist()
     )
     tot = counts.agg(
         F.coalesce(F.sum("np"), F.lit(0)).alias("tp"),
@@ -196,7 +195,7 @@ def corpus_divergence(
     t_p, t_q, v = int(tot.tp), int(tot.tq), int(tot.v)
     s_p = size_bucket_col(F.expr(f"CAST({t_p + v} AS BIGINT) div (np + 1)"))
     s_q = size_bucket_col(F.expr(f"CAST({t_q + v} AS BIGINT) div (nq + 1)"))
-    out = counts.agg(
+    return counts.agg(
         F.lit(t_p).cast("long").alias("t_p"),
         F.lit(t_q).cast("long").alias("t_q"),
         F.lit(v).cast("long").alias("v"),
@@ -227,6 +226,3 @@ def corpus_divergence(
         (F.col("xent_pq") - F.col("ent_p")).cast("long").alias("kl_pq"),
         (F.col("xent_qp") - F.col("ent_q")).cast("long").alias("kl_qp"),
     )
-    from jarvis_ocr_service_spark.plans.caching import attach_cached
-
-    return attach_cached(out, [counts])

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from jarvis_ocr_service_spark.plans.caching import persist
+
 
 def global_rank(
     df: DataFrame,
@@ -44,17 +46,13 @@ def global_rank(
     need a separate full count. THE shared machinery behind
     shuffle_order, exact_quantiles, and (as a cumsum generalization)
     assign_packs — one implementation, three ops."""
-    from jarvis_ocr_service_spark.plans.caching import attach_cached
-
     spark = df.sparkSession
     cols = [F.col(c) for c in (
         [order_cols] if isinstance(order_cols, str) else list(order_cols)
     )]
     p = num_partitions or spark.sparkContext.defaultParallelism
-    ranged = (
-        df.repartitionByRange(p, *cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
+    ranged = persist(
+        df.repartitionByRange(p, *cols).withColumn("_pid", F.spark_partition_id())
     )
     counts = {
         r._pid: r.n
@@ -75,7 +73,7 @@ def global_rank(
         .withColumn(out_col, (F.col("_rn") + F.col("_off") - 1).cast("long"))
         .drop("_pid", "_rn", "_off")
     )
-    return attach_cached(out, [ranged]), acc
+    return out, acc
 
 
 def with_global_cumsum(
@@ -98,7 +96,7 @@ def with_global_cumsum(
     ranged = df.repartitionByRange(
         p, *[F.col(c) for c in order_cols]
     ).withColumn("_pid", F.spark_partition_id())
-    ranged = ranged.persist()  # totals + cumsum both read it
+    ranged = persist(ranged)  # totals + cumsum both read it
     totals = {
         r._pid: r.total
         for r in ranged.groupBy("_pid")
@@ -118,15 +116,12 @@ def with_global_cumsum(
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    from jarvis_ocr_service_spark.plans.caching import attach_cached
-
-    out = (
+    return (
         ranged.withColumn("_local", F.sum(value_col).over(w))
         .join(F.broadcast(off_df), "_pid")
         .withColumn(out_col, (F.col("_local") + F.col("_off")).cast("long"))
         .drop("_pid", "_local", "_off")
     )
-    return attach_cached(out, [ranged])
 
 
 def assign_packs(
@@ -147,9 +142,7 @@ def assign_packs(
     cum = with_global_cumsum(
         df, order_col, token_col, out_col="_cum", num_partitions=num_partitions
     )
-    from jarvis_ocr_service_spark.plans.caching import attach_cached, carried_cached
-
-    out = (
+    return (
         cum.withColumn(
             "_start", (F.col("_cum") - F.col(token_col)).cast("long")
         )
@@ -160,7 +153,6 @@ def assign_packs(
         )
         .drop("_cum", "_start")
     )
-    return attach_cached(out, carried_cached(cum))
 
 
 def pack_chunks(
@@ -200,9 +192,7 @@ def pack_chunks(
     cum = with_global_cumsum(
         df, order_col, token_col, out_col="_cum", num_partitions=num_partitions
     )
-    from jarvis_ocr_service_spark.plans.caching import attach_cached, carried_cached
-
-    out = (
+    return (
         cum.withColumn("_start", (F.col("_cum") - F.col(token_col)).cast("long"))
         .filter(F.col(token_col) > 0)
         .withColumn("_p0", F.expr(f"_start div {m}"))
@@ -221,7 +211,6 @@ def pack_chunks(
         .withColumn("chunk_tokens", (F.col("_cend") - F.col("_cstart")).cast("long"))
         .drop("_cum", "_start", "_p0", "_p1", "_cstart", "_cend")
     )
-    return attach_cached(out, carried_cached(cum))
 
 
 def pack_texts(
@@ -249,7 +238,6 @@ def pack_texts(
     operator). The assembly extraction is a native struct-field get,
     not an interpreted lambda (the >100-element HOF rule)."""
     from jarvis_ocr_service_spark.functions.tokens import py_tokens_col
-    from jarvis_ocr_service_spark.plans.caching import attach_cached, carried_cached
 
     toks = py_tokens_col(F.col(text_col))
     base = df.select(
@@ -261,7 +249,6 @@ def pack_texts(
         base, max_tokens, token_col="_nt", order_col="_k",
         num_partitions=num_partitions,
     )
-    deps = carried_cached(chunks)
     sliced = chunks.select(
         "pack_id",
         "pack_offset",
@@ -275,7 +262,7 @@ def pack_texts(
             " ",
         ).alias("_ct"),
     )
-    out = (
+    return (
         sliced.groupBy("pack_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_chunks"),
@@ -288,4 +275,3 @@ def pack_texts(
             ).alias("text"),
         )
     )
-    return attach_cached(out, deps)

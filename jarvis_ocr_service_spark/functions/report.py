@@ -87,11 +87,6 @@ def exact_quantiles(
     total sizes the rank targets, so there is no separate full-scan
     count; the target join is a broadcast of len(percentiles) rows."""
     from jarvis_ocr_service_spark.functions.packing import global_rank
-    from jarvis_ocr_service_spark.plans.caching import (
-        attach_cached,
-        carried_cached,
-        release_cached,
-    )
 
     spark = df.sparkSession
     pcts = sorted(int(p) for p in percentiles)
@@ -107,17 +102,14 @@ def exact_quantiles(
         num_partitions=num_partitions,
     )
     if n == 0:
-        release_cached(ranks)  # nothing downstream will read the cache
         return spark.createDataFrame([], "pct long, value long")
     targets = {p: (n - 1) * p // 100 for p in pcts}
     tgt = spark.createDataFrame(
         [(p, t) for p, t in targets.items()], "pct long, _pos long"
     )
-    out = (
-        ranks.join(F.broadcast(tgt), "_pos")
-        .select("pct", F.col("_v").alias("value"))
+    return ranks.join(F.broadcast(tgt), "_pos").select(
+        "pct", F.col("_v").alias("value")
     )
-    return attach_cached(out, carried_cached(ranks))
 
 
 def attribute_table(
@@ -138,14 +130,10 @@ def attribute_table(
     adds its two vocabulary-bounded shuffles; the final assembly is two
     key joins (AQE decides broadcast). Write the result next to the
     corpus and every future filter is a projection + threshold — no
-    tagger re-runs. Surprisal's counts cache rides attach_cached."""
+    tagger re-runs."""
     from jarvis_ocr_service_spark.functions.textstats import with_text_stats
     from jarvis_ocr_service_spark.functions.vocab import unigram_surprisal
     from jarvis_ocr_service_spark.functions.wordfilter import wordlist_flags
-    from jarvis_ocr_service_spark.plans.caching import (
-        attach_cached,
-        carried_cached,
-    )
 
     stats = with_text_stats(
         df.select(F.col(key_col).alias("key"), F.col(text_col).alias("text")),
@@ -156,7 +144,4 @@ def attribute_table(
         "key", F.col("n_hits").alias("n_banned")
     )
     sur = unigram_surprisal(df, text_col=text_col, key_col=key_col)
-    deps = carried_cached(sur)
-    sur = sur.select("key", "surprisal")
-    out = stats.join(wl, "key").join(sur, "key")
-    return attach_cached(out, deps)
+    return stats.join(wl, "key").join(sur.select("key", "surprisal"), "key")

@@ -162,7 +162,6 @@ def shuffle_order(
     ordered by (salted hash, key); identical result to the global
     window (which is exactly what the DuckDB oracle runs)."""
     from jarvis_ocr_service_spark.functions.packing import global_rank
-    from jarvis_ocr_service_spark.plans.caching import attach_cached, carried_cached
 
     ranked, _total = global_rank(
         df.withColumn("_h", _shifted(F.col(key_col), salt)),
@@ -170,7 +169,7 @@ def shuffle_order(
         out_col=out_col,
         num_partitions=num_partitions,
     )
-    return attach_cached(ranked.drop("_h"), carried_cached(ranked))
+    return ranked.drop("_h")
 
 
 def mix_corpora(

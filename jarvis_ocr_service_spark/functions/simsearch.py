@@ -27,6 +27,8 @@ from typing import List, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from jarvis_ocr_service_spark.plans.caching import cache_scope, persist
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -604,59 +606,51 @@ def embedding_near_dup_pairs(
                     bk_out[i] = keys[j].tolist()
             yield pd.DataFrame({"k": b[id_col], "vq": vq_out, "bkeys": bk_out})
 
-    staged = (
-        df.select(id_col, vec_col).mapInPandas(stage, schema=staged_schema).persist()
+    staged = persist(
+        df.select(id_col, vec_col).mapInPandas(stage, schema=staged_schema)
     )
-    # the persist above must not outlive a failed plan build: on success
-    # the caller releases it via attach_cached, on failure nobody would
-    try:
-        banded = staged.select(
-            "k",
-            F.posexplode("bkeys").alias("band", "bkey"),
+    banded = staged.select(
+        "k",
+        F.posexplode("bkeys").alias("band", "bkey"),
+    )
+    if max_bucket:
+        widths = banded.groupBy("band", "bkey").agg(
+            F.count(F.lit(1)).alias("_w")
         )
-        if max_bucket:
-            widths = banded.groupBy("band", "bkey").agg(
-                F.count(F.lit(1)).alias("_w")
-            )
-            banded = banded.join(
-                widths.filter(F.col("_w") <= max_bucket).drop("_w"),
-                ["band", "bkey"],
-            )
-        cand = (
-            banded.alias("a")
-            .join(
-                banded.alias("b"),
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bkey") == F.col("b.bkey"))
-                & (F.col("a.k") < F.col("b.k")),
-            )
-            .select(F.col("a.k").alias("key_a"), F.col("b.k").alias("key_b"))
-            .dropDuplicates(["key_a", "key_b"])
+        banded = banded.join(
+            widths.filter(F.col("_w") <= max_bucket).drop("_w"),
+            ["band", "bkey"],
         )
-        vq_only = staged.select("k", "vq")
-        pairs = cand.join(
-            vq_only.withColumnRenamed("k", "key_a").withColumnRenamed("vq", "vq_a"),
-            "key_a",
-        ).join(
-            vq_only.withColumnRenamed("k", "key_b").withColumnRenamed("vq", "vq_b"),
-            "key_b",
+    cand = (
+        banded.alias("a")
+        .join(
+            banded.alias("b"),
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bkey") == F.col("b.bkey"))
+            & (F.col("a.k") < F.col("b.k")),
         )
-        # pairwise scoring in the Arrow/numpy stage (bit-identical to
-        # quantized_cosine_col; interpreted per-pair HOFs were the dominant
-        # cost of the whole operator — guide §4)
-        out = pair_cosine_arrow(pairs.select("key_a", "key_b", "vq_a", "vq_b"))
-        if float(threshold) > -1.0:
-            out = out.filter(F.col("cos_sim") >= float(threshold))
-        # threshold <= -1 means "rank ALL candidates" (knn_graph's sentinel):
-        # make that structural rather than a float comparison — the quantized
-        # cosine of near-opposite vectors can round to just below -1.0, and a
-        # `>= -1.0` filter would silently drop that edge (r6 ADVICE item).
-    except BaseException:
-        staged.unpersist()
-        raise
-    from jarvis_ocr_service_spark.plans.caching import attach_cached
-
-    return attach_cached(out.select("key_a", "key_b", "cos_sim"), [staged])
+        .select(F.col("a.k").alias("key_a"), F.col("b.k").alias("key_b"))
+        .dropDuplicates(["key_a", "key_b"])
+    )
+    vq_only = staged.select("k", "vq")
+    pairs = cand.join(
+        vq_only.withColumnRenamed("k", "key_a").withColumnRenamed("vq", "vq_a"),
+        "key_a",
+    ).join(
+        vq_only.withColumnRenamed("k", "key_b").withColumnRenamed("vq", "vq_b"),
+        "key_b",
+    )
+    # pairwise scoring in the Arrow/numpy stage (bit-identical to
+    # quantized_cosine_col; interpreted per-pair HOFs were the dominant
+    # cost of the whole operator — guide §4)
+    out = pair_cosine_arrow(pairs.select("key_a", "key_b", "vq_a", "vq_b"))
+    if float(threshold) > -1.0:
+        out = out.filter(F.col("cos_sim") >= float(threshold))
+    # threshold <= -1 means "rank ALL candidates" (knn_graph's sentinel):
+    # make that structural rather than a float comparison — the quantized
+    # cosine of near-opposite vectors can round to just below -1.0, and a
+    # `>= -1.0` filter would silently drop that edge (r6 ADVICE item).
+    return out.select("key_a", "key_b", "cos_sim")
 
 
 def mmr_topk(
@@ -702,17 +696,18 @@ def mmr_topk(
         raise ValueError("need 1 <= k <= depth")
     qq = [_round_half_up(float(x) * scale) for x in query_vec]
     qlit = F.array(*[F.lit(v).cast("long") for v in qq])
-    cand = (
-        df.select(
-            F.col(id_col).alias("key"),
-            quantized_vec(F.col(vec_col), scale).alias("_vq"),
+    # the candidate cache is consumed here, eagerly: its lifetime ends
+    # with this call
+    with cache_scope():
+        cand = persist(
+            df.select(
+                F.col(id_col).alias("key"),
+                quantized_vec(F.col(vec_col), scale).alias("_vq"),
+            )
+            .withColumn("rel", _dot_long(F.col("_vq"), qlit))
+            .orderBy(F.desc("rel"), F.col("key"))
+            .limit(int(depth))
         )
-        .withColumn("rel", _dot_long(F.col("_vq"), qlit))
-        .orderBy(F.desc("rel"), F.col("key"))
-        .limit(int(depth))
-        .persist()
-    )
-    try:
         selected = []  # rows of (key, rel, mmr_q, vq)
         for _ in range(int(k)):
             remaining = cand
@@ -744,8 +739,6 @@ def mmr_topk(
                 break  # fewer than k candidates
             r = pick[0]
             selected.append((r.key, r.rel, r._mmr, list(r._vq)))
-    finally:
-        cand.unpersist()
     from pyspark.sql import types as T
 
     key_type = df.schema[id_col].dataType
@@ -810,17 +803,9 @@ def knn_graph(
         dim=dim,
         n_est=n_est,
     )
-    # hoist carried caches BEFORE deriving (the .select()-strips-attach
-    # rule), then persist: the symmetrize union references `pairs` twice —
-    # without the persist the whole banded join + verify pipeline runs
-    # twice
-    from jarvis_ocr_service_spark.plans.caching import (
-        attach_cached,
-        carried_cached,
-    )
-
-    carried = list(carried_cached(pairs))
-    pairs = pairs.persist()
+    # the symmetrize union references `pairs` twice — without the persist
+    # the whole banded join + verify pipeline runs twice
+    pairs = persist(pairs)
     sym = pairs.select(
         F.col("key_a").alias("key"),
         F.col("key_b").alias("neighbor"),
@@ -837,8 +822,6 @@ def knn_graph(
     w = Window.partitionBy("key").orderBy(
         F.desc("cos_sim"), F.col("neighbor")
     )
-    return attach_cached(
-        sym.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= int(k)),
-        [pairs] + carried,
+    return sym.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+        F.col("rank") <= int(k)
     )

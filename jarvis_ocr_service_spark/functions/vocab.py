@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from jarvis_ocr_service_spark.functions.tokens import py_tokens_col as _tokens
+from jarvis_ocr_service_spark.plans.caching import local_checkpoint, persist, release
 
 
 def token_counts(
@@ -91,7 +92,7 @@ def bpe_merges(
         raise ValueError("k must be positive")
     spark = df.sparkSession
     toks = _tokens(F.col(text_col))
-    seq = (
+    seq = local_checkpoint(
         df.select(toks.alias("_t"))
         .filter(F.size("_t") > 0)
         .select(
@@ -99,7 +100,6 @@ def bpe_merges(
                 F.lit(BPE_SEP), F.array_join("_t", " " + BPE_SEP), F.lit(" ")
             ).alias("seq")
         )
-        .localCheckpoint(eager=True)
     )
     merges = []
     for rnd in range(int(k)):
@@ -127,9 +127,11 @@ def bpe_merges(
         merges.append((rnd, a_sym[1:], b_sym[1:], n))  # strip SEP prefix
         pat = a_sym + " " + b_sym + " "
         rep = a_sym + BPE_JOIN + b_sym[1:] + " "
-        seq = seq.select(
-            F.replace(F.col("seq"), F.lit(pat), F.lit(rep)).alias("seq")
-        ).localCheckpoint(eager=True)
+        prev, seq = seq, local_checkpoint(
+            seq.select(F.replace(F.col("seq"), F.lit(pat), F.lit(rep)).alias("seq"))
+        )
+        release(prev)
+    release(seq)
     return spark.createDataFrame(
         merges, "merge_round long, tok_a string, tok_b string, n long"
     )
@@ -214,9 +216,9 @@ def _bpe_char_chain(df, k: int, text_col: str, min_count: int):
     if k <= 0:
         raise ValueError("k must be positive")
     words = token_counts(df, text_col)
-    seq = words.select(
-        "token", _char_seq_word(F.col("token")).alias("seq"), "n"
-    ).localCheckpoint(eager=True)
+    seq = local_checkpoint(
+        words.select("token", _char_seq_word(F.col("token")).alias("seq"), "n")
+    )
     merges = []
     for rnd in range(int(k)):
         arr = F.split(F.col("seq"), " ")
@@ -240,9 +242,12 @@ def _bpe_char_chain(df, k: int, text_col: str, min_count: int):
         merges.append((rnd, a_sym[1:], b_sym[1:], n))
         pat = a_sym + " " + b_sym + " "
         rep = a_sym + BPE_JOIN + b_sym[1:] + " "
-        seq = seq.select(
-            "token", F.replace(F.col("seq"), F.lit(pat), F.lit(rep)).alias("seq"), "n"
-        ).localCheckpoint(eager=True)
+        prev, seq = seq, local_checkpoint(
+            seq.select(
+                "token", F.replace(F.col("seq"), F.lit(pat), F.lit(rep)).alias("seq"), "n"
+            )
+        )
+        release(prev)
     return merges, seq
 
 
@@ -315,7 +320,8 @@ def bpe_merges_char(
     identical in Spark's literal replace, DuckDB's, and the
     brute-force mirror (test_vocab pins round-for-round parity)."""
     spark = df.sparkSession
-    merges, _ = _bpe_char_chain(df, k, text_col, min_count)
+    merges, seq = _bpe_char_chain(df, k, text_col, min_count)
+    release(seq)
     return spark.createDataFrame(
         merges, "merge_round long, sym_a string, sym_b string, n long"
     )
@@ -470,13 +476,12 @@ def unigram_surprisal(
     shuffle of (key, long) rows). Real corpora would persist the
     vocab/surprisal frame and re-score increments against it."""
     from jarvis_ocr_service_spark.functions.report import size_bucket_col
-    from jarvis_ocr_service_spark.plans.caching import attach_cached
 
     toks = df.select(
         F.col(key_col).alias("key"),
         F.explode(_tokens(F.col(text_col))).alias("token"),
     )
-    counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n")).persist()
+    counts = persist(toks.groupBy("token").agg(F.count(F.lit(1)).alias("n")))
     total = counts.agg(F.sum("n")).collect()[0][0] or 0
     sur = counts.select(
         "token",
@@ -492,7 +497,7 @@ def unigram_surprisal(
             F.sum("s").cast("long").alias("surprisal"),
         )
     )
-    out = (
+    return (
         df.select(F.col(key_col).alias("key"))
         .join(per_doc, "key", "left")
         .select(
@@ -501,7 +506,6 @@ def unigram_surprisal(
             F.coalesce("surprisal", F.lit(0)).cast("long").alias("surprisal"),
         )
     )
-    return attach_cached(out, [counts])
 
 
 def bigram_surprisal(
@@ -541,7 +545,6 @@ def bigram_surprisal(
     is the OOM hazard — AQE broadcasts when runtime size allows);
     then one per-doc sum shuffle of (key, long) rows."""
     from jarvis_ocr_service_spark.functions.report import size_bucket_col
-    from jarvis_ocr_service_spark.plans.caching import attach_cached
 
     toks = _tokens(F.col(text_col))
     n = F.size(toks)
@@ -554,7 +557,7 @@ def bigram_surprisal(
         F.explode(F.arrays_zip(prev.alias("a"), toks.alias("b"))).alias("p"),
     ).select("key", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
 
-    uni = token_counts(df, text_col).persist()
+    uni = persist(token_counts(df, text_col))
     total = uni.agg(F.sum("n")).collect()[0][0] or 0
     big = token_pair_counts(df, text_col, min_count=min_bigram_count).select(
         F.col("tok_a").alias("a"), F.col("tok_b").alias("b"),
@@ -586,7 +589,7 @@ def bigram_surprisal(
         F.count(F.lit(1)).alias("n_tokens"),
         F.sum("s").cast("long").alias("surprisal"),
     )
-    out = (
+    return (
         df.select(F.col(key_col).alias("key"))
         .join(per_doc, "key", "left")
         .select(
@@ -595,7 +598,6 @@ def bigram_surprisal(
             F.coalesce("surprisal", F.lit(0)).cast("long").alias("surprisal"),
         )
     )
-    return attach_cached(out, [uni])
 
 
 def token_pair_counts(
@@ -662,17 +664,10 @@ def surprisal_buckets(
     falls out of the ranking for free. One extra shuffle total over
     the surprisal scoring; every post-rank expression is codegen."""
     from jarvis_ocr_service_spark.functions.packing import global_rank
-    from jarvis_ocr_service_spark.plans.caching import (
-        attach_cached,
-        carried_cached,
-    )
 
     if n_buckets < 1:
         raise ValueError("n_buckets must be >= 1")
     sur = unigram_surprisal(df, text_col=text_col, key_col=key_col)
-    # .select()/.withColumn() strip the cached-deps attribute — hoist
-    # attachments before deriving, re-attach on the returned frame
-    deps = carried_cached(sur)
     ppl = sur.select(
         "key",
         F.when(
@@ -684,7 +679,6 @@ def surprisal_buckets(
         .alias("ppl_q"),
     )
     ranked, n_docs = global_rank(ppl, ["ppl_q", "key"], out_col="pos")
-    deps += carried_cached(ranked)
     n_docs = max(n_docs, 1)
     bucket = F.expr(f"CAST(pos * {int(n_buckets)} AS BIGINT) div {n_docs}")
     if n_buckets == 3:
@@ -695,11 +689,8 @@ def surprisal_buckets(
         )
     else:
         name = F.concat(F.lit("b"), F.col("bucket").cast("string"))
-    return attach_cached(
-        ranked.withColumn("bucket", bucket.cast("long")).select(
-            "key", "ppl_q", "bucket", name.alias("bucket_name")
-        ),
-        deps,
+    return ranked.withColumn("bucket", bucket.cast("long")).select(
+        "key", "ppl_q", "bucket", name.alias("bucket_name")
     )
 
 

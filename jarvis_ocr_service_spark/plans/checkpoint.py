@@ -29,6 +29,8 @@ from typing import Callable, List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jarvis_ocr_service_spark.plans.caching import cache_scope, persist
+
 
 def list_input_files(spark: SparkSession, input_path: str) -> List[str]:
     """Deterministic sorted listing of the input table's data files, via the
@@ -206,30 +208,20 @@ def run_checkpointed(
         if max_batches is not None and ran >= max_batches:
             break
 
-        batch_df = spark.read.parquet(*batch_files)
-        # every per-batch persist lands here and is released in the
-        # finally below — an exception mid-batch must not leak cached
-        # frames for the life of the session (r5 ADVICE)
-        _batch_caches: List[DataFrame] = []
-        try:
-            _run_one_batch(
-                spark,
-                batch_df,
-                batch_id,
-                batch_files,
-                output_path,
-                manifest_path,
-                pipeline_fn,
-                dedup_against_committed,
-                digest_table,
-                digest_buckets,
-                committed_so_far,
-                run_id,
-                _batch_caches,
-            )
-        finally:
-            for c in _batch_caches:
-                c.unpersist()
+        _run_one_batch(
+            spark,
+            spark.read.parquet(*batch_files),
+            batch_id,
+            batch_files,
+            output_path,
+            manifest_path,
+            pipeline_fn,
+            dedup_against_committed,
+            digest_table,
+            digest_buckets,
+            committed_so_far,
+            run_id,
+        )
         committed_so_far.add(batch_id)
         ran += 1
 
@@ -242,6 +234,10 @@ def run_checkpointed(
     }
 
 
+# every frame a batch persists (pipeline_fn's included) is released when
+# the batch ends — by exception too, so a failed batch leaks nothing into
+# the session (r5 ADVICE)
+@cache_scope()
 def _run_one_batch(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -255,11 +251,9 @@ def _run_one_batch(
     digest_buckets: int,
     committed_so_far: set,
     run_id: str,
-    _batch_caches: List[DataFrame],
 ) -> None:
     """One batch: optional cross-run dedup, pipeline, idempotent data
-    write, manifest commit. Persisted frames are appended to
-    ``_batch_caches``; the caller releases them in a finally."""
+    write, manifest commit."""
     if dedup_against_committed or digest_table is not None:
         digest = F.md5(F.coalesce(F.col("html"), F.lit(b"")))
         keyed = batch_df.withColumn("_digest", digest)
@@ -290,8 +284,7 @@ def _run_one_batch(
             # fully for the pipeline action, and any read
             # nondeterminism could let the written digests drift
             # from the rows actually processed (ADVICE r4).
-            keyed = keyed.persist()
-            _batch_caches.append(keyed)
+            keyed = persist(keyed)
             (
                 keyed.select("_digest")
                 .withColumn("batch_id", F.lit(batch_id).cast("long"))
@@ -309,8 +302,7 @@ def _run_one_batch(
             # ADVICE-r4 determinism rationale), then persist the
             # survivors so the digest write and the pipeline share one
             # computation. Both caches are batch-bounded.
-            keyed = keyed.persist()
-            _batch_caches.append(keyed)
+            keyed = persist(keyed)
             if committed_ids:
                 seen = spark.read.parquet(
                     *[
@@ -318,9 +310,7 @@ def _run_one_batch(
                         for i in committed_ids
                     ]
                 )
-                keyed = probe_committed_digests(keyed, seen)
-                keyed = keyed.persist()
-                _batch_caches.append(keyed)
+                keyed = persist(probe_committed_digests(keyed, seen))
             # sorted within the file: parquet row-group min/max stats on
             # the digest column stay tight, so future point probes that
             # push predicates prune most of the store

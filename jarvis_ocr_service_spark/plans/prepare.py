@@ -31,6 +31,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from jarvis_ocr_service_spark.plans.caching import persist
+
 
 def prepare_training_data(
     pages: DataFrame,
@@ -90,7 +92,11 @@ def prepare_training_data(
     reference-vs-corpus labels, the literal CCNet wiki-vs-crawl
     design, and keeps the corpus documents scored reference-like
     (pred == score >= 0). Gates run on the post-line-dedup text (the
-    bytes that ship), before decontamination/PII."""
+    bytes that ship), before decontamination/PII.
+
+    The frames this persists (``exact``, the LSH shingles, the gates'
+    counts) belong to the caller's ``cache_scope`` (plans/caching): open
+    one around the consuming action, or call ``release_cached`` after it."""
     from jarvis_ocr_service_spark.functions.dedup import (
         minhash_lsh_pairs,
         text_digest,
@@ -138,10 +144,6 @@ def prepare_training_data(
         .select(*[F.col(f"_row.{c}").alias(c) for c in cols])
     )
 
-    # persisted frames created inside finish's gates, propagated onto the
-    # returned plan so the caller's release_cached() covers them
-    tail_caches: list = []
-
     def finish(corpus: DataFrame) -> DataFrame:
         # line dedup FIRST in the tail: decontamination grams and PII
         # spans should be evaluated on the text that actually ships
@@ -163,12 +165,8 @@ def prepare_training_data(
             from jarvis_ocr_service_spark.functions.vocab import (
                 surprisal_buckets,
             )
-            from jarvis_ocr_service_spark.plans.caching import carried_cached
 
             sb = surprisal_buckets(corpus, text_col="text", key_col="url")
-            # .filter()/.select() strip the cached-deps attribute — hoist
-            # the attachments onto tail_caches BEFORE deriving from sb
-            tail_caches.extend(carried_cached(sb))
             keep = sb.filter(
                 F.col("bucket_name").isin(*keep_ppl_buckets)
             ).select(F.col("key").alias("url"))
@@ -178,7 +176,6 @@ def prepare_training_data(
                 nb_score,
                 nb_train,
             )
-            from jarvis_ocr_service_spark.plans.caching import carried_cached
 
             train = (
                 classifier_reference.select(F.col("text"))
@@ -190,11 +187,8 @@ def prepare_training_data(
                 )
             )
             # nb_train runs its two bounded driver aggregates here (at
-            # plan-build time) and leaves its counts frame persisted —
-            # carried on `weights`; propagate it to the returned plan so
-            # the caller's release_cached() contract covers it
+            # plan-build time) and leaves its counts frame persisted
             weights, params = nb_train(train, "_ref")
-            tail_caches.extend(carried_cached(weights))
             keep = (
                 nb_score(corpus, weights, params, key_col="url")
                 .filter(F.col("pred"))
@@ -222,26 +216,22 @@ def prepare_training_data(
         return corpus
 
     if not near_dup_threshold:
-        from jarvis_ocr_service_spark.plans.caching import attach_cached
-
         if keep_ppl_buckets or classifier_reference is not None:
             # the gates run eager plan-build jobs (counts collects, the
             # rank offsets) plus the final action — persist the shared
             # upstream so extraction runs once, same as the cluster routes
-            exact = exact.persist()
-            tail_caches.append(exact)
-        return attach_cached(finish(exact), tail_caches)
+            exact = persist(exact)
+        return finish(exact)
 
     # near-dup collapse: true connected components over the verified pair
     # graph (dup_clusters) — every transitive chain collapses to its
     # smallest member, exact for clusters of any shape (greedy pair-drop
     # would over-keep on A-B, B-C chains where A,C aren't directly paired)
     from jarvis_ocr_service_spark.functions.dedup import dup_clusters
-    from jarvis_ocr_service_spark.plans.caching import attach_cached, carried_cached
 
     # the cluster routes iterate with actions, and the final anti-join
     # reads `exact` again — persist it so extraction runs once, not per pass
-    exact = exact.persist()
+    exact = persist(exact)
     if near_dup_mode == "buckets":
         from jarvis_ocr_service_spark.functions.dedup import (
             minhash_bucket_clusters,
@@ -251,7 +241,6 @@ def prepare_training_data(
             exact, text_col="text", key_col="url",
             verify_threshold=near_dup_threshold,
         )
-        carried = [exact] + carried_cached(clusters)
     elif near_dup_mode == "pairs":
         # max_bucket: hot-band guard (minhash_lsh_pairs docstring) — without
         # it a heavy shingle atom (templated boilerplate) makes the candidate
@@ -262,7 +251,6 @@ def prepare_training_data(
             verify_threshold=near_dup_threshold, max_bucket=1000,
         )
         clusters = dup_clusters(pairs, key_a="key_a", key_b="key_b")
-        carried = [exact] + carried_cached(pairs) + carried_cached(clusters)
     else:
         raise ValueError(
             f"near_dup_mode must be 'pairs' or 'buckets', got {near_dup_mode!r}"
@@ -271,6 +259,4 @@ def prepare_training_data(
         clusters.filter(F.col("key") != F.col("cluster"))
         .select(F.col("key").alias("url"))
     )
-    return attach_cached(
-        finish(exact.join(losers, "url", "left_anti")), carried + tail_caches,
-    )
+    return finish(exact.join(losers, "url", "left_anti"))

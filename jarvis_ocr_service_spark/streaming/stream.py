@@ -201,6 +201,7 @@ def run_stream_prepare(
     from pyspark.sql import functions as F
 
     from jarvis_ocr_service_spark.functions.textstats import with_text_stats
+    from jarvis_ocr_service_spark.plans.caching import cache_scope, persist
     from jarvis_ocr_service_spark.plans.pipeline import run_pipeline
 
     pages = spark.readStream.schema(PAGES_SCHEMA).parquet(input_path)
@@ -213,6 +214,10 @@ def run_stream_prepare(
         .drop("_digest")
     )
 
+    # every frame a micro-batch persists is released when it ends — by
+    # exception too, so retried micro-batches in a long-lived driver leak
+    # nothing (r5 ADVICE); the callback thread has its own scope
+    @cache_scope()
     def process_batch(batch_df, batch_id: int):
         extracted = run_pipeline(batch_df, pdf_mode=pdf_mode).filter(
             F.col("is_valid")
@@ -274,25 +279,16 @@ def run_stream_prepare(
                 bands_path,
                 mid,
             )
-        # persisted frames land in _caches and are released in the
-        # finally — an exception mid-batch must not leak cached frames
-        # across retried micro-batches in a long-lived driver (r5
-        # ADVICE)
-        _caches = []
-        try:
-            _neardup_batch(
-                spark, scored, batch_id, output_path, bands_path,
-                neardup_num_hashes, neardup_bands, neardup_threshold,
-                neardup_max_bucket, _caches,
-            )
-        finally:
-            for c in _caches:
-                c.unpersist()
+        _neardup_batch(
+            spark, scored, batch_id, output_path, bands_path,
+            neardup_num_hashes, neardup_bands, neardup_threshold,
+            neardup_max_bucket,
+        )
 
     def _neardup_batch(
         spark, scored, batch_id, output_path, bands_path,
         neardup_num_hashes, neardup_bands, neardup_threshold,
-        neardup_max_bucket, _caches,
+        neardup_max_bucket,
     ):
         from jarvis_ocr_service_spark.functions.dedup import (
             _shingled_with_signatures,
@@ -306,16 +302,13 @@ def run_stream_prepare(
         # this the full extraction executed a second time for the data
         # write (found by review; extraction is the dominant per-batch
         # cost)
-        gated = scored.persist()
-        _caches.append(gated)
-        scored = gated
+        scored = persist(scored)
         # the batch's (k, sh, sig) frame is computed ONCE — it is both
         # the left side of the near-dup join and (survivors only) this
         # batch's sidecar contribution
-        batch_sh = _shingled_with_signatures(
-            scored, "text", "url", 3, 2000, neardup_num_hashes
-        ).persist()
-        _caches.append(batch_sh)
+        batch_sh = persist(
+            _shingled_with_signatures(scored, "text", "url", 3, 2000, neardup_num_hashes)
+        )
         if _committed_corpus_exists(spark, bands_path):
             # the committed corpus's signatures come from the sidecar —
             # a columnar (k, sh, sig) scan with band keys derived
@@ -345,8 +338,7 @@ def run_stream_prepare(
             scored = scored.join(dup_urls, "url", "left_anti")
         # persist survivors so the data write and the sidecar write
         # share one extraction pass (write #1 materializes the cache)
-        scored = scored.persist()
-        _caches.append(scored)
+        scored = persist(scored)
         _write_batch_idempotent(scored, output_path, batch_id)
         # sidecar gets ONLY the survivors (rows actually committed),
         # under the same batch-keyed idempotent overwrite as the data

@@ -19,3 +19,10 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def rdds(spark):
+    """The session's persistent-RDD count, as a callable."""
+    jsc = spark.sparkContext._jsc
+    return lambda: jsc.getPersistentRDDs().size()

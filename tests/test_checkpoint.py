@@ -303,3 +303,21 @@ def test_failed_batch_releases_caches(spark, pages_dir, tmp_path):
         )
     after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
     assert after == before
+
+
+def test_caching_pipeline_fn_releases_per_batch(spark, pages_dir, rdds, tmp_path):
+    """A pipeline_fn whose result holds a persisted frame is covered by the
+    batch's scope too: two batches leave nothing behind."""
+    from jarvis_ocr_service_spark.plans.caching import persist
+    from jarvis_ocr_service_spark.plans.pipeline import run_pipeline
+
+    def caching_pipeline(df):
+        return persist(run_pipeline(df))
+
+    before = rdds()
+    stats = run_checkpointed(
+        spark, pages_dir, str(tmp_path / "o"), str(tmp_path / "m"),
+        files_per_batch=3, pipeline_fn=caching_pipeline,
+    )
+    assert stats["ran"] == 2
+    assert rdds() == before

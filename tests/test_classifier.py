@@ -14,7 +14,7 @@ from jarvis_ocr_service_spark.functions.classifier import (
     nb_score,
     nb_train,
 )
-from jarvis_ocr_service_spark.plans.caching import release_cached
+from jarvis_ocr_service_spark.plans.caching import cache_scope
 
 
 def _flog2(x: int) -> int:
@@ -87,22 +87,25 @@ def test_nb_separates_classes(spark):
     assert all(got[k] == labels[k] for k, t in docs if t)
 
 
-def test_nb_score_unseen_tokens(spark):
+def test_nb_score_unseen_tokens(spark, rdds):
     docs, labels = _fixture_docs()
     train = spark.createDataFrame(
         [(k, t, labels[k]) for k, t in docs], "doc_id long, text string, lab boolean"
     )
-    weights, params = nb_train(train, "lab")
-    brute, w, prior, w_unseen = _brute_nb(docs, labels)
-    assert params["prior"] == prior and params["w_unseen"] == w_unseen
     score_docs = [(0, "clean prose zzz_never_seen"), (1, "zzz_a zzz_b")]
     test = spark.createDataFrame(score_docs, "doc_id long, text string")
-    got = {r.key: r.score for r in nb_score(test, weights, params).collect()}
+    before = rdds()
+    with cache_scope():
+        weights, params = nb_train(train, "lab")
+        got = {r.key: r.score for r in nb_score(test, weights, params).collect()}
+        assert rdds() == before + 1  # nb_train's counts frame
+    assert rdds() == before
+    brute, w, prior, w_unseen = _brute_nb(docs, labels)
+    assert params["prior"] == prior and params["w_unseen"] == w_unseen
     assert got == {
         k: prior + sum(w.get(tk, w_unseen) for tk in t.lower().split())
         for k, t in score_docs
     }
-    release_cached(weights)
 
 
 def test_nb_null_label_rejected(spark):
@@ -120,10 +123,10 @@ def test_nb_weights_plan_shape(spark):
     df = spark.createDataFrame(
         [(k, t, labels[k]) for k, t in docs], "doc_id long, text string, lab boolean"
     )
-    weights, params = nb_train(df, "lab")
-    plan = weights._jdf.queryExecution().executedPlan().toString()
+    with cache_scope():
+        weights, params = nb_train(df, "lab")
+        plan = weights._jdf.queryExecution().executedPlan().toString()
+        scored = nb_score(df, weights, params)
+        lplan = scored._jdf.queryExecution().logical().toString()
     assert "partial" in plan.lower(), plan
-    scored = nb_score(df, weights, params)
-    lplan = scored._jdf.queryExecution().logical().toString()
     assert "broadcast" not in lplan.lower(), lplan  # no forced hint
-    release_cached(weights)

@@ -107,6 +107,49 @@ def test_kmeans_offset_envelope_enforced(spark):
         kmeans_assign(df, k=2, iters=1).collect()
 
 
+_NULL_ROWS = [
+    (0, [1.0, None]),    # null element, smallest id: not an init centroid
+    (1, [None, 2.0]),
+    (2, [0.0, 0.0]),
+    (3, [0.0, 0.1]),
+    (4, [5.0, 5.0]),
+    (5, [5.0, 5.1]),
+    (6, None),           # null vector
+]
+
+
+def test_kmeans_null_elements_left_out_of_fit(spark):
+    """A null vector, or one with a null element, takes no part in the fit
+    and gets a null cluster/dist2, one output row per input row (two such
+    vectors used to overflow the centroid sums)."""
+    df = spark.createDataFrame(_NULL_ROWS, "vec_id long, embedding array<double>")
+    got = {r.vec_id: (r.cluster, r.dist2) for r in kmeans_assign(df, k=2, iters=3).collect()}
+    clean = {
+        r.vec_id: (r.cluster, r.dist2)
+        for r in kmeans_assign(df.filter("vec_id BETWEEN 2 AND 5"), k=2, iters=3).collect()
+    }
+    assert sorted(got) == list(range(7))
+    assert {i: got[i] for i in range(2, 6)} == clean
+    assert got[0] == got[1] == got[6] == (None, None)
+
+
+def test_ivf_null_elements_never_candidates(spark):
+    from jarvis_ocr_service_spark.functions.clustering import ivf_topk_quantized
+    from jarvis_ocr_service_spark.functions.simsearch import cosine_topk_quantized
+
+    df = spark.createDataFrame(_NULL_ROWS, "vec_id long, embedding array<double>")
+    q = [0.1, 0.2]
+    got = [
+        tuple(r)
+        for r in ivf_topk_quantized(df, q, k=10, n_clusters=2, iters=2, nprobe=2).collect()
+    ]
+    exp = [
+        tuple(r)
+        for r in cosine_topk_quantized(df.filter("vec_id BETWEEN 2 AND 5"), q, k=10).collect()
+    ]
+    assert got == exp  # full probe over the valid vectors == exact search
+
+
 def test_ivf_full_probe_equals_exact_topk(emb):
     from jarvis_ocr_service_spark.functions.clustering import (
         ivf_topk_quantized,

@@ -6,7 +6,7 @@ from collections import Counter
 from pyspark.sql import functions as F
 
 from jarvis_ocr_service_spark.functions.importance import corpus_divergence
-from jarvis_ocr_service_spark.plans.caching import release_cached
+from jarvis_ocr_service_spark.plans.caching import cache_scope
 
 
 def _flog2(x):
@@ -45,10 +45,8 @@ def _brute_divergence(texts_p, texts_q):
 def _run(spark, texts_p, texts_q):
     dp = spark.createDataFrame([(t,) for t in texts_p], "text string")
     dq = spark.createDataFrame([(t,) for t in texts_q], "text string")
-    out = corpus_divergence(dp, dq)
-    row = out.collect()[0].asDict()
-    release_cached(out)
-    return row
+    with cache_scope():
+        return corpus_divergence(dp, dq).collect()[0].asDict()
 
 
 def test_divergence_brute_parity(spark):

@@ -1,12 +1,14 @@
 """Driver-contract self-check: every queries() entry with an oracle must
 match DuckDB exactly at sf0.01 (row count, column names, values) — this
-mirrors what the driver's CORRECTNESS gate does."""
+mirrors what the driver's CORRECTNESS gate does. Each query runs inside a
+``cache_scope`` and must leave no persisted frame behind."""
 
 import duckdb
 import pandas as pd
 import pytest
 
 import __spark_entry__ as entrymod
+from jarvis_ocr_service_spark.plans.caching import cache_scope
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
@@ -38,9 +40,14 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
 
 
 @pytest.mark.parametrize("name", sorted(entrymod.oracle_sql().keys()))
-def test_query_matches_duckdb_oracle(spark, duck, name):
+def test_query_matches_duckdb_oracle(spark, duck, rdds, name):
     q = entrymod.queries()[name]
-    got = _canon(q(spark, SF_DIR).toPandas())
+    before = rdds()
+    with cache_scope():
+        got = _canon(q(spark, SF_DIR).toPandas())
+    # not above: releasing may also drop an identical plan an earlier
+    # unscoped caller cached
+    assert rdds() <= before, f"{name} left {rdds() - before} persistent RDDs"
     exp = _canon(duck.execute(entrymod.oracle_sql()[name]).df())
     assert list(got.columns) == list(exp.columns), (got.columns, exp.columns)
     assert len(got) == len(exp)

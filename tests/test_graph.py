@@ -48,19 +48,26 @@ def test_deterministic_across_runs(spark):
     assert a == b
 
 
-def test_release_cached_contract(spark):
-    """pagerank carries exactly its final persisted frame; release is
-    counted and idempotent (the attach_cached/release_cached contract)."""
+def test_release_cached_contract(spark, rdds):
+    """pagerank leaves exactly its final checkpoint to the caller: the
+    scope frees it on exit; unscoped, release_cached frees it (counted and
+    idempotent — bench.py's contract)."""
     edges = spark.createDataFrame([(0, 1), (1, 0)], "src long, dst long")
-    from jarvis_ocr_service_spark.plans.caching import (
-        carried_cached,
-        release_cached,
-    )
+    from jarvis_ocr_service_spark.plans.caching import cache_scope, release_cached
 
+    before = rdds()
+    with cache_scope():
+        pagerank_quantized(edges, iters=2).collect()
+        assert rdds() == before + 1
+    assert rdds() == before
+
+    release_cached(None)  # start from an empty session default
+    before = rdds()
     out = pagerank_quantized(edges, iters=2)
     out.collect()
-    assert len(carried_cached(out)) == 1
+    assert rdds() == before + 1
     assert release_cached(out) == 1
+    assert rdds() == before
     assert release_cached(out) == 0  # idempotent
 
 

@@ -134,13 +134,15 @@ def test_no_single_partition_global_window(spark):
     assert "windowspecdefinition(_pid" in plan, plan
 
 
-def test_cumsum_releases_cached(spark):
-    from jarvis_ocr_service_spark.plans.caching import release_cached
+def test_cumsum_releases_cached(spark, rdds):
+    from jarvis_ocr_service_spark.plans.caching import cache_scope
 
     df = spark.createDataFrame([(i, 1) for i in range(10)], "doc_id long, n long")
-    out = with_global_cumsum(df, "doc_id", "n", num_partitions=2)
-    out.collect()
-    assert release_cached(out) == 1
+    before = rdds()
+    with cache_scope():
+        with_global_cumsum(df, "doc_id", "n", num_partitions=2).collect()
+        assert rdds() == before + 1  # the ranged frame
+    assert rdds() == before
 
 
 def test_pack_texts_reassembles_token_stream(spark):
@@ -148,16 +150,15 @@ def test_pack_texts_reassembles_token_stream(spark):
     packs in pack_id order reproduces the doc_id-ordered token stream
     exactly, and every pack but the last carries max_tokens tokens."""
     from jarvis_ocr_service_spark.functions.packing import pack_texts
-    from jarvis_ocr_service_spark.plans.caching import release_cached
+    from jarvis_ocr_service_spark.plans.caching import cache_scope
 
     docs = [
         (i, " ".join(f"d{i}t{j}" for j in range(3 + (i * 7) % 11)))
         for i in range(20)
     ] + [(100, ""), (101, None)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    out = pack_texts(df, 16)
-    rows = sorted(out.collect(), key=lambda r: r.pack_id)
-    release_cached(out)
+    with cache_scope():
+        rows = sorted(pack_texts(df, 16).collect(), key=lambda r: r.pack_id)
     stream = []
     for _, t in sorted(docs):
         stream.extend((t or "").split())
@@ -172,14 +173,13 @@ def test_pack_texts_reassembles_token_stream(spark):
 
 def test_pack_texts_single_doc_straddle(spark):
     from jarvis_ocr_service_spark.functions.packing import pack_texts
-    from jarvis_ocr_service_spark.plans.caching import release_cached
+    from jarvis_ocr_service_spark.plans.caching import cache_scope
 
     df = spark.createDataFrame(
         [(0, " ".join(f"w{j}" for j in range(10)))], "doc_id long, text string"
     )
-    out = pack_texts(df, 4)
-    rows = {r.pack_id: r for r in out.collect()}
-    release_cached(out)
+    with cache_scope():
+        rows = {r.pack_id: r for r in pack_texts(df, 4).collect()}
     assert [rows[i].text for i in range(3)] == [
         "w0 w1 w2 w3", "w4 w5 w6 w7", "w8 w9",
     ]

@@ -1,7 +1,9 @@
 """Composed training-data preparation pipeline."""
 
+import pytest
 from pyspark.sql import functions as F
 
+from jarvis_ocr_service_spark.plans.caching import cache_scope, release_cached
 from jarvis_ocr_service_spark.plans.prepare import prepare_training_data
 from jarvis_ocr_service_spark.sources.pages import synthesize_pages
 
@@ -34,25 +36,57 @@ def test_prepare_without_near_dup_stage(spark):
     assert set(corpus.columns) == {"url", "text", "n_tokens", "lang_guess", "quality"}
 
 
-def test_prepare_releases_cached_blocks(spark, tmp_path):
-    """Cache hygiene: after the consuming action + release_cached, the
-    LSH plan's persisted intermediates must not linger in the session
-    (repeated prepare runs would otherwise accumulate cached blocks)."""
-    from jarvis_ocr_service_spark.plans.caching import carried_cached, release_cached
-    from jarvis_ocr_service_spark.plans.prepare import prepare_training_data
-    from jarvis_ocr_service_spark.sources.pages import synthesize_pages
+def test_prepare_releases_cached_blocks(spark, rdds, tmp_path):
+    """Cache hygiene: when the action's scope closes, the LSH plan's
+    persisted intermediates must not linger in the session (repeated
+    prepare runs would otherwise accumulate cached blocks)."""
+    before = rdds()
+    with cache_scope():
+        corpus = prepare_training_data(synthesize_pages(spark, 100, num_partitions=4))
+        corpus.write.mode("overwrite").parquet(str(tmp_path / "corpus"))
+        assert rdds() > before  # it really was persisted during the action
+    assert rdds() == before  # all released
 
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
+
+def test_prepare_unscoped_release_cached(spark, rdds, tmp_path):
+    """perfbench's contract: with no scope open, release_cached after the
+    write frees every frame prepare persisted."""
+    release_cached(None)  # start from an empty session default
+    before = rdds()
     corpus = prepare_training_data(synthesize_pages(spark, 100, num_partitions=4))
     corpus.write.mode("overwrite").parquet(str(tmp_path / "corpus"))
-    assert carried_cached(corpus)  # the LSH persist was attached
-    during = jsc.getPersistentRDDs().size()
-    assert during > before  # it really was persisted during the action
-    n = release_cached(corpus)
-    assert n >= 1
-    assert jsc.getPersistentRDDs().size() == before  # all released
+    assert rdds() > before
+    assert release_cached(corpus) >= 1
+    assert rdds() == before
     assert release_cached(corpus) == 0  # idempotent
+
+
+def test_prepare_failure_mid_plan_leaks_nothing(spark, rdds, monkeypatch):
+    """An exception after the gates have persisted and materialized their
+    frames (surprisal counts, the rank frame, NB counts, `exact`) leaves
+    the count where it was once the scope exits."""
+    from jarvis_ocr_service_spark.functions import classifier
+
+    held = []
+
+    def boom(*args, **kwargs):
+        held.append(rdds())
+        raise RuntimeError("injected mid-plan failure")
+
+    monkeypatch.setattr(classifier, "nb_score", boom)
+    ref = spark.createDataFrame(
+        [("the quick brown fox jumps over the lazy dog",)], "text string"
+    )
+    before = rdds()
+    with pytest.raises(RuntimeError, match="injected"), cache_scope():
+        prepare_training_data(
+            synthesize_pages(spark, 60, num_partitions=2),
+            near_dup_threshold=None,
+            keep_ppl_buckets=("head", "middle"),
+            classifier_reference=ref,
+        )
+    assert held and held[0] >= before + 3  # the failure really came mid-plan
+    assert rdds() == before
 
 
 def test_prepare_hygiene_stages(spark):
@@ -160,8 +194,6 @@ def test_prepare_bucket_mode_matches_pair_mode_on_synthetic(spark):
 
 
 def test_prepare_rejects_unknown_near_dup_mode(spark):
-    import pytest
-
     with pytest.raises(ValueError, match="near_dup_mode"):
         prepare_training_data(
             synthesize_pages(spark, 10), near_dup_mode="nope"
@@ -172,32 +204,25 @@ def test_prepare_ppl_bucket_gate(spark):
     """keep_ppl_buckets keeps exactly the surprisal_buckets head/middle
     tertiles of the surviving corpus (the CCNet keep-set)."""
     from jarvis_ocr_service_spark.functions.vocab import surprisal_buckets
-    from jarvis_ocr_service_spark.plans.caching import release_cached
 
     pages = synthesize_pages(spark, 60, num_partitions=2)
-    base = prepare_training_data(pages, near_dup_threshold=None)
-    sb = surprisal_buckets(base, text_col="text", key_col="url")
-    expected_keep = {
-        r.key for r in sb.filter("bucket_name != 'tail'").collect()
-    }
-    gated = prepare_training_data(
-        pages, near_dup_threshold=None, keep_ppl_buckets=("head", "middle")
-    )
-    got = {r.url for r in gated.collect()}
+    with cache_scope():
+        base = prepare_training_data(pages, near_dup_threshold=None)
+        sb = surprisal_buckets(base, text_col="text", key_col="url")
+        expected_keep = {
+            r.key for r in sb.filter("bucket_name != 'tail'").collect()
+        }
+        gated = prepare_training_data(
+            pages, near_dup_threshold=None, keep_ppl_buckets=("head", "middle")
+        )
+        got = {r.url for r in gated.collect()}
+        n_base = base.count()
     assert got == expected_keep
-    n_base = base.count()
     # equal-population tertiles: the gate keeps ~2/3
     assert abs(len(got) - 2 * n_base / 3) <= 2
-    # suite cache hygiene: release the helper frames too (sb carries the
-    # surprisal counts + global_rank ranged frame; base carries `exact`)
-    release_cached(sb)
-    release_cached(base)
-    release_cached(gated)
 
 
 def test_prepare_rejects_unknown_ppl_bucket(spark):
-    import pytest
-
     with pytest.raises(ValueError, match="keep_ppl_buckets"):
         prepare_training_data(
             synthesize_pages(spark, 10),
@@ -211,59 +236,51 @@ def test_prepare_classifier_gate(spark):
     reference-like documents; a reference matching the corpus's own
     common vocabulary keeps plenty, and dropped docs score negative."""
     from jarvis_ocr_service_spark.functions.classifier import nb_score, nb_train
-    from jarvis_ocr_service_spark.plans.caching import release_cached
 
     pages = synthesize_pages(spark, 60, num_partitions=2)
-    base = prepare_training_data(pages, near_dup_threshold=None)
-    # reference corpus: the first 10 surviving docs verbatim
-    ref_texts = [r.text for r in base.orderBy("url").limit(10).collect()]
-    ref = spark.createDataFrame([(t,) for t in ref_texts], "text string")
+    with cache_scope():
+        base = prepare_training_data(pages, near_dup_threshold=None)
+        # reference corpus: the first 10 surviving docs verbatim
+        ref_texts = [r.text for r in base.orderBy("url").limit(10).collect()]
+        ref = spark.createDataFrame([(t,) for t in ref_texts], "text string")
 
-    gated = prepare_training_data(
-        pages, near_dup_threshold=None, classifier_reference=ref
-    )
-    got = {r.url for r in gated.collect()}
-    # mirror the gate by hand on the base corpus
-    from pyspark.sql import functions as F
-
-    train = ref.withColumn("_ref", F.lit(True)).unionByName(
-        base.select("text").withColumn("_ref", F.lit(False))
-    )
-    weights, params = nb_train(train, "_ref")
-    expected = {
-        r.key
-        for r in nb_score(base, weights, params, key_col="url")
-        .filter("pred")
-        .collect()
-    }
-    release_cached(weights)
+        gated = prepare_training_data(
+            pages, near_dup_threshold=None, classifier_reference=ref
+        )
+        got = {r.url for r in gated.collect()}
+        # mirror the gate by hand on the base corpus
+        train = ref.withColumn("_ref", F.lit(True)).unionByName(
+            base.select("text").withColumn("_ref", F.lit(False))
+        )
+        weights, params = nb_train(train, "_ref")
+        expected = {
+            r.key
+            for r in nb_score(base, weights, params, key_col="url")
+            .filter("pred")
+            .collect()
+        }
+        n_base = base.count()
     assert got == expected
-    assert 0 < len(got) < base.count()  # the gate bites both ways
-    release_cached(base)
-    release_cached(gated)
+    assert 0 < len(got) < n_base  # the gate bites both ways
 
 
-def test_prepare_gates_release_cached_blocks(spark, tmp_path):
+def test_prepare_gates_release_cached_blocks(spark, rdds, tmp_path):
     """The LM-quality gates' persisted frames (surprisal counts, the
-    global-rank ranged frame, NB counts, the gated `exact`) all ride
-    the returned plan's release contract — zero retained blocks after
-    release_cached (the review-pass leak fix)."""
-    from jarvis_ocr_service_spark.plans.caching import carried_cached, release_cached
-    from jarvis_ocr_service_spark.sources.pages import synthesize_pages
-
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
+    global-rank ranged frame, NB counts, the gated `exact`) all belong to
+    the action's scope — zero retained blocks once it closes (the
+    review-pass leak fix)."""
     pages = synthesize_pages(spark, 60, num_partitions=2)
     ref = spark.createDataFrame(
         [("the quick brown fox jumps over the lazy dog",)], "text string"
     )
-    corpus = prepare_training_data(
-        pages,
-        near_dup_threshold=None,
-        keep_ppl_buckets=("head", "middle"),
-        classifier_reference=ref,
-    )
-    corpus.write.mode("overwrite").parquet(str(tmp_path / "gated"))
-    assert len(carried_cached(corpus)) >= 3  # surprisal + rank + nb + exact
-    assert release_cached(corpus) >= 3
-    assert jsc.getPersistentRDDs().size() == before
+    before = rdds()
+    with cache_scope():
+        corpus = prepare_training_data(
+            pages,
+            near_dup_threshold=None,
+            keep_ppl_buckets=("head", "middle"),
+            classifier_reference=ref,
+        )
+        corpus.write.mode("overwrite").parquet(str(tmp_path / "gated"))
+        assert rdds() >= before + 3  # surprisal + rank + nb + exact
+    assert rdds() == before

@@ -59,17 +59,17 @@ def test_corpus_report_and_histogram(spark):
     assert hist == {("en", 3): 1, ("en", 9): 1, ("fr", 2): 1, ("fr", 3): 2}
 
 
-def test_attribute_table_composes_module_outputs(spark):
+def test_attribute_table_composes_module_outputs(spark, rdds):
     """Each attribute column equals its source module's standalone
     output — the table is assembly, never a fork; surprisal's counts
-    cache rides the release contract."""
+    cache belongs to the caller's scope."""
     from pyspark.sql import functions as F
 
     from jarvis_ocr_service_spark.functions.report import attribute_table
     from jarvis_ocr_service_spark.functions.textstats import with_text_stats
     from jarvis_ocr_service_spark.functions.vocab import unigram_surprisal
     from jarvis_ocr_service_spark.functions.wordfilter import wordlist_flags
-    from jarvis_ocr_service_spark.plans.caching import carried_cached, release_cached
+    from jarvis_ocr_service_spark.plans.caching import cache_scope
 
     docs = [
         (0, "the quick stream of data flows fast"),
@@ -79,8 +79,12 @@ def test_attribute_table_composes_module_outputs(spark):
         (4, "plain words without any flags here at all"),
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    at = attribute_table(df, ["vector", "stream", "nosuchword"])
-    rows = {r.key: r for r in at.collect()}
+    before = rdds()
+    with cache_scope():
+        at = attribute_table(df, ["vector", "stream", "nosuchword"])
+        rows = {r.key: r for r in at.collect()}
+        assert rdds() > before  # the surprisal counts cache
+    assert rdds() == before
     assert set(rows) == {0, 1, 2, 3, 4}
 
     st = {
@@ -91,9 +95,8 @@ def test_attribute_table_composes_module_outputs(spark):
         ).collect()
     }
     wl = {r.key: r.n_hits for r in wordlist_flags(df, ["vector", "stream", "nosuchword"]).collect()}
-    sur = unigram_surprisal(df)
-    sv = {r.key: r.surprisal for r in sur.collect()}
-    release_cached(sur)
+    with cache_scope():
+        sv = {r.key: r.surprisal for r in unigram_surprisal(df).collect()}
     for k in rows:
         assert rows[k].n_tokens == st[k].n_tokens
         assert rows[k].lang_guess == st[k].lang_guess
@@ -101,5 +104,3 @@ def test_attribute_table_composes_module_outputs(spark):
         assert rows[k].n_banned == wl[k]
         assert rows[k].surprisal == sv[k]
     assert rows[1].n_banned == 2  # distinct blocklist words, repeats once
-    assert carried_cached(at)  # the surprisal counts cache is attached
-    assert release_cached(at) >= 1

@@ -472,8 +472,9 @@ def test_pair_cosine_arrow_bit_identical(spark):
 
 def test_embedding_near_dup_pairs_unpersists_on_failed_build(spark, monkeypatch):
     """A plan build that throws after the staged frame is persisted must
-    release it: nothing else holds a handle to that frame."""
+    release it: the caller's scope does, on the way out."""
     from jarvis_ocr_service_spark.functions import simsearch
+    from jarvis_ocr_service_spark.plans.caching import cache_scope
 
     df = spark.createDataFrame(
         [(i, [float(i), 1.0, 0.5]) for i in range(8)],
@@ -493,7 +494,7 @@ def test_embedding_near_dup_pairs_unpersists_on_failed_build(spark, monkeypatch)
     monkeypatch.setattr(frame_cls, "persist", spy)
     monkeypatch.setattr(simsearch, "pair_cosine_arrow", boom)
     before = spark.sparkContext._jsc.getPersistentRDDs().size()
-    with pytest.raises(RuntimeError, match="injected"):
+    with pytest.raises(RuntimeError, match="injected"), cache_scope():
         simsearch.embedding_near_dup_pairs(
             df, threshold=0.9, n_planes=4, bands=2, dim=3
         )
