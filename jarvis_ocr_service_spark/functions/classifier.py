@@ -30,7 +30,7 @@ overflow envelope to manage — valid unchanged at 10^12-token corpora
 noise floor; the ratio structure is exact).
 
 Scale shape: ONE vocabulary-bounded shuffle for the per-class counts
-(map-side partial agg; the counts frame is persisted so the scalar
+(map-side partial agg; the counts frame is checkpointed so the scalar
 totals and the weights table share one computation), the weights join
 the token stream UNHINTED (the decontaminate rule — a corpus-bounded
 vocab can exceed broadcast budgets at 10^8+ distinct tokens; AQE
@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 
 from jarvis_ocr_service_spark.functions.report import size_bucket_col
 from jarvis_ocr_service_spark.functions.tokens import py_tokens_col as _tokens
-from jarvis_ocr_service_spark.plans.caching import persist
+from jarvis_ocr_service_spark.plans.caching import local_checkpoint
 
 
 def nb_train(
@@ -83,7 +83,7 @@ def nb_train(
     toks = df.select(
         lab.alias("_y"), F.explode(_tokens(F.col(text_col))).alias("token")
     )
-    counts = persist(
+    counts = local_checkpoint(
         toks.groupBy("token").agg(
             F.sum(F.when(F.col("_y"), 1).otherwise(0)).cast("long").alias("cpos"),
             F.sum(F.when(F.col("_y"), 0).otherwise(1)).cast("long").alias("cneg"),
@@ -173,7 +173,7 @@ def nb_quality_classifier(
 ) -> DataFrame:
     """Train-and-score convenience over one corpus (the CCNet shape:
     label a slice you trust — e.g. wiki-like sources — and score
-    everything). Returns ``(key, score, pred)``; the persisted training
+    everything). Returns ``(key, score, pred)``; the checkpointed training
     counts belong to the caller's ``cache_scope`` (plans/caching)."""
     weights, params = nb_train(df, label_col, text_col=text_col)
     return nb_score(df, weights, params, text_col=text_col, key_col=key_col)

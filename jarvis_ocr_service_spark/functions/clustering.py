@@ -338,6 +338,15 @@ def semdedup(
     member = assign.join(vq, F.col(id_col) == F.col("_k")).select(
         F.col(id_col).alias("_id"), "cluster", "_vq"
     )
+    if max_cluster:
+        # over-cap clusters never reach the grouped stage, whose pandas
+        # frame holds a whole cluster: a width aggregate drops them first
+        narrow = (
+            member.groupBy("cluster")
+            .agg(F.count(F.lit(1)).alias("_width"))
+            .filter(F.col("_width") <= int(max_cluster))
+        )
+        member = member.join(narrow, "cluster", "left_semi")
     # Within-cluster pruning as ONE grouped Arrow stage (applyInPandas):
     # each cluster's (id, vq) rows ship once (~0.5 KB/vector) and the
     # existential keep-lowest-id rule evaluates as blockwise exact-int64
@@ -361,7 +370,6 @@ def semdedup(
         [T.StructField("_dropped", id_field.dataType, id_field.nullable)]
     )
     thr = float(threshold)
-    cap = int(max_cluster)
     BLOCK = 2048  # bounds the per-task Gram block to O(BLOCK^2) doubles
 
     def _scorable(v) -> bool:
@@ -372,8 +380,6 @@ def semdedup(
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
         """-> the ids this cluster drops."""
         none = pd.DataFrame({"_dropped": pdf["_id"].iloc[:0]})
-        if cap and len(pdf) > cap:
-            return none  # wide cluster: excluded from pair generation
         pdf = pdf.sort_values("_id", kind="mergesort").reset_index(drop=True)
         vi = np.nonzero(pdf["_vq"].map(_scorable).to_numpy(dtype=bool))[0]
         n = len(vi)

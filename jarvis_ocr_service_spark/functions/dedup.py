@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from jarvis_ocr_service_spark.plans.caching import persist, release
+from jarvis_ocr_service_spark.plans.caching import local_checkpoint, persist, release
 
 
 # ---------------------------------------------------------------------------
@@ -620,7 +620,7 @@ def minhash_bucket_clusters(
             "key_a", "key_b"
         )
     try:
-        # dup_clusters fully materializes its labels (per-round counts),
+        # dup_clusters checkpoints its pair list before anything else,
         # so the shingle cache can be released as soon as it returns
         clusters = dup_clusters(edges, key_a="key_a", key_b="key_b")
     finally:
@@ -823,15 +823,21 @@ def dup_clusters(
     but A,C not directly paired) the whole chain must collapse to A.
 
     Scale shape: the pair table is the *output* of blocked near-dup — tiny
-    relative to the corpus. Iterative min-label propagation; each round is
-    one join (edges x labels) + a min-aggregate, and rounds needed = graph
-    diameter (near-dup clusters are shallow). Hard error if the ``max_iters``
-    safety cap trips — never a silently-wrong labeling.
+    relative to the corpus. It is checkpointed once (the upstream plan runs
+    once and no later round carries it), then iterative min-label
+    propagation: each round is one join (edges x labels) + a min-aggregate
+    into a fresh local checkpoint, so every round's plan has constant size,
+    and rounds needed = graph diameter (near-dup clusters are shallow).
+    Only the final round's checkpoint outlives the call, owned by the
+    caller's ``cache_scope``. Hard error if the ``max_iters`` safety cap
+    trips — never a silently-wrong labeling.
 
     Reference parity note: the reference service has no dedup at all; this
     is part of the training-data layer (SURVEY §2 'beyond the reference').
     """
-    e = pairs.select(F.col(key_a).alias("src"), F.col(key_b).alias("dst"))
+    e = local_checkpoint(
+        pairs.select(F.col(key_a).alias("src"), F.col(key_b).alias("dst"))
+    )
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -839,20 +845,18 @@ def dup_clusters(
     )
     # Self-loops make one join+min compute min(own label, neighbor labels),
     # so `labels` appears exactly ONCE per round — without them the
-    # least(label, neighbor_min) form references labels twice per round
-    # and the logical plan doubles each iteration (analyzer OOM by ~12
-    # rounds; each round is persisted+materialized, so lineage growth is
-    # the only thing at stake, and it must stay linear).
-    edges = persist(
+    # least(label, neighbor_min) form references labels twice per round.
+    edges = local_checkpoint(
         e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .unionByName(
             nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
         )
     )
-    labels = persist(nodes.select("node", F.col("node").alias("label")))
+    labels = local_checkpoint(nodes.select("node", F.col("node").alias("label")))
+    release(e)
     converged = False
     for _ in range(max_iters):
-        new_labels = persist(
+        new_labels = local_checkpoint(
             edges.join(
                 labels.select(
                     F.col("node").alias("dst"), F.col("label").alias("nl")
@@ -863,18 +867,13 @@ def dup_clusters(
             .agg(F.min("nl").alias("label"))
             .withColumnRenamed("src", "node")
         )
-        changed = (
+        done = (
             new_labels.join(
                 labels.select("node", F.col("label").alias("old")), "node"
             )
             .filter(F.col("label") != F.col("old"))
+            .isEmpty()
         )
-        # count() (not isEmpty) fully materializes every partition of the
-        # join and therefore of new_labels' persist BEFORE the old cache is
-        # dropped — isEmpty is take(1)-style and would leave uncached
-        # partitions recomputing through the whole prior-round lineage
-        # after the unpersist (quadratic per-round work on deep clusters).
-        done = changed.count() == 0
         release(labels)
         labels = new_labels
         if done:

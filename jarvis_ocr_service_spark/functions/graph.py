@@ -111,15 +111,13 @@ def pagerank_quantized(
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).distinct()
-    nodes = persist(
+    nodes = local_checkpoint(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
     )
     if n_nodes is None:
         n_nodes = nodes.count()
-    else:
-        nodes.count()  # materialize the cache either way
     if n_nodes == 0:
         # empty edge table -> empty ranking (not a ZeroDivisionError);
         # a crawl slice with no qualifying links is a normal input
@@ -153,22 +151,20 @@ def pagerank_quantized(
     # recompute quadratically under the lazy chain)
     deep = until_fixpoint or dangling == "renormalize" or rounds > 8
 
-    e_deg = persist(
+    # the shallow chain reads e_deg from its one job only: a lazy persist
+    e_deg = (local_checkpoint if deep else persist)(
         e.join(e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), "src")
     )
-    if deep:
-        e_deg.count()
 
     dangling_nodes = None
     if dangling == "renormalize":
-        dangling_nodes = persist(
+        dangling_nodes = local_checkpoint(
             nodes.join(
                 e.select("src").distinct().withColumnRenamed("src", "node"),
                 "node",
                 "left_anti",
             )
         )
-        dangling_nodes.count()
 
     # eager localCheckpoint: materializes AND cuts lineage (module
     # docstring; at cluster scale prefer sc.setCheckpointDir + .checkpoint())

@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 from jarvis_ocr_service_spark.functions.report import size_bucket_col
 from jarvis_ocr_service_spark.functions.sampling import _shifted
 from jarvis_ocr_service_spark.functions.tokens import py_tokens_col
-from jarvis_ocr_service_spark.plans.caching import persist
+from jarvis_ocr_service_spark.plans.caching import local_checkpoint
 
 
 def _gram_stream(
@@ -181,7 +181,7 @@ def corpus_divergence(
     tagged = tok_p.withColumn("_p", F.lit(1)).withColumn("_q", F.lit(0)).unionByName(
         tok_q.withColumn("_p", F.lit(0)).withColumn("_q", F.lit(1))
     )
-    counts = persist(
+    counts = local_checkpoint(
         tagged.groupBy("token").agg(
             F.sum("_p").cast("long").alias("np"),
             F.sum("_q").cast("long").alias("nq"),

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from jarvis_ocr_service_spark.plans.caching import persist
+from jarvis_ocr_service_spark.plans.caching import local_checkpoint
 
 
 def global_rank(
@@ -51,7 +51,7 @@ def global_rank(
         [order_cols] if isinstance(order_cols, str) else list(order_cols)
     )]
     p = num_partitions or spark.sparkContext.defaultParallelism
-    ranged = persist(
+    ranged = local_checkpoint(
         df.repartitionByRange(p, *cols).withColumn("_pid", F.spark_partition_id())
     )
     counts = {
@@ -96,7 +96,7 @@ def with_global_cumsum(
     ranged = df.repartitionByRange(
         p, *[F.col(c) for c in order_cols]
     ).withColumn("_pid", F.spark_partition_id())
-    ranged = persist(ranged)  # totals + cumsum both read it
+    ranged = local_checkpoint(ranged)  # totals + cumsum both read it
     totals = {
         r._pid: r.total
         for r in ranged.groupBy("_pid")
@@ -229,7 +229,7 @@ def pack_texts(
     to tokenization (compose with bpe_encode_ids downstream).
 
     Plan: tokenize ONCE — the token arrays ride THROUGH
-    :func:`pack_chunks`' persisted ranged frame (extra columns pass
+    :func:`pack_chunks`' checkpointed ranged frame (extra columns pass
     through the two-phase prefix sum, so no re-tokenize and no key
     join), chunks slice their tokens JVM-side, then ONE pack_id
     shuffle whose per-group payload is bounded by ``max_tokens``

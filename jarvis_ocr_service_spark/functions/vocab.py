@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from jarvis_ocr_service_spark.functions.tokens import py_tokens_col as _tokens
-from jarvis_ocr_service_spark.plans.caching import local_checkpoint, persist, release
+from jarvis_ocr_service_spark.plans.caching import local_checkpoint, release
 
 
 def token_counts(
@@ -466,7 +466,7 @@ def unigram_surprisal(
     score. Zero-token documents report (0, 0).
 
     Plan: explode -> ONE partial-agg shuffle for the vocab counts
-    (Zipf-absorbed map-side; the counts frame is PERSISTED so the
+    (Zipf-absorbed map-side; the counts frame is CHECKPOINTED so the
     scalar-total collect and the surprisal join share one computation),
     then a join of the per-token surprisal table onto the token stream
     — UNHINTED: the vocabulary is corpus-bounded (Heaps' law — 10^8+
@@ -481,7 +481,9 @@ def unigram_surprisal(
         F.col(key_col).alias("key"),
         F.explode(_tokens(F.col(text_col))).alias("token"),
     )
-    counts = persist(toks.groupBy("token").agg(F.count(F.lit(1)).alias("n")))
+    counts = local_checkpoint(
+        toks.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
+    )
     total = counts.agg(F.sum("n")).collect()[0][0] or 0
     sur = counts.select(
         "token",
@@ -557,7 +559,7 @@ def bigram_surprisal(
         F.explode(F.arrays_zip(prev.alias("a"), toks.alias("b"))).alias("p"),
     ).select("key", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
 
-    uni = persist(token_counts(df, text_col))
+    uni = local_checkpoint(token_counts(df, text_col))
     total = uni.agg(F.sum("n")).collect()[0][0] or 0
     big = token_pair_counts(df, text_col, min_count=min_bigram_count).select(
         F.col("tok_a").alias("a"), F.col("tok_b").alias("b"),

@@ -12,6 +12,19 @@ by exception too. Action sites open one scope per action: the CLI's
 micro-batch. The current scope lives in a ``contextvars.ContextVar``, so
 every thread (a ``foreachBatch`` callback thread, say) has its own.
 
+Which of the two a builder uses follows one rule. A frame the builder
+itself reads with an action (a scalar collect, a convergence test, a
+gate's keep-set) is made with :func:`local_checkpoint`: it is materialized
+once and every later plan reads it as a one-leaf ``LogicalRDD``, so
+neither the following actions nor AQE's per-stage re-planning carry the
+upstream plan again. :func:`persist` stays only for frames that just the
+caller's lazy action reads; it keeps the full logical plan under the
+cached frame, which costs nothing when one action plans it once. The
+trade-off: a local checkpoint lives in executor storage and cannot be
+recomputed after an executor is lost (the pagerank, BPE and k-means
+rounds accept that already); the reliable ``checkpoint()`` needs a
+checkpoint directory.
+
 Outside any scope, frames land in a session-wide default scope and live
 until :func:`release_cached` — the contract of callers that compose plans
 by hand and release after their action (``bench.py``, perfbench).

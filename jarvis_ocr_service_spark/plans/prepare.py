@@ -22,6 +22,15 @@ shuffle + anti-join over the surviving set; PII redaction is a codegen
 projection and decontamination an AQE-decided anti-join — the hygiene
 tail runs AFTER dedup so the expensive text passes touch the smallest
 surviving set.
+
+Materialization boundaries (plans/caching's persist-vs-checkpoint rule):
+the builder runs jobs of its own only when a stage reads a frame with an
+action, and each such frame is a local checkpoint, so every later plan
+reads it as one leaf. With near-dup collapse, ``exact`` is checkpointed
+(the cluster round-trips and the final anti-join all read it); with the
+LM-quality gates, the post-line-dedup corpus is checkpointed once (their
+keep-set collects and the returned plan read it). A recipe with neither
+builds no job and returns a fully lazy plan.
 """
 
 from __future__ import annotations
@@ -31,7 +40,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from jarvis_ocr_service_spark.plans.caching import persist
+from jarvis_ocr_service_spark.plans.caching import local_checkpoint
 
 
 def prepare_training_data(
@@ -94,9 +103,10 @@ def prepare_training_data(
     (pred == score >= 0). Gates run on the post-line-dedup text (the
     bytes that ship), before decontamination/PII.
 
-    The frames this persists (``exact``, the LSH shingles, the gates'
-    counts) belong to the caller's ``cache_scope`` (plans/caching): open
-    one around the consuming action, or call ``release_cached`` after it."""
+    The frames this persists or checkpoints (``exact``, the gates' input,
+    the LSH shingles, the gates' counts) belong to the caller's
+    ``cache_scope`` (plans/caching): open one around the consuming action,
+    or call ``release_cached`` after it."""
     from jarvis_ocr_service_spark.functions.dedup import (
         minhash_lsh_pairs,
         text_digest,
@@ -115,6 +125,11 @@ def prepare_training_data(
                 f"unknown keep_ppl_buckets {sorted(bad)} — "
                 "valid names: head, middle, tail"
             )
+    # checked before any job runs: the near-dup route materializes `exact`
+    if near_dup_mode not in ("pairs", "buckets"):
+        raise ValueError(
+            f"near_dup_mode must be 'pairs' or 'buckets', got {near_dup_mode!r}"
+        )
 
     extracted = run_pipeline(pages, pdf_mode=pdf_mode).filter(F.col("is_valid"))
 
@@ -160,7 +175,11 @@ def prepare_training_data(
                 .withColumnRenamed("_ld", "text")
             )
         # CCNet-style LM-quality gates on the shipping text: perplexity
-        # tertile keep-set, then the reference-trained NB classifier
+        # tertile keep-set, then the reference-trained NB classifier. Both
+        # read the corpus with actions at plan-build time, so it is
+        # materialized once here and every gate plan starts from one leaf.
+        if keep_ppl_buckets or classifier_reference is not None:
+            corpus = local_checkpoint(corpus)
         if keep_ppl_buckets:
             from jarvis_ocr_service_spark.functions.vocab import (
                 surprisal_buckets,
@@ -187,7 +206,7 @@ def prepare_training_data(
                 )
             )
             # nb_train runs its two bounded driver aggregates here (at
-            # plan-build time) and leaves its counts frame persisted
+            # plan-build time) and leaves its counts frame checkpointed
             weights, params = nb_train(train, "_ref")
             keep = (
                 nb_score(corpus, weights, params, key_col="url")
@@ -216,11 +235,9 @@ def prepare_training_data(
         return corpus
 
     if not near_dup_threshold:
-        if keep_ppl_buckets or classifier_reference is not None:
-            # the gates run eager plan-build jobs (counts collects, the
-            # rank offsets) plus the final action — persist the shared
-            # upstream so extraction runs once, same as the cluster routes
-            exact = persist(exact)
+        # the gate input checkpoint in `finish` is this route's one
+        # materialization (line dedup's reads of `exact` inside it share
+        # one extraction through exchange reuse); ungated stays lazy
         return finish(exact)
 
     # near-dup collapse: true connected components over the verified pair
@@ -230,8 +247,8 @@ def prepare_training_data(
     from jarvis_ocr_service_spark.functions.dedup import dup_clusters
 
     # the cluster routes iterate with actions, and the final anti-join
-    # reads `exact` again — persist it so extraction runs once, not per pass
-    exact = persist(exact)
+    # reads `exact` again — materialize it so extraction runs once
+    exact = local_checkpoint(exact)
     if near_dup_mode == "buckets":
         from jarvis_ocr_service_spark.functions.dedup import (
             minhash_bucket_clusters,
@@ -241,7 +258,7 @@ def prepare_training_data(
             exact, text_col="text", key_col="url",
             verify_threshold=near_dup_threshold,
         )
-    elif near_dup_mode == "pairs":
+    else:
         # max_bucket: hot-band guard (minhash_lsh_pairs docstring) — without
         # it a heavy shingle atom (templated boilerplate) makes the candidate
         # join quadratic; 1000 keeps any single bucket's pair contribution
@@ -251,10 +268,6 @@ def prepare_training_data(
             verify_threshold=near_dup_threshold, max_bucket=1000,
         )
         clusters = dup_clusters(pairs, key_a="key_a", key_b="key_b")
-    else:
-        raise ValueError(
-            f"near_dup_mode must be 'pairs' or 'buckets', got {near_dup_mode!r}"
-        )
     losers = (
         clusters.filter(F.col("key") != F.col("cluster"))
         .select(F.col("key").alias("url"))

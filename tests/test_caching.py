@@ -10,7 +10,9 @@ from pathlib import Path
 
 import pytest
 
+from jarvis_ocr_service_spark.functions.dedup import dup_clusters
 from jarvis_ocr_service_spark.functions.graph import pagerank_quantized
+from jarvis_ocr_service_spark.functions.packing import global_rank
 from jarvis_ocr_service_spark.functions.vocab import bpe_merges
 from jarvis_ocr_service_spark.plans.caching import (
     cache_scope,
@@ -103,9 +105,10 @@ def test_release_cached_outside_a_scope_frees_the_session_default(spark, rdds):
 
 
 def test_iterative_builders_keep_at_most_one_round(spark, rdds):
-    """The per-round checkpoints of bpe_merges and pagerank (renormalize
-    mode checkpoints every round) are freed as the next round lands: while
-    the scope is open each holds at most one, and after it nothing."""
+    """The per-round checkpoints of bpe_merges, pagerank (renormalize mode
+    checkpoints every round) and dup_clusters, and global_rank's ranged
+    checkpoint, are freed as the next one lands: while the scope is open
+    each builder holds at most one after it returns, and after it nothing."""
     docs = spark.createDataFrame(
         [(f"low lower lowest newer wider {i % 3} new low",) for i in range(12)],
         "text string",
@@ -120,6 +123,20 @@ def test_iterative_builders_keep_at_most_one_round(spark, rdds):
         held = rdds()
         pagerank_quantized(edges, iters=4, dangling="renormalize").collect()
         assert rdds() - held <= 1
+        # a 6-node chain: the min label needs 5 rounds to reach its end
+        chain = spark.createDataFrame(
+            [(i, i + 1) for i in range(1, 6)], "key_a long, key_b long"
+        )
+        held = rdds()
+        clusters = dup_clusters(chain).collect()
+        assert {(r.key, r.cluster) for r in clusters} == {
+            (i, 1) for i in range(1, 7)
+        }
+        assert rdds() - held <= 1
+        held = rdds()
+        ranked, n = global_rank(spark.range(40).selectExpr("id * 7 % 40 AS x"), "x")
+        assert n == 40 and sorted(r.pos for r in ranked.collect()) == list(range(40))
+        assert rdds() - held <= 1
     assert rdds() == before
 
 
@@ -131,6 +148,21 @@ def _lifetime_calls(path: Path):
             and node.func.attr in LIFETIME_CALLS
         ):
             yield f"{path.relative_to(PKG.parent)}:{node.lineno} .{node.func.attr}("
+
+
+def test_no_bare_count_materializes_a_cache():
+    """A ``.count()`` whose result is discarded only fills a cache; the
+    library materializes through ``caching.local_checkpoint`` instead."""
+    bare = [
+        f"{path.relative_to(PKG.parent)}:{node.lineno}"
+        for path in sorted(PKG.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Expr)
+        and isinstance(node.value, ast.Call)
+        and isinstance(node.value.func, ast.Attribute)
+        and node.value.func.attr == "count"
+    ]
+    assert not bare, bare
 
 
 def test_only_caching_module_decides_lifetimes():

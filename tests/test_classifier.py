@@ -116,16 +116,28 @@ def test_nb_null_label_rejected(spark):
         nb_train(df, "lab")
 
 
-def test_nb_weights_plan_shape(spark):
+def test_nb_weights_plan_shape(spark, monkeypatch):
     """Training's counts agg partial-aggregates before its one shuffle;
-    scoring's weights join is UNHINTED (AQE decides broadcast)."""
+    scoring's weights join is UNHINTED (AQE decides broadcast). The counts
+    are a local checkpoint, whose plan the weights frame no longer carries,
+    so the plan checked is the one the checkpoint materializes."""
+    from jarvis_ocr_service_spark.functions import classifier
+
+    materialized = []
+
+    def spy(frame):
+        materialized.append(frame._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(frame)
+
+    checkpoint = classifier.local_checkpoint
+    monkeypatch.setattr(classifier, "local_checkpoint", spy)
     docs, labels = _fixture_docs()
     df = spark.createDataFrame(
         [(k, t, labels[k]) for k, t in docs], "doc_id long, text string, lab boolean"
     )
     with cache_scope():
         weights, params = nb_train(df, "lab")
-        plan = weights._jdf.queryExecution().executedPlan().toString()
+        (plan,) = materialized
         scored = nb_score(df, weights, params)
         lplan = scored._jdf.queryExecution().logical().toString()
     assert "partial" in plan.lower(), plan

@@ -1,6 +1,8 @@
 """Quantized k-means + SemDeDup: brute-force numpy parity, determinism,
 empty-cluster carry-over, twin-collapse, and hot-cluster guard."""
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -228,6 +230,36 @@ def test_semdedup_max_cluster_guard_skips_hot_cluster(spark):
     )
     out = semdedup(df, k=1, iters=1, threshold=0.9, max_cluster=3).collect()
     assert sorted(r.vec_id for r in out) == [0, 1, 2, 3]
+
+
+def _plan_nodes(plan):
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def test_semdedup_over_cap_cluster_never_reaches_grouped_stage(spark):
+    """max_cluster is applied before the grouped stage, whose pandas frame
+    holds a whole cluster: the stage's input is filtered on a width
+    aggregate, and the over-cap cluster's members all survive while the
+    narrow cluster is still pruned."""
+    # smallest-id init puts ids 0 and 1 in different clusters: {0,2,3,4}
+    # (width 4 > cap 3) and {1,5} (width 2, 5 is 1's twin)
+    a, b = [1.0, 0.0], [0.0, 1.0]
+    df = spark.createDataFrame(
+        [(0, a), (1, b), (2, a), (3, a), (4, a), (5, b)],
+        "vec_id long, embedding array<double>",
+    )
+    out = semdedup(df, k=2, iters=2, threshold=0.99, max_cluster=3)
+    assert sorted(r.vec_id for r in out.collect()) == [0, 1, 2, 3, 4]
+    grouped = [
+        n for n in _plan_nodes(out._jdf.queryExecution().optimizedPlan())
+        if n.nodeName() == "FlatMapGroupsInPandas"
+    ]
+    assert len(grouped) == 1
+    stage_input = grouped[0].treeString()
+    assert re.search(r"Filter .*_width#\d+L <= 3", stage_input), stage_input
 
 
 def test_semdedup_null_elements_survive_on_input_row_basis(spark):

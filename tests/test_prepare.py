@@ -62,9 +62,9 @@ def test_prepare_unscoped_release_cached(spark, rdds, tmp_path):
 
 
 def test_prepare_failure_mid_plan_leaks_nothing(spark, rdds, monkeypatch):
-    """An exception after the gates have persisted and materialized their
-    frames (surprisal counts, the rank frame, NB counts, `exact`) leaves
-    the count where it was once the scope exits."""
+    """An exception after the gates have checkpointed their frames (the
+    gate input, surprisal counts, the rank frame, NB counts) leaves the
+    count where it was once the scope exits."""
     from jarvis_ocr_service_spark.functions import classifier
 
     held = []
@@ -194,10 +194,21 @@ def test_prepare_bucket_mode_matches_pair_mode_on_synthetic(spark):
 
 
 def test_prepare_rejects_unknown_near_dup_mode(spark):
-    with pytest.raises(ValueError, match="near_dup_mode"):
-        prepare_training_data(
-            synthesize_pages(spark, 10), near_dup_mode="nope"
-        )
+    """A mode typo fails before any job runs — the near-dup route
+    materializes `exact`, which would run the whole extraction first."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "prepare-near-dup-mode-check"
+    sc.setJobGroup(group, "jobs prepare_training_data submits")
+    try:
+        with pytest.raises(ValueError, match="near_dup_mode"):
+            prepare_training_data(
+                synthesize_pages(spark, 10), near_dup_mode="nope"
+            )
+        assert tracker.getJobIdsForGroup(group) == []
+    finally:
+        for key in ("jobGroup.id", "job.description", "job.interruptOnCancel"):
+            sc.setLocalProperty(f"spark.{key}", None)
 
 
 def test_prepare_ppl_bucket_gate(spark):
@@ -265,8 +276,8 @@ def test_prepare_classifier_gate(spark):
 
 
 def test_prepare_gates_release_cached_blocks(spark, rdds, tmp_path):
-    """The LM-quality gates' persisted frames (surprisal counts, the
-    global-rank ranged frame, NB counts, the gated `exact`) all belong to
+    """The LM-quality gates' checkpointed frames (their input corpus,
+    surprisal counts, the global-rank ranged frame, NB counts) all belong to
     the action's scope — zero retained blocks once it closes (the
     review-pass leak fix)."""
     pages = synthesize_pages(spark, 60, num_partitions=2)
@@ -282,5 +293,24 @@ def test_prepare_gates_release_cached_blocks(spark, rdds, tmp_path):
             classifier_reference=ref,
         )
         corpus.write.mode("overwrite").parquet(str(tmp_path / "gated"))
-        assert rdds() >= before + 3  # surprisal + rank + nb + exact
+        assert rdds() >= before + 3  # gate input, surprisal, rank, nb
     assert rdds() == before
+
+
+def test_prepare_returns_a_plan_of_checkpoint_leaves(spark):
+    """The builder's own actions read checkpoints, so the returned plan
+    reads a few one-leaf frames, not the whole extraction-to-gate lineage
+    copied under every cached frame (hundreds of leaves)."""
+    pages = synthesize_pages(spark, 120, num_partitions=4)
+    with cache_scope():
+        corpus = prepare_training_data(
+            pages,
+            near_dup_threshold=0.85,
+            line_dedup_max_count=50,
+            keep_ppl_buckets=("head", "middle"),
+            redact_pii=True,
+            blocklist=["promo", "nosuchword"],
+        )
+        leaves = corpus._jdf.queryExecution().logical().collectLeaves().size()
+        assert leaves <= 4, corpus._jdf.queryExecution().logical().treeString()
+        assert corpus.count() > 0
