@@ -17,6 +17,7 @@ style invocation or import the library directly.
 from __future__ import annotations
 
 import argparse
+import functools
 import sys
 
 
@@ -107,19 +108,33 @@ def main(argv=None) -> int:
         return 0
 
     if args.cmd == "resume":
-        from jarvis_ocr_service_spark.plans.checkpoint import run_checkpointed
+        from jarvis_ocr_service_spark.plans.checkpoint import (
+            read_committed,
+            run_checkpointed,
+        )
+        from jarvis_ocr_service_spark.plans.pipeline import run_pipeline
 
         stats = run_checkpointed(
             spark, args.input, args.output, args.manifest,
+            pipeline_fn=functools.partial(run_pipeline, pdf_mode=args.pdf_mode),
             files_per_batch=args.files_per_batch,
         )
         print(stats)
+        # an empty input commits no batch and writes no output or manifest
+        n = (
+            read_committed(spark, args.output, args.manifest).count()
+            if stats["n_batches"] else 0
+        )
+        print(f"committed {n} documents -> {args.output}")
         return 0 if stats["complete"] else 1
 
     if args.cmd == "stream":
         from jarvis_ocr_service_spark.streaming.stream import run_stream
 
-        q = run_stream(spark, args.input, args.output, args.checkpoint)
+        q = run_stream(
+            spark, args.input, args.output, args.checkpoint,
+            pdf_mode=args.pdf_mode,
+        )
         q.awaitTermination()
         print(f"stream drained -> {args.output}")
         return 0

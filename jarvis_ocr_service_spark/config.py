@@ -43,12 +43,6 @@ DEFAULT_TIER_ORDER = [
 AVAILABLE_TIERS = ["tesseract", "easyocr", "paddleocr"]
 
 
-def get_tier_order(enabled_tiers):
-    """Filter DEFAULT_TIER_ORDER to enabled tiers, order preserved
-    (reference semantics: app/tier_mapping.py:29-39)."""
-    return [t for t in DEFAULT_TIER_ORDER if t in enabled_tiers]
-
-
 # --- Error taxonomy ---------------------------------------------------------
 # (reference: worker.py:29-51, prds/queue-flow.md:438-456)
 NON_RETRYABLE_CODES = [

@@ -36,7 +36,6 @@ from jarvis_ocr_service_spark.config import (
     MSG_ALL_TIERS_FAILED,
     MSG_EMPTY_PAYLOAD,
     MSG_PDF_UNSUPPORTED,
-    get_tier_order,
 )
 from jarvis_ocr_service_spark.operators import dispatch
 from jarvis_ocr_service_spark.operators.extract_html import (
@@ -55,6 +54,10 @@ Span = Tuple[int, int, str]
 
 PDF_MODE_REJECT = "reject"  # reference v1 semantics
 PDF_MODE_PARSE = "parse"  # north-rule layout branch (default)
+
+# The cost-ordered cascade over the tiers this engine implements
+# (reference semantics: app/tier_mapping.py:29-39).
+TIER_ORDER = [t for t in DEFAULT_TIER_ORDER if t in AVAILABLE_TIERS]
 
 
 def _tier_extract(tier: str, kind: str, payload: bytes, lang: str, ctx: Dict):
@@ -124,22 +127,15 @@ def _error_result(
 
 
 def extract_document(
-    payload: Optional[bytes],
-    lang: str,
-    enabled_tiers: Optional[List[str]] = None,
-    pdf_mode: str = PDF_MODE_PARSE,
-    max_text_bytes: int = MAX_TEXT_BYTES,
-    pinned_tier: Optional[str] = None,
+    payload: Optional[bytes], lang: str, pdf_mode: str = PDF_MODE_PARSE
 ) -> Dict:
     """Extract one document through the tier cascade. Total function —
     returns an error *row* on bad input, never raises.
 
-    ``pinned_tier`` reproduces the reference's specific-provider mode
-    (app/provider_manager.py:329-345 + worker path): exactly that tier
-    runs and **validation is bypassed entirely** — the extractor's output
-    is returned as-is (invalid-looking text included). An inapplicable /
-    unavailable pinned tier maps to ``bad_request``, mirroring the
-    reference's ProviderUnavailableException -> HTTP 400 (app/main.py:285).
+    Tiers run in ``TIER_ORDER``; the first whose normalized output
+    validates wins and is truncated to ``MAX_TEXT_BYTES``. ``pdf_mode``
+    picks the PDF branch (``parse`` runs the layout tier, ``reject``
+    returns the reference v1 ``unsupported_media`` row).
     """
     kind = dispatch.sniff_kind(payload or b"")
 
@@ -154,18 +150,10 @@ def extract_document(
             reason=MSG_PDF_UNSUPPORTED,
         )
 
-    if pinned_tier is not None:
-        return _extract_pinned(
-            pinned_tier, kind, payload, lang, max_text_bytes
-        )
-
-    tier_order = get_tier_order(enabled_tiers if enabled_tiers is not None
-                                else AVAILABLE_TIERS)
-
     last_tier: Optional[str] = None
     last_error: Optional[str] = None
     ctx: Dict = {}
-    for tier in tier_order:
+    for tier in TIER_ORDER:
         try:
             extracted = _tier_extract(tier, kind, payload, lang, ctx)
         except OcrUnavailable:
@@ -194,7 +182,7 @@ def extract_document(
         is_valid, confidence, reason = validate_text(norm)
         if is_valid:
             final_text, was_truncated, n_bytes = truncate_with_len(
-                norm, max_text_bytes
+                norm, MAX_TEXT_BYTES
             )
             if was_truncated:
                 spans = _clip_spans(spans, len(final_text))
@@ -225,63 +213,6 @@ def extract_document(
         tier=last_tier or "unknown",
         reason=validation_reason,
     )
-
-
-def _extract_pinned(
-    tier: str, kind: str, payload: bytes, lang: str, max_text_bytes: int
-) -> Dict:
-    """Specific-provider mode: run exactly ``tier``, skip validation
-    (reference provider_manager.py:329-345 — the pinned path calls
-    provider.process() and returns the result with no validity loop)."""
-    if tier not in AVAILABLE_TIERS:
-        return _error_result(
-            kind, lang, "bad_request",
-            f"Provider '{tier}' is not available",
-        )
-    try:
-        extracted = _tier_extract(tier, kind, payload, lang, {})
-    except OcrUnavailable:
-        return _error_result(
-            kind, lang, "bad_request",
-            f"Provider '{tier}' is not available",
-        )
-    except Exception as e:
-        return _error_result(
-            kind, lang, ERR_NO_VALID_OUTPUT,
-            f"Tier error: {str(e)[:MAX_REASON_CHARS]}", tier=tier,
-        )
-    if extracted is None:
-        # tier exists but cannot handle this content kind — the reference
-        # equivalent is a provider.process() failure on that payload
-        return _error_result(
-            kind, lang, "bad_request",
-            f"Provider '{tier}' is not available",
-        )
-    text, spans = extracted
-    if kind == dispatch.KIND_HTML:
-        norm = text  # _assemble output is normalize-stable (see above)
-    else:
-        norm = normalize_text(text)
-        if norm != text:
-            spans = _line_spans(norm, spans[0][2] if spans else "text")
-    final_text, was_truncated, n_bytes = truncate_with_len(norm, max_text_bytes)
-    if was_truncated:
-        spans = _clip_spans(spans, len(final_text))
-    return {
-        "content_kind": kind,
-        "text": final_text,
-        "truncated": was_truncated,
-        "language": lang,
-        # no validator ran: confidence is the provider-accepted constant
-        "confidence": 1.0,
-        "text_len": n_bytes,
-        "is_valid": True,  # accepted-without-validation (reference mode)
-        "tier": tier,
-        "validation_reason": None,
-        "error_code": None,
-        "error_message": None,
-        "spans": spans,
-    }
 
 
 def _line_spans(text: str, tag: str) -> List[Span]:

@@ -12,18 +12,20 @@ Two extraction tiers, mirroring the reference's cost-ordered cascade
 (/root/reference/app/tier_mapping.py:18-26 — cheapest first, escalate on
 invalid output):
 
-  * ``extract_raw`` (tier "tesseract" analog): dumb full-text strip —
+  * ``extract_raw_blocks`` (tier "tesseract" analog): dumb full-text strip —
     every visible text block in document order, *including* boilerplate.
     Cheapest; on link-farm pages its output fails the downstream validator
     (many short navigation lines), which triggers escalation.
-  * ``extract_main`` (tier "easyocr" analog): block classification — drops
-    blocks inside nav/footer/header/aside/form subtrees and blocks whose
-    link density exceeds LINK_DENSITY_MAX.
+  * ``extract_main_blocks`` (tier "easyocr" analog): block classification —
+    drops blocks inside nav/footer/header/aside/form subtrees and blocks
+    whose link density exceeds LINK_DENSITY_MAX.
 
-Both return ``(text, spans)`` where ``text`` is the newline-joined,
-normalize-stable concatenation of per-block normalized texts and ``spans``
-are character offsets ``(start, end, tag)`` of each kept block inside
-``text`` — the "extracted text plus character-span offsets" contract.
+Both take the blocks ``parse_blocks`` returns, so the cascade parses a page
+once for both tiers. Both return ``(text, spans)`` where ``text`` is the
+newline-joined, normalize-stable concatenation of per-block normalized
+texts and ``spans`` are character offsets ``(start, end, tag)`` of each
+kept block inside ``text`` — the "extracted text plus character-span
+offsets" contract.
 
 Pure functions of the bytes; shared verbatim between the pytest oracle and
 the Spark Arrow stage.
@@ -40,7 +42,7 @@ from jarvis_ocr_service_spark.operators.textops import normalize_text
 SKIP_TAGS = frozenset(
     {"script", "style", "noscript", "template", "svg", "head", "iframe", "title"}
 )
-# Subtrees that are boilerplate by role (stripped by extract_main).
+# Subtrees that are boilerplate by role (stripped by extract_main_blocks).
 BOILERPLATE_TAGS = frozenset(
     {"nav", "footer", "header", "aside", "form", "menu", "button"}
 )
@@ -55,7 +57,8 @@ BLOCK_TAGS = frozenset(
 # Void tags never pushed on the open-element stack.
 _VOID_TAGS = frozenset({"br", "hr", "img", "meta", "link", "input", "area", "base"})
 
-# A block with link_chars/total_chars above this is dropped by extract_main.
+# A block with link_chars/total_chars above this is dropped by
+# extract_main_blocks.
 LINK_DENSITY_MAX = 0.33
 
 
@@ -543,13 +546,3 @@ def extract_main_blocks(blocks: List[Block]) -> Tuple[str, List[Tuple[int, int, 
         [b for b in blocks if not b.boiler and b.link_density <= LINK_DENSITY_MAX]
     )
 
-
-def extract_raw(html: str) -> Tuple[str, List[Tuple[int, int, str]]]:
-    """Tier-1 from markup (parse + assemble). The cascade parses once and
-    uses the *_blocks forms to share the DOM between tiers."""
-    return extract_raw_blocks(parse_blocks(html))
-
-
-def extract_main(html: str) -> Tuple[str, List[Tuple[int, int, str]]]:
-    """Tier-2 from markup."""
-    return extract_main_blocks(parse_blocks(html))

@@ -6,9 +6,7 @@ filter-and-union layout sketched in SURVEY.md §4.2): every tier here is a
 local pure function, so a second Spark stage per tier would buy nothing
 and cost k JVM<->Python Arrow crossings, k× input decode, and a union
 shuffle. The fused stage preserves the reference's *per-row* short-circuit
-exactly (worker.py:151-239) with a single crossing. The staged variant is
-still provided by plans/pipeline.py for A/B testing and for deployments
-where tiers have different hardware needs.
+exactly (worker.py:151-239) with a single crossing.
 
 All functions keep per-row failure isolation: data errors become error
 rows, never task failures (reference P8, worker.py:82-141).
@@ -16,11 +14,10 @@ rows, never task failures (reference P8, worker.py:82-141).
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional
+from typing import Iterator
 
 import pandas as pd
 
-from jarvis_ocr_service_spark.config import MAX_TEXT_BYTES
 from jarvis_ocr_service_spark.operators.cascade import PDF_MODE_PARSE, extract_document
 
 _RESULT_COLS = [
@@ -39,23 +36,16 @@ _RESULT_COLS = [
 ]
 
 
-def make_extract_map_fn(
-    enabled_tiers: Optional[List[str]] = None,
-    pdf_mode: str = PDF_MODE_PARSE,
-    max_text_bytes: int = MAX_TEXT_BYTES,
-    passthrough_cols: Optional[List[str]] = None,
-    pinned_tier: Optional[str] = None,
-):
+def make_extract_map_fn(pdf_mode: str = PDF_MODE_PARSE):
     """Build the fused-cascade ``mapInPandas`` function.
 
-    Input batches must carry ``url``, ``html`` (binary), ``lang`` plus any
-    ``passthrough_cols``; output matches schema.RESULTS_SCHEMA order.
+    Input batches must carry ``url``, ``warc_ts``, ``html`` (binary) and
+    ``lang``; output matches schema.RESULTS_SCHEMA order.
     The closure is constructed on the driver once and shipped to executors;
     per-executor state (none needed today — extractors are stateless pure
     functions) would hang off module-level lazy singletons, mirroring the
     reference's lazy provider init (easyocr_provider.py:25-33).
     """
-    passthrough = list(passthrough_cols or ["warc_ts"])
 
     def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -66,17 +56,14 @@ def make_extract_map_fn(
                 extract_document(
                     payload,
                     lang if isinstance(lang, str) and lang else "en",
-                    enabled_tiers=enabled_tiers,
                     pdf_mode=pdf_mode,
-                    max_text_bytes=max_text_bytes,
-                    pinned_tier=pinned_tier,
                 )
                 for payload, lang in zip(pdf["html"], pdf["lang"])
             ]
             out = pd.DataFrame(
                 {
                     "url": pdf["url"].values,
-                    **{c: pdf[c].values for c in passthrough},
+                    "warc_ts": pdf["warc_ts"].values,
                     "lang": pdf["lang"].values,
                 },
                 index=range(n),
@@ -94,26 +81,3 @@ def make_extract_map_fn(
 
     return extract_batches
 
-
-def run_extract(
-    df,
-    enabled_tiers: Optional[List[str]] = None,
-    pdf_mode: str = PDF_MODE_PARSE,
-    max_text_bytes: int = MAX_TEXT_BYTES,
-    pinned_tier: Optional[str] = None,
-):
-    """pages DataFrame -> results DataFrame via the fused Arrow stage."""
-    from jarvis_ocr_service_spark.schema import RESULTS_SCHEMA
-
-    # Column-prune before the Python crossing: only what the stage reads
-    # goes over Arrow (url, warc_ts, html, lang) — `text` never ships.
-    pruned = df.select("url", "warc_ts", "html", "lang")
-    return pruned.mapInPandas(
-        make_extract_map_fn(
-            enabled_tiers=enabled_tiers,
-            pdf_mode=pdf_mode,
-            max_text_bytes=max_text_bytes,
-            pinned_tier=pinned_tier,
-        ),
-        schema=RESULTS_SCHEMA,
-    )

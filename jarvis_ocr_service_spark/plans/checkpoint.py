@@ -75,22 +75,14 @@ def _manifest_exists(spark: SparkSession, manifest_path: str) -> bool:
     return False
 
 
-def committed_batches(spark: SparkSession, manifest_path: str) -> set:
-    # Only a genuinely-absent manifest means "nothing committed". A
-    # transient/partial read failure must PROPAGATE: swallowing it would
-    # silently mark every batch uncommitted, and re-runs would append
-    # duplicate manifest rows (double-counted counters, ambiguous resume).
-    if not _manifest_exists(spark, manifest_path):
-        return set()
-    rows = spark.read.parquet(manifest_path).select("batch_id").distinct().collect()
-    return {r.batch_id for r in rows}
-
-
 def committed_batch_files(spark: SparkSession, manifest_path: str) -> dict:
     """batch_id -> exact input-file list the committed batch processed.
 
-    Same hard-error policy as :func:`committed_batches`: absent manifest ->
-    {}, unreadable manifest -> raise (never guess "nothing committed")."""
+    Absent manifest -> {}; unreadable manifest -> raise (never guess
+    "nothing committed"). A transient or partial read failure must
+    propagate: swallowing it would silently mark every batch uncommitted,
+    and re-runs would append duplicate manifest rows (double-counted
+    counters, ambiguous resume)."""
     if not _manifest_exists(spark, manifest_path):
         return {}
     rows = spark.read.parquet(manifest_path).select("batch_id", "files").collect()
@@ -126,8 +118,6 @@ def run_checkpointed(
     files_per_batch: int = 4,
     max_batches: Optional[int] = None,
     dedup_against_committed: bool = False,
-    digest_table: Optional[str] = None,
-    digest_buckets: int = 16,
 ) -> dict:
     """Process the input table batch-by-batch with manifest commits.
 
@@ -147,7 +137,7 @@ def run_checkpointed(
     and the underscore prefix keeps digest files invisible to readers of
     ``output_path``.
 
-    Scale: the default parquet-dir digest store is METASTORE-FREE and
+    Scale: the parquet-dir digest store is METASTORE-FREE and
     ZERO-SHUFFLE (r5 verdict item 7). The probe inverts the join: the
     incoming batch's digest set (bounded — one batch, sized by
     ``files_per_batch``) broadcasts into a LEFT SEMI join against the
@@ -156,20 +146,9 @@ def run_checkpointed(
     written sorted); the resulting hit set is at most
     |batch ∩ store| rows and broadcast back into the anti-join. Total
     Exchanges on the store side: ZERO (asserted by test_checkpoint's
-    dir-form plan gate). Per-batch cost is one columnar scan of the
-    committed digests — the shuffle the old plan paid is gone, and no
-    catalog is required. Passing ``digest_table`` (a saveAsTable name)
-    instead uses a table BUCKETED on the digest (``digest_buckets``)
-    and partitioned by batch_id: the anti-join shuffles only the
-    (small) incoming batch into the store's bucketing while the store
-    side reads its buckets in-place — trades the dir form's store scan
-    for a batch-side shuffle when a persistent catalog/metastore
-    exists. Commit protocol, table form: appends
-    into a batch_id partition; a crashed attempt leaves orphan rows in
-    an UNCOMMITTED partition that is never read, and after a successful
-    re-run the duplicate digest rows in that partition are harmless to
-    anti-join semantics (membership, not counts). Dir form overwrites
-    per batch as before. Only manifest-committed ids are ever read.
+    plan gate). Per-batch cost is one columnar scan of the committed
+    digests, and no catalog is required. Only manifest-committed ids are
+    ever read.
 
     Resume safety: a committed batch_id is only skipped when the *planned*
     file list for that batch_id equals the manifest's recorded ``files``.
@@ -217,8 +196,6 @@ def run_checkpointed(
             manifest_path,
             pipeline_fn,
             dedup_against_committed,
-            digest_table,
-            digest_buckets,
             committed_so_far,
             run_id,
         )
@@ -247,14 +224,12 @@ def _run_one_batch(
     manifest_path: str,
     pipeline_fn: Callable[[DataFrame], DataFrame],
     dedup_against_committed: bool,
-    digest_table: Optional[str],
-    digest_buckets: int,
     committed_so_far: set,
     run_id: str,
 ) -> None:
     """One batch: optional cross-run dedup, pipeline, idempotent data
     write, manifest commit."""
-    if dedup_against_committed or digest_table is not None:
+    if dedup_against_committed:
         digest = F.md5(F.coalesce(F.col("html"), F.lit(b"")))
         keyed = batch_df.withColumn("_digest", digest)
         cols = batch_df.columns
@@ -266,59 +241,23 @@ def _run_one_batch(
             .select("_digest", "_row.*")
         )
         committed_ids = sorted(committed_so_far & set(range(batch_id)))
-        if digest_table is not None:
-            # bucketed store: the anti-join shuffles only the batch
-            # into the store's bucketing; the store reads in-place
-            if committed_ids:
-                seen = (
-                    spark.table(digest_table)
-                    .filter(F.col("batch_id").isin(committed_ids))
-                    .select("_digest")
-                )
-                keyed = keyed.join(seen, "_digest", "left_anti")
-            # ONE computation of the survivors feeds both the
-            # digest write (the materializing action) and the
-            # pipeline: persist the post-anti-join frame (bounded —
-            # one batch of rows), release after the batch commits.
-            # Without this the read + groupBy + anti-join recompute
-            # fully for the pipeline action, and any read
-            # nondeterminism could let the written digests drift
-            # from the rows actually processed (ADVICE r4).
-            keyed = persist(keyed)
-            (
-                keyed.select("_digest")
-                .withColumn("batch_id", F.lit(batch_id).cast("long"))
-                .write.mode("append")
-                .partitionBy("batch_id")
-                .bucketBy(int(digest_buckets), "_digest")
-                .sortBy("_digest")
-                .format("parquet")
-                .saveAsTable(digest_table)
+        # zero-shuffle probe: persist the within-batch-deduped frame FIRST
+        # so the broadcast digest set and the probe side materialize from
+        # the same cached data (the ADVICE-r4 determinism rationale), then
+        # persist the survivors so the digest write and the pipeline share
+        # one computation. Both caches are batch-bounded.
+        keyed = persist(keyed)
+        if committed_ids:
+            seen = spark.read.parquet(
+                *[f"{output_path}/_digests/batch_id={i}" for i in committed_ids]
             )
-        else:
-            # dir store, zero-shuffle probe: persist the within-batch-
-            # deduped frame FIRST so the broadcast digest set and the
-            # probe side materialize from the same cached data (the
-            # ADVICE-r4 determinism rationale), then persist the
-            # survivors so the digest write and the pipeline share one
-            # computation. Both caches are batch-bounded.
-            keyed = persist(keyed)
-            if committed_ids:
-                seen = spark.read.parquet(
-                    *[
-                        f"{output_path}/_digests/batch_id={i}"
-                        for i in committed_ids
-                    ]
-                )
-                keyed = persist(probe_committed_digests(keyed, seen))
-            # sorted within the file: parquet row-group min/max stats on
-            # the digest column stay tight, so future point probes that
-            # push predicates prune most of the store
-            keyed.select("_digest").sortWithinPartitions(
-                "_digest"
-            ).write.mode("overwrite").parquet(
-                f"{output_path}/_digests/batch_id={batch_id}"
-            )
+            keyed = persist(probe_committed_digests(keyed, seen))
+        # sorted within the file: parquet row-group min/max stats on the
+        # digest column stay tight, so future point probes that push
+        # predicates prune most of the store
+        keyed.select("_digest").sortWithinPartitions("_digest").write.mode(
+            "overwrite"
+        ).parquet(f"{output_path}/_digests/batch_id={batch_id}")
         batch_df = keyed.drop("_digest")
     results = pipeline_fn(batch_df)
     batch_out = f"{output_path}/batch_id={batch_id}"

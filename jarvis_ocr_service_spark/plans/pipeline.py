@@ -14,16 +14,15 @@ Aggregates (relational, JVM-side):
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import List
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from jarvis_ocr_service_spark.config import MAX_TEXT_BYTES
 from jarvis_ocr_service_spark.operators.cascade import PDF_MODE_PARSE
-from jarvis_ocr_service_spark.operators.udfs import run_extract
+from jarvis_ocr_service_spark.operators.udfs import make_extract_map_fn
 from jarvis_ocr_service_spark.plans.skew import url_host
-
+from jarvis_ocr_service_spark.schema import RESULTS_SCHEMA
 
 
 def join_on_row_key(left: DataFrame, right: DataFrame, keys: List[str],
@@ -41,30 +40,16 @@ def join_on_row_key(left: DataFrame, right: DataFrame, keys: List[str],
     return left.join(r, cond, how).drop(*[f"_rk_{k}" for k in keys])
 
 
-def run_pipeline(
-    pages: DataFrame,
-    enabled_tiers: Optional[List[str]] = None,
-    pdf_mode: str = PDF_MODE_PARSE,
-    max_text_bytes: int = MAX_TEXT_BYTES,
-    pinned_tier: Optional[str] = None,
-) -> DataFrame:
+def run_pipeline(pages: DataFrame, pdf_mode: str = PDF_MODE_PARSE) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> RESULTS_SCHEMA DataFrame.
 
-    ``pinned_tier`` = the reference's specific-provider mode: exactly that
-    tier runs and validation is bypassed (see cascade.extract_document).
+    One ``mapInPandas`` stage runs cascade.extract_document per row;
+    ``pdf_mode`` picks its PDF branch (``parse`` or ``reject``).
     """
-    if pinned_tier is not None:
-        return run_extract(
-            pages,
-            pdf_mode=pdf_mode,
-            max_text_bytes=max_text_bytes,
-            pinned_tier=pinned_tier,
-        )
-    return run_extract(
-        pages,
-        enabled_tiers=enabled_tiers,
-        pdf_mode=pdf_mode,
-        max_text_bytes=max_text_bytes,
+    # Column-prune before the Python crossing: only what the stage reads
+    # goes over Arrow — `text` never ships.
+    return pages.select("url", "warc_ts", "html", "lang").mapInPandas(
+        make_extract_map_fn(pdf_mode=pdf_mode), schema=RESULTS_SCHEMA
     )
 
 

@@ -80,16 +80,6 @@ def test_truncation_flag_and_byte_cap():
     r["text"].encode("utf-8").decode("utf-8")
 
 
-def test_enabled_tiers_filter_preserves_order():
-    html = b"<html><body><p>Readable words in a paragraph for validation.</p></body></html>"
-    # only tier2 enabled -> accepted at easyocr
-    r = extract_document(html, "en", enabled_tiers=["easyocr"])
-    assert r["tier"] == "easyocr"
-    # order filtering: bogus names ignored
-    r2 = extract_document(html, "en", enabled_tiers=["easyocr", "tesseract", "nope"])
-    assert r2["tier"] == "tesseract"  # DEFAULT_TIER_ORDER wins, not list order
-
-
 def test_language_hint_mapping():
     """T6/O4: 2->3-letter tesseract map, first-3 slice, '+' join,
     pass-through lowercase default (tesseract_provider.py:42-46)."""
@@ -114,46 +104,3 @@ def test_spans_clipped_on_truncation():
     for s, e, _ in r["spans"]:
         assert e <= len(r["text"])
 
-
-# --- specific-provider (pinned) mode: validation bypassed --------------------
-
-def test_pinned_tier_skips_validation():
-    """Reference provider_manager.py:329-345: a pinned provider's output is
-    returned as-is — no validity loop. Garbled text that the cascade would
-    reject must come back accepted."""
-    from jarvis_ocr_service_spark.operators.cascade import extract_document
-
-    garbled = b"xkcd qwrtz bcdfg hjklm npqrst wvxz brrr kpft"
-    cascade = extract_document(garbled, "en")
-    assert not cascade["is_valid"]  # the validator rejects it...
-    pinned = extract_document(garbled, "en", pinned_tier="tesseract")
-    assert pinned["is_valid"]  # ...but the pinned path returns it anyway
-    assert pinned["text"] == garbled.decode()
-    assert pinned["tier"] == "tesseract"
-    assert pinned["validation_reason"] is None
-    assert pinned["error_code"] is None
-
-
-def test_pinned_tier_unavailable_maps_to_bad_request():
-    from jarvis_ocr_service_spark.operators.cascade import extract_document
-
-    r = extract_document(b"some text here", "en", pinned_tier="llm_cloud")
-    assert r["error_code"] == "bad_request"
-    assert "not available" in r["error_message"]
-    # inapplicable kind (PDF tier pinned on plain text) is also unavailable
-    r2 = extract_document(b"some text here", "en", pinned_tier="paddleocr")
-    assert r2["error_code"] == "bad_request"
-
-
-def test_pinned_tier_distributed(spark):
-    from jarvis_ocr_service_spark.plans.pipeline import run_pipeline
-    from jarvis_ocr_service_spark.sources.pages import synthesize_pages
-
-    pages = synthesize_pages(spark, 30, num_partitions=2)
-    res = run_pipeline(pages, pinned_tier="easyocr").collect()
-    assert len(res) == 30
-    for r in res:
-        # every HTML row comes back from easyocr unvalidated; non-HTML
-        # kinds map to bad_request/terminal codes
-        if r.tier == "easyocr":
-            assert r.is_valid and r.validation_reason is None

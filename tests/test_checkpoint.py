@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from jarvis_ocr_service_spark.plans.checkpoint import (
-    committed_batches,
+    committed_batch_files,
     list_input_files,
     manifest_counters,
     read_committed,
@@ -59,7 +59,7 @@ def test_kill_and_resume_equals_one_shot(spark, pages_dir, tmp_path):
     out2, man2 = str(tmp_path / "o2"), str(tmp_path / "m2")
     stats = run_checkpointed(spark, pages_dir, out2, man2, files_per_batch=2, max_batches=1)
     assert not stats["complete"] and stats["ran"] == 1
-    assert committed_batches(spark, man2) == {0}
+    assert set(committed_batch_files(spark, man2)) == {0}
 
     # resume: skips committed batch, finishes the rest
     stats2 = run_checkpointed(spark, pages_dir, out2, man2, files_per_batch=2)
@@ -125,7 +125,7 @@ def test_uncommitted_manifest_dir_means_nothing_committed(spark, pages_dir, tmp_
 
     out, man = str(tmp_path / "o5"), str(tmp_path / "m5")
     os.makedirs(os.path.join(man, "_temporary", "0"))
-    assert committed_batches(spark, man) == set()
+    assert set(committed_batch_files(spark, man)) == set()
     stats = run_checkpointed(spark, pages_dir, out, man, files_per_batch=3)
     assert stats["complete"] and stats["skipped_committed"] == 0
     assert read_committed(spark, out, man).count() == N
@@ -164,7 +164,7 @@ def test_incremental_dedup_across_resume(spark, tmp_path):
         spark, src, out2, man2, files_per_batch=1, max_batches=1,
         dedup_against_committed=True,
     )
-    assert committed_batches(spark, man2) == {0}
+    assert set(committed_batch_files(spark, man2)) == {0}
     stats = run_checkpointed(
         spark, src, out2, man2, files_per_batch=1, dedup_against_committed=True
     )
@@ -176,75 +176,6 @@ def test_incremental_dedup_across_resume(spark, tmp_path):
     out3, man3 = str(tmp_path / "o3"), str(tmp_path / "m3")
     run_checkpointed(spark, src, out3, man3, files_per_batch=1)
     assert read_committed(spark, out3, man3).count() == 120
-
-
-def test_bucketed_digest_store_resume_and_plan(spark, tmp_path):
-    """digest_table: same resume==one-shot dedup semantics as the
-    parquet-dir store, PLUS the scale plan — the anti-join must not
-    re-shuffle the bucketed store side (only the incoming batch)."""
-    tbl = "digests_ckpt_test"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    src = str(tmp_path / "p")
-    base = synthesize_pages(spark, 40, num_partitions=1)
-    base.write.mode("overwrite").parquet(src)
-    base.withColumn("url", F.concat(F.col("url"), F.lit("-re"))).write.mode(
-        "append"
-    ).parquet(src)
-    base.withColumn("url", F.concat(F.col("url"), F.lit("-re2"))).write.mode(
-        "append"
-    ).parquet(src)
-    n_distinct = (
-        spark.read.parquet(src)
-        .select(F.md5(F.coalesce("html", F.lit(b"")))).distinct().count()
-    )
-
-    out, man = str(tmp_path / "o"), str(tmp_path / "m")
-    run_checkpointed(
-        spark, src, out, man, files_per_batch=1, max_batches=1,
-        digest_table=tbl, digest_buckets=4,
-    )
-    assert committed_batches(spark, man) == {0}
-    stats = run_checkpointed(
-        spark, src, out, man, files_per_batch=1,
-        digest_table=tbl, digest_buckets=4,
-    )
-    assert stats["complete"] and stats["skipped_committed"] == 1
-    got = read_committed(spark, out, man)
-    assert got.count() == n_distinct
-
-    # equal to the parquet-dir store form
-    out2, man2 = str(tmp_path / "o2"), str(tmp_path / "m2")
-    run_checkpointed(
-        spark, src, out2, man2, files_per_batch=1,
-        dedup_against_committed=True,
-    )
-    assert _collect_sorted(got) == _collect_sorted(
-        read_committed(spark, out2, man2)
-    )
-
-    # plan gate (r4 verdict item 3): with THREE committed batches in the
-    # store, the per-batch anti-join still adds NO Exchange on the store
-    # side — exactly the plan run_checkpointed builds for batch 3.
-    assert committed_batches(spark, man) == {0, 1, 2}
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        seen = (
-            spark.table(tbl).filter(F.col("batch_id").isin([0, 1, 2]))
-            .select("_digest")
-        )
-        probe = spark.range(10).selectExpr("CAST(id AS STRING) AS _digest")
-        plan = (
-            probe.join(seen, "_digest", "left_anti")
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert plan.count("Exchange") == 1, plan  # probe side only
-        assert "SortMergeJoin" in plan, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
 def test_dir_digest_probe_zero_shuffle_plan(spark, tmp_path):

@@ -1,8 +1,8 @@
 """HTML block extraction: raw tier, main-content tier, spans contract."""
 
 from jarvis_ocr_service_spark.operators.extract_html import (
-    extract_main,
-    extract_raw,
+    extract_main_blocks,
+    extract_raw_blocks,
     parse_blocks,
 )
 from jarvis_ocr_service_spark.operators.textops import normalize_text
@@ -22,7 +22,7 @@ PAGE = b"""<!DOCTYPE html><html><head><title>T</title>
 
 
 def test_raw_includes_boilerplate():
-    text, spans = extract_raw(PAGE.decode())
+    text, spans = extract_raw_blocks(parse_blocks(PAGE.decode()))
     assert "Home" in text and "About us" in text
     assert "First paragraph" in text
     assert "not text" not in text  # script content skipped
@@ -31,7 +31,7 @@ def test_raw_includes_boilerplate():
 
 
 def test_main_strips_boilerplate_and_link_blocks():
-    text, spans = extract_main(PAGE.decode())
+    text, spans = extract_main_blocks(parse_blocks(PAGE.decode()))
     assert "First paragraph" in text
     assert "Second & final paragraph" in text  # entity decoded
     assert "—" in text  # &#8212; decoded
@@ -41,8 +41,8 @@ def test_main_strips_boilerplate_and_link_blocks():
 
 
 def test_spans_index_into_text():
-    for fn in (extract_raw, extract_main):
-        text, spans = fn(PAGE.decode())
+    for fn in (extract_raw_blocks, extract_main_blocks):
+        text, spans = fn(parse_blocks(PAGE.decode()))
         for start, end, tag in spans:
             assert 0 <= start < end <= len(text)
             assert text[start:end].strip()
@@ -52,15 +52,16 @@ def test_spans_index_into_text():
 
 
 def test_output_is_normalize_stable():
-    for fn in (extract_raw, extract_main):
-        text, _ = fn(PAGE.decode())
+    for fn in (extract_raw_blocks, extract_main_blocks):
+        text, _ = fn(parse_blocks(PAGE.decode()))
         assert normalize_text(text) == text
 
 
 def test_malformed_html_never_raises():
     for junk in ("<div><p>unclosed", "<<<<>>>>", "a<b>c</q></p>", "<a href=>x", ""):
-        extract_raw(junk)
-        extract_main(junk)
+        blocks = parse_blocks(junk)
+        extract_raw_blocks(blocks)
+        extract_main_blocks(blocks)
 
 
 def test_link_density_feature():

@@ -34,6 +34,10 @@ def test_extraction_scan_prunes_text_column(spark, pages_path):
 def test_extraction_is_single_stage_map(spark, pages_path):
     plan = _plan(run_pipeline(spark.read.parquet(pages_path)))
     assert "Exchange" not in plan
+    # one Python stage, named by the cascade's batch function: the
+    # benchmark's per-layer split finds the extraction node by that name
+    maps = [l for l in plan.splitlines() if "MapInPandas" in l]
+    assert len(maps) == 1 and "extract_batches" in maps[0], plan
 
 
 def test_filter_pushdown_reaches_scan(spark, pages_path):

@@ -18,6 +18,7 @@ reachable must leave the list.
 from __future__ import annotations
 
 import ast
+import inspect
 from pathlib import Path
 from typing import Dict, Set, Tuple
 
@@ -49,12 +50,8 @@ _SLOW_REFERENCES = {
 # Test-only API not yet wired to an entry point or deleted.
 _UNDECIDED = {
     "build_term_index": "lexsearch",
-    "committed_batches": "checkpoint manifest reader",
-    "read_committed": "checkpoint output reader",
     "dedup_by_canonical_url": "urls",
     "exact_duplicate_groups": "dedup",
-    "extract_raw": "scalar html tier wrapper",
-    "extract_main": "scalar html tier wrapper",
     "lang_id_col": "textstats Column expression",
     "quality_score_col": "textstats Column expression",
     "token_count_col": "textstats Column expression",
@@ -133,3 +130,21 @@ def test_allowlist_only_shrinks():
     public, reachable = _scan()
     stale = sorted(n for n in ALLOWED if n not in public or n in reachable)
     assert not stale, f"deleted or now reachable — drop from ALLOWED: {stale}"
+
+
+def test_extraction_chain_takes_only_pdf_mode():
+    """The entry points pass the pages input plus ``pdf_mode`` and nothing
+    else, so the extraction chain takes nothing else: a per-request switch
+    would be threaded through every layer and set by no caller."""
+    from jarvis_ocr_service_spark.operators.cascade import extract_document
+    from jarvis_ocr_service_spark.operators.udfs import make_extract_map_fn
+    from jarvis_ocr_service_spark.plans.pipeline import run_pipeline
+
+    for fn, params in (
+        (run_pipeline, ["pages", "pdf_mode"]),
+        (make_extract_map_fn, ["pdf_mode"]),
+        (extract_document, ["payload", "lang", "pdf_mode"]),
+    ):
+        sig = inspect.signature(fn).parameters
+        optional = [n for n, p in sig.items() if p.default is not p.empty]
+        assert (list(sig), optional) == (params, ["pdf_mode"]), fn.__name__
