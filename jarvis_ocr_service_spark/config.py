@@ -1,8 +1,10 @@
 """Engine constants.
 
-Values mirror the reference configuration semantics
-(/root/reference/app/config.py:62-68, app/tier_mapping.py:4-26,
-prds/queue-flow.md:438-465) — they are data contracts, not code.
+Values mirror the reference configuration semantics (app/config.py:62-68,
+app/tier_mapping.py:4-26) — they are data contracts, not code. The
+reference's retry budget and retryable-code taxonomy are given up: the
+cascade is total and emits only non-retryable codes, and Spark task
+retries cover executor transients.
 """
 
 # Output text cap: extracted text is truncated to this many UTF-8 *bytes*
@@ -16,9 +18,6 @@ MIN_VALID_CHARS = 3
 # Validation reasons / error messages are capped to 200 chars
 # (reference: app/provider_manager.py:234-236, worker.py:212).
 MAX_REASON_CHARS = 200
-
-# Retry budget (reference: OCR_MAX_ATTEMPTS, app/config.py:65).
-MAX_ATTEMPTS = 3
 
 # Default language when none supplied (reference: OCR_LANGUAGE_DEFAULT).
 LANGUAGE_DEFAULT = "en"
@@ -45,19 +44,6 @@ AVAILABLE_TIERS = ["tesseract", "easyocr", "paddleocr"]
 
 # --- Error taxonomy ---------------------------------------------------------
 # (reference: worker.py:29-51, prds/queue-flow.md:438-456)
-NON_RETRYABLE_CODES = [
-    "bad_request",
-    "image_not_found",
-    "schema_invalid",
-    "unsupported_media",
-]
-RETRYABLE_CODES = [
-    "ocr_engine_error",
-    "file_read_error",
-    "redis_error",
-    "internal_error",
-]
-
 ERR_UNSUPPORTED_MEDIA = "unsupported_media"
 ERR_NOT_FOUND = "image_not_found"
 ERR_NO_VALID_OUTPUT = "ocr_no_valid_output"
@@ -66,15 +52,6 @@ ERR_NO_VALID_OUTPUT = "ocr_no_valid_output"
 MSG_PDF_UNSUPPORTED = "PDF files are not supported in v1"
 MSG_ALL_TIERS_FAILED = "All tiers failed validation"
 MSG_EMPTY_PAYLOAD = "Empty payload: no bytes to extract"
-
-
-def should_retry(error_code: str, attempt: int) -> bool:
-    """Retry decision — same taxonomy as the reference (worker.py:29-51)."""
-    if attempt >= MAX_ATTEMPTS:
-        return False
-    if error_code in NON_RETRYABLE_CODES:
-        return False
-    return error_code in RETRYABLE_CODES
 
 
 # --- Validator heuristics (deterministic analog of the LLM validity check,

@@ -27,9 +27,10 @@ bit-for-bit (the repo's standing oracle rule):
 Scale shape (how this survives 1000 executors):
 
 * the quantized base table is computed once in an Arrow stage and
-  persisted; per-iteration lineage is CONSTANT (assignment recomputes
-  from the cached base + a driver-side centroid literal), so no
-  checkpointing is needed — unlike pagerank's growing chain.
+  local-checkpointed (the fit loop reads it with an action every round);
+  per-iteration lineage is CONSTANT (assignment recomputes from the
+  checkpointed base + a driver-side centroid literal), so no round is
+  checkpointed — unlike pagerank's growing chain.
 * each iteration is ONE Arrow ``mapInPandas`` pass that both assigns
   points and emits per-batch per-(cluster, dim) partial sums; the only
   shuffle is the k*dim-row partial aggregate (map-side combined), and
@@ -53,7 +54,7 @@ from jarvis_ocr_service_spark.functions.simsearch import (
     quantized_cosine_col,
     quantized_vec,
 )
-from jarvis_ocr_service_spark.plans.caching import local_checkpoint, persist, release
+from jarvis_ocr_service_spark.plans.caching import local_checkpoint, release
 
 #: shift making every quantized coordinate nonnegative (|round(x*scale)|
 #: must stay below this — asserted in the quantize stage). 2^20 keeps the
@@ -116,7 +117,7 @@ def _assign_np(
 def _fit_centroids(
     pts: DataFrame, k: int, iters: int, chunk_rows: int
 ) -> np.ndarray:
-    """Fit loop over the persisted quantized base: smallest-id init,
+    """Fit loop over the checkpointed quantized base: smallest-id init,
     ``iters`` (assign, update) rounds; returns the (k, dim) int64
     centroid matrix. Points with a null ``q`` take no part."""
     pts = pts.filter(F.col("q").isNotNull())
@@ -192,7 +193,7 @@ def kmeans_assign(
     a null ``cluster`` and ``dist2`` (one output row per input row)."""
     if k < 1 or iters < 0:
         raise ValueError("k >= 1 and iters >= 0 required")
-    pts = persist(_quantized_base(df, vec_col, id_col, scale))
+    pts = local_checkpoint(_quantized_base(df, vec_col, id_col, scale))
     try:
         cent_fin = _fit_centroids(pts, k, iters, chunk_rows)
 
@@ -213,8 +214,7 @@ def kmeans_assign(
         out = pts.mapInPandas(
             final, schema="id long, cluster long, dist2 long"
         )
-        # materialize before releasing the base cache (the repo's
-        # count()-before-unpersist contract)
+        # materialize before release(pts) frees the base it reads
         out = local_checkpoint(out)
         return out.withColumnRenamed("id", id_col)
     finally:
@@ -266,7 +266,7 @@ def ivf_topk_quantized(
 
     if nprobe < 1 or nprobe > n_clusters:
         raise ValueError("1 <= nprobe <= n_clusters required")
-    pts = persist(_quantized_base(df, vec_col, id_col, scale))
+    pts = local_checkpoint(_quantized_base(df, vec_col, id_col, scale))
     try:
         cent = _fit_centroids(pts, n_clusters, iters, chunk_rows)
         qs = _quantize_shift_np(

@@ -51,15 +51,6 @@ def dedup_exact(df: DataFrame, text_col: str = "text", key_col: str = "doc_id") 
     )
 
 
-def exact_duplicate_groups(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(digest, count) for groups with >1 member."""
-    return (
-        df.groupBy(text_digest(F.col(text_col)).alias("digest"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-    )
-
-
 def dedup_lines(
     df: DataFrame,
     text_col: str = "text",

@@ -1,5 +1,5 @@
 """Link-graph analytics: quantized PageRank over a (src, dst) edge table
-— the authority job that consumes urls.outlink_host_edges' output.
+— the authority job over a host- or page-level link graph.
 
 Iterative algorithms are normally the hardest class to cross-check
 (float accumulation order differs run-to-run and engine-to-engine), so

@@ -22,9 +22,7 @@ tokenizes, explodes, or shuffles at all — per-term tf is ONE
 pattern, exactness vs the py-token split pinned by tests), so the plan
 is (1) one map-only pass feeding a global aggregate (n_docs + per-term
 df, collected: a handful of longs), (2) one map-only scoring pass ending
-in TakeOrderedAndProject. Zero Exchange nodes either way. For
-repeated-query workloads, build the (term, doc, tf) index once with
-:func:`build_term_index` and reuse it.
+in TakeOrderedAndProject. Zero Exchange nodes.
 
 Reference parity note: the reference service has no retrieval; this is
 part of the training-data layer (SURVEY §2 "beyond the reference").
@@ -32,36 +30,12 @@ part of the training-data layer (SURVEY §2 "beyond the reference").
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from jarvis_ocr_service_spark.functions.tokens import py_tokens_col
-
 DEFAULT_SCALE = 1_000_000
-
-# Backwards-compatible private alias; the shared definition lives in
-# functions/tokens.py (single source — byte-identity invariant).
-_py_tokens_col = py_tokens_col
-
-
-def build_term_index(
-    df: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    terms: Optional[List[str]] = None,
-) -> DataFrame:
-    """(key, term, tf) frame. With ``terms``, only those terms survive the
-    explode — the cheap single-query path; without, the full index (for
-    reuse across many queries — persist or write it)."""
-    ex = df.select(
-        F.col(key_col).alias("key"),
-        F.explode(_py_tokens_col(F.col(text_col))).alias("term"),
-    )
-    if terms is not None:
-        ex = ex.filter(F.col("term").isin([t.lower() for t in terms]))
-    return ex.groupBy("key", "term").agg(F.count(F.lit(1)).alias("tf"))
 
 
 def _java_quote(s: str) -> str:

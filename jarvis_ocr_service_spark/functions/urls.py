@@ -1,4 +1,4 @@
-"""URL canonicalization + canonical-URL dedup for crawl pipelines.
+"""URL canonicalization and link extraction for crawl pipelines.
 
 Common-Crawl-scale corpora carry the same page under many URL spellings
 (case-variant hosts, default ports, tracking params, fragments, trailing
@@ -120,46 +120,6 @@ def outlinks_col(html_col):
     )
     return F.when(content_kind_col(html_col) == KIND_HTML, links).otherwise(
         F.array().cast("array<string>")
-    )
-
-
-def outlink_host_edges(
-    df: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
-    """Host-level link graph: (src_host, dst_host, n) over absolute
-    http(s) outlinks — the input shape of PageRank-style authority jobs.
-    Relative links (no host) are dropped here; page-level outlinks are
-    available from :func:`outlinks_col` directly.
-
-    Scale shape: explode -> project hosts -> one groupBy shuffle carrying
-    only (host, host) pairs; partial aggregation runs map-side."""
-    src = F.regexp_extract(F.col(url_col), r"^[a-z][a-z0-9+.-]*://([^/?#]+)", 1)
-    ex = df.select(
-        src.alias("src_host"),
-        F.explode(outlinks_col(F.col(html_col))).alias("_l"),
-    )
-    dst = F.regexp_extract(F.col("_l"), r"^https?://([^/?#]+)", 1)
-    return (
-        ex.select("src_host", dst.alias("dst_host"))
-        .filter(F.col("dst_host") != "")
-        .groupBy("src_host", "dst_host")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def dedup_by_canonical_url(
-    df: DataFrame, url_col: str = "url"
-) -> DataFrame:
-    """Keep one row per canonical URL — deterministic winner (min raw URL).
-
-    Scale shape: identical to functions/dedup.dedup_exact — one shuffle on
-    the canonical string, min_by keeps lineage flat (no Window sort)."""
-    keyed = df.withColumn("_curl", canonical_url_col(F.col(url_col)))
-    other = [c for c in df.columns]
-    return (
-        keyed.groupBy("_curl")
-        .agg(F.min_by(F.struct(*other), F.col(url_col)).alias("_row"))
-        .select("_row.*")
     )
 
 

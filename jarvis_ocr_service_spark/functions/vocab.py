@@ -251,58 +251,6 @@ def _bpe_char_chain(df, k: int, text_col: str, min_count: int):
     return merges, seq
 
 
-def bpe_merges_char_local(word_counts, k: int, min_count: int = 1):
-    """Driver-side char-level BPE merge loop over COLLECTED word counts
-    — the production split for real tokenizer trainings (k ≈ 5×10^4):
-    the CLUSTER computes :func:`token_counts` (one corpus shuffle; the
-    result is vocab-sized by Heaps' law) and the DRIVER iterates merges
-    over those counts, because at large k the per-round Spark job
-    launch dominates (~0.2-0.5 s × 50k rounds = hours of scheduling for
-    seconds of work). Returns the same [(merge_round, sym_a, sym_b, n)]
-    rows as :func:`bpe_merges_char` — bit-identical on the same counts
-    (pinned by test) — so the learned merges feed
-    :func:`bpe_encode_char`/:func:`bpe_encode_ids` unchanged.
-
-    ``word_counts``: iterable of (token, count) — e.g.
-    ``[(r.token, r.n) for r in token_counts(df).collect()]``.
-
-    Complexity: O(vocab × k) pair rescan per round — fine to ~10^3
-    rounds on ~10^5-word vocabularies; a 50k-round production run wants
-    the standard incremental pair-index (update only words containing
-    the merged pair), which changes no semantics."""
-    if k <= 0:
-        raise ValueError("k must be positive")
-    from collections import Counter
-
-    wc = dict(word_counts)
-    seqs = {w: list(w[:-1]) + [w[-1] + BPE_EOW] for w in wc if w}
-    merges = []
-    for rnd in range(int(k)):
-        c = Counter()
-        for w, s in seqs.items():
-            n = wc[w]
-            for i in range(len(s) - 1):
-                c[(s[i], s[i + 1])] += n
-        if not c:
-            break
-        (a, b), n = min(c.items(), key=lambda kv: (-kv[1], kv[0]))
-        if n < min_count:
-            break
-        merges.append((rnd, a, b, int(n)))
-        merged = a + BPE_JOIN + b
-        for w, s in seqs.items():
-            out, i = [], 0
-            while i < len(s):
-                if i + 1 < len(s) and s[i] == a and s[i + 1] == b:
-                    out.append(merged)
-                    i += 2
-                else:
-                    out.append(s[i])
-                    i += 1
-            seqs[w] = out
-    return merges
-
-
 def bpe_merges_char(
     df: DataFrame, k: int, text_col: str = "text", min_count: int = 1
 ) -> DataFrame:

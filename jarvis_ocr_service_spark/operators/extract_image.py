@@ -88,14 +88,10 @@ def ocr_image(payload: bytes, lang: str = "en") -> str:
 
 
 # 2-letter -> tesseract 3-letter hint map (reference
-# tesseract_provider.py:42-46; first 3 hints joined with '+').
+# tesseract_provider.py:42-46); the image tier maps one lang per row.
 _TESS_LANG = {"en": "eng", "fr": "fra", "de": "deu", "es": "spa", "it": "ita"}
 
 
 def _tesseract_lang(lang: str) -> str:
     return _TESS_LANG.get(lang.lower(), lang.lower())
 
-
-def map_language_hints(hints) -> str:
-    """Reference T6: map first 3 hints through the table, join with '+'."""
-    return "+".join(_TESS_LANG.get(h.lower(), h.lower()) for h in hints[:3])

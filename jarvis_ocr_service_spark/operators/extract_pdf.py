@@ -1,4 +1,4 @@
-"""Minimal deterministic PDF text/layout extraction.
+"""Minimal deterministic PDF text extraction.
 
 The reference *rejects* PDFs in v1 (``error_code='unsupported_media'``,
 /root/reference/app/image_resolver.py:44-46, worker.py:82-141); its north
@@ -7,10 +7,8 @@ star adds a PDF/layout parse branch. This module implements both:
   * ``extract_pdf_text(payload)`` — a from-scratch parser for the subset of
     PDF used by uncompressed text-bearing documents: scans content streams
     for ``BT .. ET`` text objects, extracts ``(string) Tj`` / ``TJ`` show
-    operators with PDF string-escape handling, and captures ``Td``/``Tm``
-    text-positioning operands as layout anchors (the bbox convention of the
-    reference's coordinate transforms, apple_vision_provider.py:86-91 —
-    PDF is also bottom-left-origin).
+    operators with PDF string-escape handling. ``Td``/``Tm`` positions are
+    not read: no entry point consumes layout anchors.
   * the v1-compat *reject* mode lives in the pipeline (pdf_mode="reject").
 
 Real-world compressed PDFs (FlateDecode streams) are decompressed with
@@ -32,10 +30,6 @@ _BT_ET_RE = re.compile(rb"BT(.*?)ET", re.DOTALL)
 _PDF_STRING = rb"\(((?:\\.|[^\\()])*)\)"
 _TJ_RE = re.compile(_PDF_STRING + rb"\s*Tj")
 _TJARR_RE = re.compile(rb"\[((?:[^\[\]\\]|\\.)*?)\]\s*TJ")
-_TD_RE = re.compile(
-    rb"(-?\d+(?:\.\d+)?)\s+(-?\d+(?:\.\d+)?)\s+(?:Td|TD)"
-    rb"|(?:-?[\d.]+\s+){4}(-?\d+(?:\.\d+)?)\s+(-?\d+(?:\.\d+)?)\s+Tm"
-)
 
 _ESCAPES = {
     b"n": b"\n", b"r": b"\r", b"t": b"\t", b"b": b"\b", b"f": b"\f",
@@ -116,43 +110,6 @@ def extract_pdf_text(payload: bytes) -> Tuple[str, List[Tuple[int, int, str]]]:
         out.append(t)
         pos += len(t)
     return "\n".join(out), spans
-
-
-def extract_pdf_layout(payload: bytes) -> List[Tuple[str, float, float]]:
-    """Layout parse: text lines with their (x, y) positions from the
-    Td/TD/Tm operators preceding each show — PDF's bottom-left-origin
-    coordinate convention, the same convention the reference normalizes
-    in its vision tier (apple_vision_provider.py:86-91, T11). ``T*``
-    (next-line) advances y by the ``TL`` leading when set (our builder
-    emits ``14 TL``)."""
-    out: List[Tuple[str, float, float]] = []
-    _num = rb"(-?\d+(?:\.\d+)?)"
-    tok_re = re.compile(
-        rb"%s\s+%s\s+(Td|TD)|(?:%s\s+){4}%s\s+%s\s+Tm|%s\s+TL|(T\*)|%s\s*Tj"
-        % (_num, _num, _num, _num, _num, _num, _PDF_STRING),
-        re.DOTALL,
-    )
-    for chunk in _content_chunks(payload):
-        for bt in _BT_ET_RE.finditer(chunk):
-            x = y = 0.0
-            leading = 0.0
-            for m in tok_re.finditer(bt.group(1)):
-                if m.group(3):  # Td/TD
-                    x += float(m.group(1))
-                    y += float(m.group(2))
-                    if m.group(3) == b"TD":
-                        leading = -float(m.group(2))
-                elif m.group(5) is not None:  # Tm
-                    x, y = float(m.group(5)), float(m.group(6))
-                elif m.group(7) is not None:  # TL
-                    leading = float(m.group(7))
-                elif m.group(8):  # T*
-                    y -= leading
-                elif m.group(9) is not None:  # (...) Tj
-                    text = _unescape(m.group(9)).strip()
-                    if text:
-                        out.append((text, x, y))
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -14,8 +14,6 @@ Aggregates (relational, JVM-side):
 
 from __future__ import annotations
 
-from typing import List
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -23,21 +21,6 @@ from jarvis_ocr_service_spark.operators.cascade import PDF_MODE_PARSE
 from jarvis_ocr_service_spark.operators.udfs import make_extract_map_fn
 from jarvis_ocr_service_spark.plans.skew import url_host
 from jarvis_ocr_service_spark.schema import RESULTS_SCHEMA
-
-
-def join_on_row_key(left: DataFrame, right: DataFrame, keys: List[str],
-                    how: str = "inner") -> DataFrame:
-    """USING-style join on row keys with *null-safe* equality (warc_ts may
-    legitimately be null in hand-built tables): emits each key column once,
-    from the left side."""
-    cond = None
-    r = right
-    for k in keys:
-        r = r.withColumnRenamed(k, f"_rk_{k}")
-    for k in keys:
-        c = left[k].eqNullSafe(r[f"_rk_{k}"])
-        cond = c if cond is None else (cond & c)
-    return left.join(r, cond, how).drop(*[f"_rk_{k}" for k in keys])
 
 
 def run_pipeline(pages: DataFrame, pdf_mode: str = PDF_MODE_PARSE) -> DataFrame:
@@ -56,33 +39,6 @@ def run_pipeline(pages: DataFrame, pdf_mode: str = PDF_MODE_PARSE) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Aggregates over results
 # ---------------------------------------------------------------------------
-
-def refresh_pages_text(pages: DataFrame, results: DataFrame) -> DataFrame:
-    """Write-back contract (north star: 'writes extracted text plus
-    character-span offsets back'): a new pages-shaped table whose ``text``
-    column is the extracted text (empty where extraction failed), plus the
-    spans. One (url, warc_ts)-keyed join."""
-    extracted = results.select(
-        "url",
-        "warc_ts",
-        F.col("text").alias("_new_text"),
-        F.col("spans").alias("spans"),
-        F.col("is_valid").alias("_ok"),
-    )
-    return (
-        join_on_row_key(pages, extracted, ["url", "warc_ts"], how="left")
-        .select(
-            "url",
-            "warc_ts",
-            "html",
-            F.when(F.coalesce(F.col("_ok"), F.lit(False)), F.col("_new_text"))
-            .otherwise(F.lit(""))
-            .alias("text"),
-            "lang",
-            "spans",
-        )
-    )
-
 
 def status_by_host(results: DataFrame) -> DataFrame:
     """Per-host completion status: 'success' iff >=1 valid row (A1 bool_or

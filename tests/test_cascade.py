@@ -80,18 +80,6 @@ def test_truncation_flag_and_byte_cap():
     r["text"].encode("utf-8").decode("utf-8")
 
 
-def test_language_hint_mapping():
-    """T6/O4: 2->3-letter tesseract map, first-3 slice, '+' join,
-    pass-through lowercase default (tesseract_provider.py:42-46)."""
-    from jarvis_ocr_service_spark.operators.extract_image import map_language_hints
-
-    assert map_language_hints(["en"]) == "eng"
-    assert map_language_hints(["EN", "fr", "de"]) == "eng+fra+deu"
-    assert map_language_hints(["en", "fr", "de", "es"]) == "eng+fra+deu"  # [:3]
-    assert map_language_hints(["zz"]) == "zz"  # unknown passes through
-    assert map_language_hints([]) == ""
-
-
 def test_total_function_on_junk():
     for junk in (b"\x00\xff\xfe", b"<" * 10000, bytes(range(256)) * 4):
         r = extract_document(junk, "en")

@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 from jarvis_ocr_service_spark.functions.dedup import (
     dedup_exact,
     dedup_lines,
-    exact_duplicate_groups,
     minhash_lsh_pairs,
     minhash_signature,
     ngram_jaccard_pairs,
@@ -36,11 +35,6 @@ def test_dedup_exact(docs):
     assert kept[0] == 2  # doc 1 collapsed into 0 (min key)
     assert 1 not in kept
     assert len(kept) == 5
-
-
-def test_exact_duplicate_groups(docs):
-    groups = exact_duplicate_groups(docs).collect()
-    assert len(groups) == 1 and groups[0].n == 2
 
 
 def test_dedup_lines_corpus_rule(spark):

@@ -34,29 +34,6 @@ def test_garbage_never_raises():
         assert isinstance(text, str)
 
 
-def test_layout_positions():
-    from jarvis_ocr_service_spark.operators.extract_pdf import extract_pdf_layout
-
-    lines = ["first line", "second line", "third"]
-    layout = extract_pdf_layout(build_minimal_pdf(lines))
-    assert [t for t, _, _ in layout] == lines
-    xs = [x for _, x, _ in layout]
-    ys = [y for _, _, y in layout]
-    assert xs == [72.0, 72.0, 72.0]
-    assert ys == [720.0, 706.0, 692.0]  # T* advances by the 14pt leading
-    # bottom-left origin: later lines are lower on the page
-    assert ys == sorted(ys, reverse=True)
-
-
-def test_layout_tm_and_td():
-    from jarvis_ocr_service_spark.operators.extract_pdf import extract_pdf_layout
-
-    content = b"BT 1 0 0 1 100 500 Tm (at tm) Tj 10 -20 Td (moved) Tj ET"
-    pdf = b"%PDF-1.4\n" + content + b"\n%%EOF"
-    layout = extract_pdf_layout(pdf)
-    assert layout == [("at tm", 100.0, 500.0), ("moved", 110.0, 480.0)]
-
-
 def test_flate_stream():
     import zlib
 

@@ -5,7 +5,11 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from jarvis_ocr_service_spark.config import MAX_REASON_CHARS, MAX_TEXT_BYTES
-from jarvis_ocr_service_spark.operators.cascade import extract_document
+from jarvis_ocr_service_spark.operators.cascade import (
+    PDF_MODE_PARSE,
+    PDF_MODE_REJECT,
+    extract_document,
+)
 
 payloads = st.one_of(
     st.binary(max_size=400),
@@ -18,13 +22,14 @@ payloads = st.one_of(
     # png-ish junk
     st.binary(max_size=120).map(lambda b: b"\x89PNG\r\n\x1a\n" + b),
 )
+pdf_modes = st.sampled_from([PDF_MODE_PARSE, PDF_MODE_REJECT])
 
 
-@given(payloads, st.sampled_from(["en", "fr", "zz", ""]))
+@given(payloads, st.sampled_from(["en", "fr", "zz", ""]), pdf_modes)
 @settings(max_examples=300, deadline=None)
-def test_total_deterministic_and_bounded(payload, lang):
-    r1 = extract_document(payload, lang)
-    r2 = extract_document(payload, lang)
+def test_total_deterministic_and_bounded(payload, lang, pdf_mode):
+    r1 = extract_document(payload, lang, pdf_mode=pdf_mode)
+    r2 = extract_document(payload, lang, pdf_mode=pdf_mode)
     assert r1 == r2  # deterministic
     r1["text"].encode("utf-8")  # valid unicode
     assert r1["text_len"] <= MAX_TEXT_BYTES
@@ -39,10 +44,12 @@ def test_total_deterministic_and_bounded(payload, lang):
         assert 0 <= s <= e <= len(r1["text"])
 
 
-@given(st.binary(min_size=0, max_size=100))
+@given(payloads, pdf_modes)
 @settings(max_examples=120, deadline=None)
-def test_error_rows_never_carry_text(payload):
-    r = extract_document(payload, "en")
+def test_error_rows_never_carry_text(payload, pdf_mode):
+    """No error code the cascade emits is retryable, so the engine keeps
+    no retry loop; Spark task retries cover executor transients."""
+    r = extract_document(payload, "en", pdf_mode=pdf_mode)
     if not r["is_valid"]:
         assert r["text"] == "" and r["text_len"] == 0
         assert r["error_code"] in {

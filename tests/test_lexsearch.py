@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from jarvis_ocr_service_spark.functions.lexsearch import (
     bm25_topk_quantized,
-    build_term_index,
     tfidf_topk_quantized,
 )
 from jarvis_ocr_service_spark.functions.tokens import py_tokens_col
@@ -70,14 +69,6 @@ def test_n_docs_param_skips_count(docs_df):
 def test_empty_query_raises(docs_df):
     with pytest.raises(ValueError):
         tfidf_topk_quantized(docs_df, "   ")
-
-
-def test_full_index_form(docs_df):
-    idx = build_term_index(docs_df)
-    rows = {(r.key, r.term): r.tf for r in idx.collect()}
-    assert rows[(3, "apple")] == 4
-    assert rows[(6, "apple")] == 1  # lowercased
-    assert (5, "") not in rows
 
 
 def test_plan_is_map_only_topk(docs_df):

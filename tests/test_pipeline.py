@@ -135,24 +135,6 @@ def test_error_counters(spark, results):
     assert counts == dict(exp)
 
 
-def test_refresh_pages_text_write_back(spark):
-    from jarvis_ocr_service_spark.plans.pipeline import refresh_pages_text
-
-    pages = synthesize_pages(spark, 50, seed=42, num_partitions=2)
-    res = run_pipeline(pages)
-    updated = refresh_pages_text(pages, res)
-    assert updated.columns == ["url", "warc_ts", "html", "text", "lang", "spans"]
-    rows = {r.url: r for r in updated.collect()}
-    assert len(rows) == 50
-    for i in range(50):
-        exp = expected_result(i, seed=42)
-        got = rows[exp["url"]]
-        if exp["is_valid"]:
-            assert got.text == exp["text"]
-        else:
-            assert got.text == ""
-
-
 def test_extraction_plan_is_shuffle_free(spark):
     """The fused pipeline must be a pure map job: no Exchange in the plan."""
     pages = synthesize_pages(spark, 10, seed=42, num_partitions=2)

@@ -10,9 +10,11 @@ identifier-shaped string constant (getattr-style lookups). Names resolve
 by bare name across modules, which only over-approximates reachability, so
 the scan never flags a function some entry point really calls.
 
-``ALLOWED`` lists the public functions still reachable only from tests (or
-from nowhere). It may only shrink: a name that is deleted or becomes
-reachable must leave the list.
+``ALLOWED`` lists the public functions no entry point reaches, and only two
+kinds: slow references that tests pin a fast path against, and the
+run-report inputs. Reference contracts nothing produces and API only
+tests called are deleted, not listed. The list may only shrink: a name
+that is deleted or becomes reachable must leave it.
 """
 
 from __future__ import annotations
@@ -25,18 +27,9 @@ from typing import Dict, Set, Tuple
 REPO = Path(__file__).resolve().parent.parent
 PKG = REPO / "jarvis_ocr_service_spark"
 
-# Reference contracts and run-report inputs; wiring or deleting each is a
-# decision of its own.
-_REFERENCE_CONTRACTS = {
-    "bpe_merges_char_local": "parity reference and the planned local BPE merge loop",
-    "run_with_retries": "plans/retry.py reference contract",
-    "should_retry_col": "plans/retry.py reference contract",
-    "split_retryable": "plans/retry.py reference contract",
-    "accumulate_verdicts": "streaming/stateful.py reference contract",
-    "run_pending_validation_stream": "streaming/stateful.py reference contract",
-    "extract_pdf_layout": "reference contract (PDF layout spans)",
-    "refresh_pages_text": "write-back reference contract",
-    "join_on_row_key": "used by refresh_pages_text and plans/retry.py",
+# Run-report inputs that no entry point reads yet; wiring or deleting them
+# is one decision, made with the run report.
+_RUN_REPORT_INPUTS = {
     "error_counters": "run-report input (verify recipe)",
     "manifest_counters": "run-report input",
 }
@@ -46,20 +39,12 @@ _SLOW_REFERENCES = {
     "simhash64_one": "reference for the vectorized simhash stage",
     "truncate_text": "reference for textops.truncate_with_len",
     "stopword_hits_from_toks": "reference for the regexp_count stopword counters",
+    "token_count_col": "standalone form of the staged with_text_stats",
+    "stopword_hits_col": "standalone form of the staged with_text_stats",
+    "lang_id_col": "standalone form of the staged with_text_stats",
+    "quality_score_col": "standalone form of the staged with_text_stats",
 }
-# Test-only API not yet wired to an entry point or deleted.
-_UNDECIDED = {
-    "build_term_index": "lexsearch",
-    "dedup_by_canonical_url": "urls",
-    "exact_duplicate_groups": "dedup",
-    "lang_id_col": "textstats Column expression",
-    "quality_score_col": "textstats Column expression",
-    "token_count_col": "textstats Column expression",
-    "stopword_hits_col": "textstats Column expression",
-    "map_language_hints": "OCR language-hint map",
-    "outlink_host_edges": "urls",
-}
-ALLOWED: Dict[str, str] = {**_REFERENCE_CONTRACTS, **_SLOW_REFERENCES, **_UNDECIDED}
+ALLOWED: Dict[str, str] = {**_SLOW_REFERENCES, **_RUN_REPORT_INPUTS}
 
 
 def _names(node: ast.AST) -> Set[str]:
@@ -130,6 +115,22 @@ def test_allowlist_only_shrinks():
     public, reachable = _scan()
     stale = sorted(n for n in ALLOWED if n not in public or n in reachable)
     assert not stale, f"deleted or now reachable — drop from ALLOWED: {stale}"
+
+
+def test_slow_references_are_called_from_tests():
+    """A slow reference is allowed only because a test pins a fast path
+    against it, so some other test module must call it."""
+    called: Set[str] = set()
+    for f in (REPO / "tests").glob("*.py"):
+        if f.name != Path(__file__).name:
+            called |= {
+                n.func.id if isinstance(n.func, ast.Name) else n.func.attr
+                for n in ast.walk(ast.parse(f.read_text()))
+                if isinstance(n, ast.Call)
+                and isinstance(n.func, (ast.Name, ast.Attribute))
+            }
+    uncalled = sorted(set(_SLOW_REFERENCES) - called)
+    assert not uncalled, f"slow references no test calls: {uncalled}"
 
 
 def test_extraction_chain_takes_only_pdf_mode():

@@ -182,6 +182,7 @@ def test_spaced_stopword_counter_equals_filter_form(spark):
         LANGS,
         STOPWORDS,
         spaced_lower_col,
+        stopword_hits_col,
         stopword_hits_from_spaced,
         stopword_hits_from_toks,
         tokens_col,
@@ -213,6 +214,8 @@ def test_spaced_stopword_counter_equals_filter_form(spark):
                 spaced_lower_col(F.col("text")), lang
             ).alias(f"s_{lang}")
         )
+        cols.append(stopword_hits_col(F.col("text"), lang).alias(f"c_{lang}"))
     for r in df.select(*cols).collect():
         for lang in LANGS:
             assert r[f"f_{lang}"] == r[f"s_{lang}"], (cases[r.i], lang)
+            assert r[f"c_{lang}"] == r[f"s_{lang}"], (cases[r.i], lang)

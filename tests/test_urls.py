@@ -1,4 +1,4 @@
-"""URL canonicalization: pinned rules, Spark/DuckDB parity, dedup shape."""
+"""URL canonicalization: pinned rules, Spark/DuckDB parity, link extraction."""
 
 import duckdb
 import pytest
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from jarvis_ocr_service_spark.functions.urls import (
     canonical_url_col,
     canonical_url_duck_sql,
-    dedup_by_canonical_url,
 )
 
 CASES = [
@@ -64,21 +63,6 @@ def test_duckdb_mirror_is_identical(spark):
         assert got[i] == c, (urls[i], got[i], c)
 
 
-def test_dedup_by_canonical_url(spark):
-    rows = [
-        (1, "HTTP://A.COM:80/x"),
-        (2, "http://a.com/x"),
-        (3, "http://a.com/x?utm_source=s"),
-        (4, "http://a.com/y"),
-    ]
-    df = spark.createDataFrame(rows, "id long, url string")
-    out = dedup_by_canonical_url(df).collect()
-    assert len(out) == 2
-    winners = {r.id for r in out}
-    # min raw URL wins deterministically within each canonical family
-    assert 4 in winners and len(winners & {1, 2, 3}) == 1
-
-
 def test_canonicalize_is_codegen_only(spark):
     """Canonicalization must stay JVM-side: no Python eval node, no
     exchange — it's a project over the scan."""
@@ -125,26 +109,6 @@ def test_outlinks_col_quote_styles_order_and_binary_gating(spark):
     assert got[5] == ["/ok"]
     assert got[6] == ["/caf�/menu"]
     assert got[7] == []
-
-
-def test_outlink_host_edges(spark):
-    from jarvis_ocr_service_spark.functions.urls import outlink_host_edges
-
-    page = (
-        b'<html><a href="https://other.com/x">abs</a>'
-        b'<a href="/rel">rel</a>'
-        b'<a href="http://other.com/y">abs2</a>'
-        b'<a href="https://third.org/z">abs3</a></html>'
-    )
-    df = spark.createDataFrame(
-        [("https://me.example.com/p1", page)], "url string, html binary"
-    )
-    got = {(r.src_host, r.dst_host): r.n for r in outlink_host_edges(df).collect()}
-    # relative link dropped; other.com counted twice
-    assert got == {
-        ("me.example.com", "other.com"): 2,
-        ("me.example.com", "third.org"): 1,
-    }
 
 
 def test_anchor_texts_pinned_semantics(spark):

@@ -303,30 +303,6 @@ def test_bpe_vocab_matches_brute_force(spark):
     assert sum(k0.values()) == total_chars
 
 
-@pytest.mark.parametrize("n_docs", [30, 120])
-def test_bpe_merges_char_local_equals_cluster(spark, n_docs):
-    """The production split (cluster token_counts + driver-side merge
-    loop) is bit-identical to the all-cluster form on the same counts
-    — so a 50k-round training can move rounds to the driver without
-    changing a single learned merge."""
-    from jarvis_ocr_service_spark.functions.vocab import (
-        bpe_merges_char_local,
-    )
-
-    docs = _corpus(n_docs)
-    df = spark.createDataFrame([(d,) for d in docs], "text string")
-    cluster = [
-        (r.merge_round, r.sym_a, r.sym_b, r.n)
-        for r in bpe_merges_char(df, 8).orderBy("merge_round").collect()
-    ]
-    counts = [(r.token, r.n) for r in token_counts(df).collect()]
-    assert bpe_merges_char_local(counts, 8) == cluster
-    # early-stop parity too
-    assert bpe_merges_char_local(counts, 8, min_count=10**9) == []
-    with pytest.raises(ValueError):
-        bpe_merges_char_local(counts, 0)
-
-
 def test_bpe_encode_ids_matches_brute_force_and_unk(spark):
     """Full tokenizer chain: ids == position of each encoded symbol in
     the frequency-ranked vocab; symbols outside the table -> unk_id."""
