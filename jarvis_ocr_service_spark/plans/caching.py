@@ -8,9 +8,9 @@ free those frames itself. Instead every such frame is made through
 :func:`persist` or :func:`local_checkpoint`, which register it in the
 current :func:`cache_scope`; the scope releases all of them when it exits,
 by exception too. Action sites open one scope per action: the CLI's
-``prepare``, each ``run_checkpointed`` batch and each ``run_stream_prepare``
-micro-batch. The current scope lives in a ``contextvars.ContextVar``, so
-every thread (a ``foreachBatch`` callback thread, say) has its own.
+``prepare`` and each ``run_stream_prepare`` micro-batch. The current scope
+lives in a ``contextvars.ContextVar``, so every thread (a ``foreachBatch``
+callback thread, say) has its own.
 
 Which of the two a builder uses follows one rule. A frame the builder
 itself reads with an action (a scalar collect, a convergence test, a

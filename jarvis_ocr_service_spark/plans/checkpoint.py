@@ -24,28 +24,35 @@ mirror the reference's recommended metrics (prds/queue-flow.md:469-479).
 from __future__ import annotations
 
 import uuid
-from typing import Callable, List, Optional
+from typing import List
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jarvis_ocr_service_spark.plans.caching import cache_scope, persist
-
 
 def list_input_files(spark: SparkSession, input_path: str) -> List[str]:
     """Deterministic sorted listing of the input table's data files, via the
-    Hadoop FS API (works for file://, hdfs://, s3a:// alike)."""
+    Hadoop FS API (works for file://, hdfs://, s3a:// alike).
+
+    Only a flat table is accepted: a partitioned one (``partitionBy``)
+    keeps its files in subdirectories this listing does not descend into,
+    so it raises instead of planning zero batches."""
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     path = jvm.org.apache.hadoop.fs.Path(input_path)
     fs = path.getFileSystem(conf)
-    it = fs.listStatus(path)
-    files = [
-        st.getPath().toString()
-        for st in it
-        if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+    visible = [
+        st for st in fs.listStatus(path)
+        if not st.getPath().getName().startswith(("_", "."))
     ]
-    return sorted(files)
+    subdirs = sorted(st.getPath().getName() for st in visible if st.isDirectory())
+    if subdirs:
+        raise ValueError(
+            f"input table {input_path} has subdirectories {subdirs[:3]} — "
+            "a partitioned table is not supported; write the pages table "
+            "without partitionBy"
+        )
+    return sorted(st.getPath().toString() for st in visible)
 
 
 def plan_batches(files: List[str], files_per_batch: int) -> List[List[str]]:
@@ -89,66 +96,17 @@ def committed_batch_files(spark: SparkSession, manifest_path: str) -> dict:
     return {r.batch_id: list(r.files) for r in rows}
 
 
-def probe_committed_digests(keyed: DataFrame, seen: DataFrame) -> DataFrame:
-    """Drop ``keyed`` rows whose ``_digest`` appears in the committed
-    store ``seen`` — WITHOUT shuffling the store (the metastore-free
-    scale plan, r5 verdict item 7).
-
-    The naive ``keyed.join(seen, "_digest", "left_anti")`` shuffles the
-    WHOLE committed digest set every increment — O(corpus) per batch.
-    Inverted: the batch's digest set (bounded — one batch of distinct
-    digests) broadcasts into a LEFT SEMI probe of the store, which is
-    therefore scanned map-only (columnar 16 B/row, zero Exchange); the
-    hit set — at most one row per (matching digest × committed batch
-    it appears in, duplicates harmless to anti semantics) — broadcasts
-    back into the anti-join. Plan: two BroadcastHashJoins, ZERO
-    Exchanges (gated by test_checkpoint)."""
-    hits = seen.select("_digest").join(
-        F.broadcast(keyed.select("_digest")), "_digest", "left_semi"
-    )
-    return keyed.join(F.broadcast(hits), "_digest", "left_anti")
-
-
 def run_checkpointed(
     spark: SparkSession,
     input_path: str,
     output_path: str,
     manifest_path: str,
-    pipeline_fn: Optional[Callable[[DataFrame], DataFrame]] = None,
+    pdf_mode: str = "parse",
     files_per_batch: int = 4,
-    max_batches: Optional[int] = None,
-    dedup_against_committed: bool = False,
 ) -> dict:
-    """Process the input table batch-by-batch with manifest commits.
-
-    ``max_batches`` limits how many *uncommitted* batches run (used by the
-    kill-and-resume test; None = all). Returns run stats.
-
-    ``dedup_against_committed=True`` adds INCREMENTAL exact dedup across
-    batches *and across resumed runs*: each batch drops pages whose
-    payload digest already appears in any manifest-COMMITTED batch's
-    output (plus within-batch duplicates, deterministic min-url winner),
-    before extraction runs — the batch twin of the streaming path's
-    dropDuplicatesWithinWatermark, closing the r3 gap where a resumed
-    run deduped only within-batch. Mechanism: every batch writes its
-    surviving digests to ``<output>/_digests/batch_id=<k>/`` under the
-    same overwrite-then-commit protocol as the data (orphans from a
-    crash are overwritten on re-run; only committed ids are read back),
-    and the underscore prefix keeps digest files invisible to readers of
-    ``output_path``.
-
-    Scale: the parquet-dir digest store is METASTORE-FREE and
-    ZERO-SHUFFLE (r5 verdict item 7). The probe inverts the join: the
-    incoming batch's digest set (bounded — one batch, sized by
-    ``files_per_batch``) broadcasts into a LEFT SEMI join against the
-    committed store, so the store is scanned map-only (16 B/row
-    columnar, never shuffled, row-group-prunable since digests are
-    written sorted); the resulting hit set is at most
-    |batch ∩ store| rows and broadcast back into the anti-join. Total
-    Exchanges on the store side: ZERO (asserted by test_checkpoint's
-    plan gate). Per-batch cost is one columnar scan of the committed
-    digests, and no catalog is required. Only manifest-committed ids are
-    ever read.
+    """Extract the input table batch-by-batch with manifest commits; a
+    re-run after a crash skips the committed batches and finishes the
+    rest. Returns run stats.
 
     Resume safety: a committed batch_id is only skipped when the *planned*
     file list for that batch_id equals the manifest's recorded ``files``.
@@ -157,11 +115,6 @@ def run_checkpointed(
     file sets (gaps + duplicates), so any mismatch is a hard error rather
     than a guess.
     """
-    if pipeline_fn is None:
-        from jarvis_ocr_service_spark.plans.pipeline import run_pipeline
-
-        pipeline_fn = run_pipeline
-
     run_id = str(uuid.uuid4())
     files = list_input_files(spark, input_path)
     batches = plan_batches(files, files_per_batch)
@@ -169,7 +122,6 @@ def run_checkpointed(
 
     ran = 0
     skipped = 0
-    committed_so_far = set(done)  # grows as THIS run commits batches too
     for batch_id, batch_files in enumerate(batches):
         if batch_id in done:
             if done[batch_id] != list(batch_files):
@@ -184,9 +136,6 @@ def run_checkpointed(
                 )
             skipped += 1
             continue
-        if max_batches is not None and ran >= max_batches:
-            break
-
         _run_one_batch(
             spark,
             spark.read.parquet(*batch_files),
@@ -194,12 +143,9 @@ def run_checkpointed(
             batch_files,
             output_path,
             manifest_path,
-            pipeline_fn,
-            dedup_against_committed,
-            committed_so_far,
+            pdf_mode,
             run_id,
         )
-        committed_so_far.add(batch_id)
         ran += 1
 
     return {
@@ -207,14 +153,9 @@ def run_checkpointed(
         "n_batches": len(batches),
         "ran": ran,
         "skipped_committed": skipped,
-        "complete": skipped + ran == len(batches),
     }
 
 
-# every frame a batch persists (pipeline_fn's included) is released when
-# the batch ends — by exception too, so a failed batch leaks nothing into
-# the session (r5 ADVICE)
-@cache_scope()
 def _run_one_batch(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -222,44 +163,13 @@ def _run_one_batch(
     batch_files: List[str],
     output_path: str,
     manifest_path: str,
-    pipeline_fn: Callable[[DataFrame], DataFrame],
-    dedup_against_committed: bool,
-    committed_so_far: set,
+    pdf_mode: str,
     run_id: str,
 ) -> None:
-    """One batch: optional cross-run dedup, pipeline, idempotent data
-    write, manifest commit."""
-    if dedup_against_committed:
-        digest = F.md5(F.coalesce(F.col("html"), F.lit(b"")))
-        keyed = batch_df.withColumn("_digest", digest)
-        cols = batch_df.columns
-        # within-batch: deterministic min-url winner per digest (so a
-        # resumed run reproduces a one-shot run exactly)
-        keyed = (
-            keyed.groupBy("_digest")
-            .agg(F.min_by(F.struct(*cols), F.col("url")).alias("_row"))
-            .select("_digest", "_row.*")
-        )
-        committed_ids = sorted(committed_so_far & set(range(batch_id)))
-        # zero-shuffle probe: persist the within-batch-deduped frame FIRST
-        # so the broadcast digest set and the probe side materialize from
-        # the same cached data (the ADVICE-r4 determinism rationale), then
-        # persist the survivors so the digest write and the pipeline share
-        # one computation. Both caches are batch-bounded.
-        keyed = persist(keyed)
-        if committed_ids:
-            seen = spark.read.parquet(
-                *[f"{output_path}/_digests/batch_id={i}" for i in committed_ids]
-            )
-            keyed = persist(probe_committed_digests(keyed, seen))
-        # sorted within the file: parquet row-group min/max stats on the
-        # digest column stay tight, so future point probes that push
-        # predicates prune most of the store
-        keyed.select("_digest").sortWithinPartitions("_digest").write.mode(
-            "overwrite"
-        ).parquet(f"{output_path}/_digests/batch_id={batch_id}")
-        batch_df = keyed.drop("_digest")
-    results = pipeline_fn(batch_df)
+    """One batch: extraction, idempotent data write, manifest commit."""
+    from jarvis_ocr_service_spark.plans.pipeline import run_pipeline
+
+    results = run_pipeline(batch_df, pdf_mode=pdf_mode)
     batch_out = f"{output_path}/batch_id={batch_id}"
     results.write.mode("overwrite").parquet(batch_out)
 

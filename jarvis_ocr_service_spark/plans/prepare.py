@@ -3,6 +3,8 @@ corpus actually runs.
 
     pages -> extraction cascade -> keep valid text
           -> quality gate (lang-id + quality score + token bounds)
+             [these three are quality_gated, which stream-prepare's
+             micro-batches call too]
           -> [optional] banned-wordlist drop (functions/wordfilter)
           -> exact dedup (content digest)
           -> near-dup collapse (MinHash-LSH, keep min url per cluster)
@@ -42,17 +44,39 @@ from pyspark.sql import functions as F
 
 from jarvis_ocr_service_spark.plans.caching import local_checkpoint
 
+# token bounds of the corpus gate (quality_gated)
+MIN_TOKENS = 10
+MAX_TOKENS = 100_000
+
+
+def quality_gated(
+    pages: DataFrame, min_quality: float = 0.5, pdf_mode: str = "parse"
+) -> DataFrame:
+    """pages -> (url, text, n_tokens, lang_guess, quality): the corpus gate
+    shared by the batch and streaming prepare pipelines — extraction
+    cascade, keep valid text, then token bounds and the quality score."""
+    from jarvis_ocr_service_spark.functions.textstats import with_text_stats
+    from jarvis_ocr_service_spark.plans.pipeline import run_pipeline
+
+    extracted = run_pipeline(pages, pdf_mode=pdf_mode).filter(F.col("is_valid"))
+    # token split staged once (with_text_stats), not re-split per stat
+    return with_text_stats(
+        extracted.select("url", "text"),
+        stats=("n_tokens", "lang_guess", "quality"),
+    ).filter(
+        (F.col("n_tokens") >= MIN_TOKENS)
+        & (F.col("n_tokens") <= MAX_TOKENS)
+        & (F.col("quality") >= min_quality)
+    )
+
 
 def prepare_training_data(
     pages: DataFrame,
-    min_tokens: int = 10,
-    max_tokens: int = 100_000,
     min_quality: float = 0.5,
     near_dup_threshold: Optional[float] = 0.85,
     pdf_mode: str = "parse",
     redact_pii: bool = False,
     benchmark: Optional[DataFrame] = None,
-    contamination_ngram: int = 13,
     blocklist=None,
     line_dedup_max_count: int = 0,
     near_dup_mode: str = "pairs",
@@ -65,8 +89,8 @@ def prepare_training_data(
     rule chain (a pure projection — off by default to preserve the
     byte-identity contract with the extraction goldens). ``benchmark``
     (a DataFrame with a ``text`` column) enables 13-gram decontamination:
-    corpus rows sharing any ``contamination_ngram``-token gram with it
-    are dropped (functions/contamination). ``blocklist`` (an iterable of
+    corpus rows sharing any 13-token gram with it are dropped
+    (functions/contamination). ``blocklist`` (an iterable of
     banned words) drops documents containing any of them BEFORE dedup —
     a codegen filter, C4's cleanup rule. ``line_dedup_max_count > 0``
     additionally removes every line repeated corpus-wide more than that
@@ -111,8 +135,6 @@ def prepare_training_data(
         minhash_lsh_pairs,
         text_digest,
     )
-    from jarvis_ocr_service_spark.functions.textstats import with_text_stats
-    from jarvis_ocr_service_spark.plans.pipeline import run_pipeline
 
     if keep_ppl_buckets:
         # validate against the 3-bucket domain up front (the CLI already
@@ -131,17 +153,7 @@ def prepare_training_data(
             f"near_dup_mode must be 'pairs' or 'buckets', got {near_dup_mode!r}"
         )
 
-    extracted = run_pipeline(pages, pdf_mode=pdf_mode).filter(F.col("is_valid"))
-
-    # token split staged once (with_text_stats), not re-split per stat
-    scored = with_text_stats(
-        extracted.select("url", "text"),
-        stats=("n_tokens", "lang_guess", "quality"),
-    ).filter(
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("n_tokens") <= max_tokens)
-        & (F.col("quality") >= min_quality)
-    )
+    scored = quality_gated(pages, min_quality=min_quality, pdf_mode=pdf_mode)
     if blocklist:
         from jarvis_ocr_service_spark.functions.wordfilter import (
             drop_by_wordlist,
@@ -222,11 +234,7 @@ def prepare_training_data(
             )
 
             corpus = decontaminate(
-                corpus,
-                benchmark,
-                text_col="text",
-                key_col="url",
-                n=contamination_ngram,
+                corpus, benchmark, text_col="text", key_col="url"
             )
         if redact_pii:
             from jarvis_ocr_service_spark.functions.pii import redact_pii_col

@@ -8,14 +8,12 @@ streaming checkpoint for exactly-once file tracking (subsumes the
 reference's requeue/attempt bookkeeping; a failed micro-batch replays and
 overwrites idempotently).
 
-``trigger(availableNow=True)`` drains the backlog and stops — the
-batch-resume twin of the manifest runner in plans/checkpoint.py; leave it
-off for a long-lived tail-the-table job.
+Both runners use ``trigger(availableNow=True)``: a run drains the backlog
+and stops, the batch-resume twin of the manifest runner in
+plans/checkpoint.py, and the next run picks up the files added since.
 """
 
 from __future__ import annotations
-
-from typing import Optional
 
 from pyspark.sql import SparkSession
 
@@ -50,30 +48,24 @@ def run_stream(
     input_path: str,
     output_path: str,
     checkpoint_path: str,
-    available_now: bool = True,
     pdf_mode: str = "parse",
-    max_files_per_trigger: Optional[int] = None,
 ):
     """Start the streaming extraction job; returns the StreamingQuery."""
     from jarvis_ocr_service_spark.plans.pipeline import run_pipeline
 
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    pages = reader.parquet(input_path)
+    pages = spark.readStream.schema(PAGES_SCHEMA).parquet(input_path)
 
     def process_batch(batch_df, batch_id: int):
         results = run_pipeline(batch_df, pdf_mode=pdf_mode)
         _write_batch_idempotent(results, output_path, batch_id)
 
-    writer = (
+    return (
         pages.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _sidecar_params_guard(spark: SparkSession, bands_path: str, params: dict) -> None:
@@ -136,10 +128,8 @@ def _committed_batch_ids(spark: SparkSession, path_str: str) -> set:
     return ids
 
 
-def _committed_corpus_exists(spark: SparkSession, output_path: str) -> bool:
-    """True iff the prepare output holds at least one batch partition
-    with committed part files."""
-    return bool(_committed_batch_ids(spark, output_path))
+# MinHash signature length of the near-dup sidecar (pinned in _params.json)
+_NUM_HASHES = 16
 
 
 def run_stream_prepare(
@@ -147,24 +137,19 @@ def run_stream_prepare(
     input_path: str,
     output_path: str,
     checkpoint_path: str,
-    available_now: bool = True,
     watermark: str = "1 hour",
-    min_tokens: int = 10,
-    max_tokens: int = 100_000,
     min_quality: float = 0.5,
     pdf_mode: str = "parse",
     neardup_against_committed: bool = False,
     neardup_threshold: float = 0.7,
-    neardup_max_bucket: int = 1000,
-    neardup_num_hashes: int = 16,
-    neardup_bands: int = 8,
 ):
     """Streaming form of the training-data prepare pipeline — the
     continuous-crawl-ingest twin of plans/prepare.prepare_training_data:
 
         pages stream -> cross-micro-batch exact dedup (digest state,
-        watermark-bounded) -> extraction cascade -> quality gate ->
-        [near-dup vs committed corpus] -> append clean corpus
+        watermark-bounded) -> prepare.quality_gated (extraction cascade,
+        valid text, quality gate) -> [near-dup vs committed corpus]
+        -> append clean corpus
 
     Dedup runs FIRST here (on the payload digest, before extraction) —
     in a continuous ingest the same page recrawled minutes apart is the
@@ -200,9 +185,8 @@ def run_stream_prepare(
     """
     from pyspark.sql import functions as F
 
-    from jarvis_ocr_service_spark.functions.textstats import with_text_stats
     from jarvis_ocr_service_spark.plans.caching import cache_scope, persist
-    from jarvis_ocr_service_spark.plans.pipeline import run_pipeline
+    from jarvis_ocr_service_spark.plans.prepare import quality_gated
 
     pages = spark.readStream.schema(PAGES_SCHEMA).parquet(input_path)
     deduped = (
@@ -219,33 +203,23 @@ def run_stream_prepare(
     # nothing (r5 ADVICE); the callback thread has its own scope
     @cache_scope()
     def process_batch(batch_df, batch_id: int):
-        extracted = run_pipeline(batch_df, pdf_mode=pdf_mode).filter(
-            F.col("is_valid")
-        )
-        scored = with_text_stats(
-            extracted.select("url", "text"),
-            stats=("n_tokens", "lang_guess", "quality"),
-        ).filter(
-            (F.col("n_tokens") >= min_tokens)
-            & (F.col("n_tokens") <= max_tokens)
-            & (F.col("quality") >= min_quality)
-        )
+        scored = quality_gated(batch_df, min_quality=min_quality, pdf_mode=pdf_mode)
         if not neardup_against_committed:
             _write_batch_idempotent(scored, output_path, batch_id)
             return
 
         from jarvis_ocr_service_spark.functions.dedup import (
             _shingled_with_signatures,
+            minhash_lsh_pairs_between_sh,
         )
 
         bands_path = f"{output_path}/_bands"
         # only params baked into STORED rows are pinned — banding is
-        # derived from sig at read time, so neardup_bands may vary
+        # derived from sig at read time
         _sidecar_params_guard(
             spark,
             bands_path,
-            {"k": 3, "max_tokens": 2000,
-             "num_hashes": int(neardup_num_hashes)},
+            {"k": 3, "max_tokens": 2000, "num_hashes": _NUM_HASHES},
         )
         # batches committed while the flag was OFF have no sidecar rows
         # and would silently sit outside the near-dup comparison set
@@ -273,27 +247,11 @@ def run_stream_prepare(
             ).select("url", "text")
             _write_batch_idempotent(
                 _shingled_with_signatures(
-                    committed_text, "text", "url", 3, 2000,
-                    neardup_num_hashes,
+                    committed_text, "text", "url", 3, 2000, _NUM_HASHES
                 ),
                 bands_path,
                 mid,
             )
-        _neardup_batch(
-            spark, scored, batch_id, output_path, bands_path,
-            neardup_num_hashes, neardup_bands, neardup_threshold,
-            neardup_max_bucket,
-        )
-
-    def _neardup_batch(
-        spark, scored, batch_id, output_path, bands_path,
-        neardup_num_hashes, neardup_bands, neardup_threshold,
-        neardup_max_bucket,
-    ):
-        from jarvis_ocr_service_spark.functions.dedup import (
-            _shingled_with_signatures,
-            minhash_lsh_pairs_between_sh,
-        )
 
         # persist the gated batch BEFORE signatures: the extraction
         # cascade + quality gate run once (materialized by the
@@ -307,9 +265,9 @@ def run_stream_prepare(
         # the left side of the near-dup join and (survivors only) this
         # batch's sidecar contribution
         batch_sh = persist(
-            _shingled_with_signatures(scored, "text", "url", 3, 2000, neardup_num_hashes)
+            _shingled_with_signatures(scored, "text", "url", 3, 2000, _NUM_HASHES)
         )
-        if _committed_corpus_exists(spark, bands_path):
+        if _committed_batch_ids(spark, bands_path):
             # the committed corpus's signatures come from the sidecar —
             # a columnar (k, sh, sig) scan with band keys derived
             # JVM-side from sig; the corpus TEXT is never re-read or
@@ -320,17 +278,17 @@ def run_stream_prepare(
                 .filter(F.col("batch") != int(batch_id))
                 .drop("batch")
             )
-            # default 16 hashes / 8 bands = rows-per-band 2: ~99.9%
-            # band recall at Jaccard 0.75 (r=4's ~80% deterministically
-            # missed truncated twins); exact verify still gates every
+            # 16 hashes / 8 bands = rows-per-band 2: ~99.9% band recall
+            # at Jaccard 0.75 (r=4's ~80% deterministically missed
+            # truncated twins); exact verify still gates every
             # candidate, so extra collisions cost compute, not recall
             near = minhash_lsh_pairs_between_sh(
                 batch_sh,
                 corpus_sh,
-                num_hashes=neardup_num_hashes,
-                bands=neardup_bands,
+                num_hashes=_NUM_HASHES,
+                bands=8,
                 verify_threshold=neardup_threshold,
-                max_bucket=neardup_max_bucket,
+                max_bucket=1000,
             )
             dup_urls = near.select(
                 F.col("left_key").alias("url")
@@ -347,11 +305,10 @@ def run_stream_prepare(
         )
         _write_batch_idempotent(survivor_sh, bands_path, batch_id)
 
-    writer = (
+    return (
         deduped.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

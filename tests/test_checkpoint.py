@@ -2,7 +2,6 @@
 no duplicates, no gaps (north rule)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from jarvis_ocr_service_spark.plans.checkpoint import (
     committed_batch_files,
@@ -21,6 +20,29 @@ def pages_dir(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("pages"))
     synthesize_pages(spark, N, num_partitions=6).write.mode("overwrite").parquet(d)
     return d
+
+
+def _run_killed(spark, monkeypatch, *args, **kwargs):
+    """Emulate a driver killed during the second batch: extraction raises
+    there, so exactly one batch commits. The real extraction is restored
+    afterwards, ready for the resume run."""
+    from jarvis_ocr_service_spark.plans import pipeline
+
+    real = pipeline.run_pipeline
+    calls = []
+
+    def dies_in_second_batch(df, **kw):
+        calls.append(df)
+        if len(calls) == 2:
+            raise RuntimeError("driver killed")
+        return real(df, **kw)
+
+    monkeypatch.setattr(pipeline, "run_pipeline", dies_in_second_batch)
+    try:
+        with pytest.raises(RuntimeError, match="driver killed"):
+            run_checkpointed(spark, *args, **kwargs)
+    finally:
+        monkeypatch.setattr(pipeline, "run_pipeline", real)
 
 
 def _collect_sorted(df):
@@ -42,42 +64,42 @@ def test_file_listing_deterministic(spark, pages_dir):
 def test_one_shot_run_complete(spark, pages_dir, tmp_path):
     out, man = str(tmp_path / "out"), str(tmp_path / "manifest")
     stats = run_checkpointed(spark, pages_dir, out, man, files_per_batch=2)
-    assert stats["complete"] and stats["ran"] == 3 and stats["skipped_committed"] == 0
+    assert stats["ran"] == 3 and stats["skipped_committed"] == 0
     result = read_committed(spark, out, man)
     assert result.count() == N
     c = manifest_counters(spark, man).collect()[0]
     assert c.batches == 3 and c.rows == N
 
 
-def test_kill_and_resume_equals_one_shot(spark, pages_dir, tmp_path):
+def test_kill_and_resume_equals_one_shot(spark, pages_dir, tmp_path, monkeypatch):
     # one-shot reference run
     out1, man1 = str(tmp_path / "o1"), str(tmp_path / "m1")
     run_checkpointed(spark, pages_dir, out1, man1, files_per_batch=2)
     expected = _collect_sorted(read_committed(spark, out1, man1))
 
-    # "killed" run: only 1 batch committed
+    # killed run: only batch 0 committed
     out2, man2 = str(tmp_path / "o2"), str(tmp_path / "m2")
-    stats = run_checkpointed(spark, pages_dir, out2, man2, files_per_batch=2, max_batches=1)
-    assert not stats["complete"] and stats["ran"] == 1
+    _run_killed(spark, monkeypatch, pages_dir, out2, man2, files_per_batch=2)
     assert set(committed_batch_files(spark, man2)) == {0}
 
     # resume: skips committed batch, finishes the rest
     stats2 = run_checkpointed(spark, pages_dir, out2, man2, files_per_batch=2)
-    assert stats2["complete"]
     assert stats2["skipped_committed"] == 1 and stats2["ran"] == 2
 
     got = _collect_sorted(read_committed(spark, out2, man2))
     assert got == expected  # no dupes, no gaps, identical content
 
 
-def test_orphan_batch_overwritten_not_duplicated(spark, pages_dir, tmp_path):
+def test_orphan_batch_overwritten_not_duplicated(
+    spark, pages_dir, tmp_path, monkeypatch
+):
     """Crash between data write and manifest commit: orphan data exists but
     is not visible via read_committed, and resume overwrites it cleanly."""
     out, man = str(tmp_path / "o3"), str(tmp_path / "m3")
     # simulate: batch 0 committed, then batch 1's data written but manifest
-    # append "crashed" — emulate by running max_batches=1 then hand-writing
-    # an orphan dir for batch 1.
-    run_checkpointed(spark, pages_dir, out, man, files_per_batch=2, max_batches=1)
+    # append "crashed" — emulate by killing the run in batch 1, then
+    # hand-writing an orphan dir for batch 1.
+    _run_killed(spark, monkeypatch, pages_dir, out, man, files_per_batch=2)
     files = list_input_files(spark, pages_dir)
     from jarvis_ocr_service_spark.plans.pipeline import run_pipeline
 
@@ -93,18 +115,20 @@ def test_orphan_batch_overwritten_not_duplicated(spark, pages_dir, tmp_path):
     assert final.select("url").distinct().count() == N
 
 
-def test_resume_with_changed_batching_hard_errors(spark, pages_dir, tmp_path):
+def test_resume_with_changed_batching_hard_errors(
+    spark, pages_dir, tmp_path, monkeypatch
+):
     """batch_id is positional: resuming with a different files_per_batch (or
     a changed input listing) re-maps ids onto different file sets. The
     manifest records the exact files per batch — resume must verify them
     and refuse on mismatch instead of silently skipping the wrong files."""
     out, man = str(tmp_path / "o5"), str(tmp_path / "m5")
-    run_checkpointed(spark, pages_dir, out, man, files_per_batch=2, max_batches=1)
+    _run_killed(spark, monkeypatch, pages_dir, out, man, files_per_batch=2)
     with pytest.raises(ValueError, match="resume mismatch"):
         run_checkpointed(spark, pages_dir, out, man, files_per_batch=3)
     # unchanged batching still resumes cleanly
     stats = run_checkpointed(spark, pages_dir, out, man, files_per_batch=2)
-    assert stats["complete"] and stats["skipped_committed"] == 1
+    assert stats["ran"] == 2 and stats["skipped_committed"] == 1
     assert read_committed(spark, out, man).count() == N
 
 
@@ -112,7 +136,7 @@ def test_rerun_after_complete_is_noop(spark, pages_dir, tmp_path):
     out, man = str(tmp_path / "o4"), str(tmp_path / "m4")
     run_checkpointed(spark, pages_dir, out, man, files_per_batch=3)
     stats = run_checkpointed(spark, pages_dir, out, man, files_per_batch=3)
-    assert stats["ran"] == 0 and stats["complete"]
+    assert stats["ran"] == 0 and stats["skipped_committed"] == 2
     assert read_committed(spark, out, man).count() == N
 
 
@@ -127,128 +151,34 @@ def test_uncommitted_manifest_dir_means_nothing_committed(spark, pages_dir, tmp_
     os.makedirs(os.path.join(man, "_temporary", "0"))
     assert set(committed_batch_files(spark, man)) == set()
     stats = run_checkpointed(spark, pages_dir, out, man, files_per_batch=3)
-    assert stats["complete"] and stats["skipped_committed"] == 0
+    assert stats["ran"] == 2 and stats["skipped_committed"] == 0
     assert read_committed(spark, out, man).count() == N
 
 
-def test_incremental_dedup_across_resume(spark, tmp_path):
-    """dedup_against_committed: a recrawled duplicate arriving in a LATER
-    batch — including after a kill-and-resume — is dropped against the
-    already-COMMITTED corpus output, and resume equals one-shot exactly."""
-    src = str(tmp_path / "dup_pages")
-    base = synthesize_pages(spark, 60, num_partitions=2)
-    base.write.mode("overwrite").parquet(src)
-    # recrawl: identical payloads under new urls, landing in later files
-    base.withColumn("url", F.concat(F.col("url"), F.lit("-re"))).write.mode(
-        "append"
-    ).parquet(src)
-    n_distinct = (
-        spark.read.parquet(src)
-        .select(F.md5(F.coalesce("html", F.lit(b""))))
-        .distinct()
-        .count()
-    )
-
-    # one-shot
-    out1, man1 = str(tmp_path / "o1"), str(tmp_path / "m1")
-    run_checkpointed(
-        spark, src, out1, man1, files_per_batch=1, dedup_against_committed=True
-    )
-    one_shot = read_committed(spark, out1, man1)
-    assert one_shot.count() == n_distinct
-    assert one_shot.select("url").distinct().count() == n_distinct
-
-    # kill after 1 batch, then resume
-    out2, man2 = str(tmp_path / "o2"), str(tmp_path / "m2")
-    run_checkpointed(
-        spark, src, out2, man2, files_per_batch=1, max_batches=1,
-        dedup_against_committed=True,
-    )
-    assert set(committed_batch_files(spark, man2)) == {0}
-    stats = run_checkpointed(
-        spark, src, out2, man2, files_per_batch=1, dedup_against_committed=True
-    )
-    assert stats["complete"] and stats["skipped_committed"] == 1
-    resumed = read_committed(spark, out2, man2)
-    assert _collect_sorted(resumed) == _collect_sorted(one_shot)
-
-    # without the flag the recrawl rows all land (the r3 gap)
-    out3, man3 = str(tmp_path / "o3"), str(tmp_path / "m3")
-    run_checkpointed(spark, src, out3, man3, files_per_batch=1)
-    assert read_committed(spark, out3, man3).count() == 120
+def test_partitioned_input_is_rejected(spark, tmp_path):
+    """A pages table written with partitionBy keeps its files in
+    subdirectories; the runner refuses it instead of committing nothing."""
+    src = str(tmp_path / "by_lang")
+    synthesize_pages(spark, 20).write.partitionBy("lang").parquet(src)
+    with pytest.raises(ValueError, match="partitioned"):
+        run_checkpointed(spark, src, str(tmp_path / "o"), str(tmp_path / "m"))
 
 
-def test_dir_digest_probe_zero_shuffle_plan(spark, tmp_path):
-    """r5 verdict item 7: the metastore-free parquet-dir digest store
-    must probe the committed set WITHOUT shuffling it — the plan is two
-    BroadcastHashJoins (semi then anti) with ZERO Exchanges, even with
-    auto-broadcast disabled (the broadcasts are explicit, not
-    threshold-dependent). This is exactly the plan run_checkpointed
-    builds via probe_committed_digests."""
-    from jarvis_ocr_service_spark.plans.checkpoint import (
-        probe_committed_digests,
-    )
-
-    store = str(tmp_path / "digests")
-    spark.range(1000).selectExpr(
-        "md5(CAST(id AS STRING)) AS _digest"
-    ).write.parquet(store)
-    seen = spark.read.parquet(store)
-    # ids 0..900 collide with the store (drop), 1000..1900 survive
-    keyed = spark.range(20).selectExpr(
-        "md5(CAST(id * 100 AS STRING)) AS _digest", "id AS payload"
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        probed = probe_committed_digests(keyed, seen)
-        plan = probed._jdf.queryExecution().executedPlan().toString()
-        # zero SHUFFLE exchanges — broadcasts are the point of the plan
-        n_shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
-        assert n_shuffles == 0, plan
-        assert plan.count("BroadcastHashJoin") == 2, plan
-        # semantics: identical to the naive full anti-join
-        naive = keyed.join(seen, "_digest", "left_anti")
-        assert sorted(r.payload for r in probed.collect()) == sorted(
-            r.payload for r in naive.collect()
-        )
-        assert probed.count() < 20  # the probe actually dropped hits
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_failed_batch_releases_caches(spark, pages_dir, tmp_path):
-    """r5 ADVICE: an exception mid-batch must not leak persisted frames
-    for the life of the session — the per-batch caches are released in
-    a finally."""
-    out, man = str(tmp_path / "of"), str(tmp_path / "mf")
-
-    def exploding_pipeline(df):
-        raise RuntimeError("boom")
-
-    before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    with pytest.raises(RuntimeError, match="boom"):
-        run_checkpointed(
-            spark, pages_dir, out, man, files_per_batch=1, max_batches=1,
-            dedup_against_committed=True, pipeline_fn=exploding_pipeline,
-        )
-    after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    assert after == before
+def test_failed_batch_releases_caches(spark, pages_dir, rdds, tmp_path, monkeypatch):
+    """A run killed mid-batch leaves no persisted frame in the session."""
+    out, man = str(tmp_path / "o"), str(tmp_path / "m")
+    before = rdds()
+    _run_killed(spark, monkeypatch, pages_dir, out, man, files_per_batch=3)
+    assert rdds() == before
 
 
 def test_caching_pipeline_fn_releases_per_batch(spark, pages_dir, rdds, tmp_path):
-    """A pipeline_fn whose result holds a persisted frame is covered by the
-    batch's scope too: two batches leave nothing behind."""
-    from jarvis_ocr_service_spark.plans.caching import persist
-    from jarvis_ocr_service_spark.plans.pipeline import run_pipeline
-
-    def caching_pipeline(df):
-        return persist(run_pipeline(df))
-
+    """The extraction each batch runs leaves nothing persisted behind:
+    a completed two-batch run ends with the session's caches unchanged."""
     before = rdds()
     stats = run_checkpointed(
         spark, pages_dir, str(tmp_path / "o"), str(tmp_path / "m"),
-        files_per_batch=3, pipeline_fn=caching_pipeline,
+        files_per_batch=3,
     )
     assert stats["ran"] == 2
     assert rdds() == before

@@ -149,3 +149,25 @@ def test_extraction_chain_takes_only_pdf_mode():
         sig = inspect.signature(fn).parameters
         optional = [n for n, p in sig.items() if p.default is not p.empty]
         assert (list(sig), optional) == (params, ["pdf_mode"]), fn.__name__
+
+
+def test_incremental_runners_take_only_what_the_cli_passes():
+    """The resume, stream and stream-prepare commands are the only callers
+    of their runners, so each runner takes exactly what its command
+    passes, in this order."""
+    from jarvis_ocr_service_spark.plans.checkpoint import run_checkpointed
+    from jarvis_ocr_service_spark.streaming.stream import (
+        run_stream,
+        run_stream_prepare,
+    )
+
+    head = ["spark", "input_path", "output_path"]
+    for fn, params in (
+        (run_checkpointed, head + ["manifest_path", "pdf_mode", "files_per_batch"]),
+        (run_stream, head + ["checkpoint_path", "pdf_mode"]),
+        (run_stream_prepare, head + [
+            "checkpoint_path", "watermark", "min_quality", "pdf_mode",
+            "neardup_against_committed", "neardup_threshold",
+        ]),
+    ):
+        assert list(inspect.signature(fn).parameters) == params, fn.__name__

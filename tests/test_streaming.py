@@ -12,7 +12,7 @@ def test_stream_drains_and_is_exactly_once(spark, tmp_path):
     first = synthesize_pages(spark, 40, num_partitions=2)
     first.write.mode("overwrite").parquet(pages_dir)
 
-    q = run_stream(spark, pages_dir, out, ckpt, available_now=True)
+    q = run_stream(spark, pages_dir, out, ckpt)
     q.awaitTermination(120)
     got = spark.read.parquet(out)
     assert got.count() == 40
@@ -25,14 +25,14 @@ def test_stream_drains_and_is_exactly_once(spark, tmp_path):
     more.write.mode("append").parquet(pages_dir)
     n_new = more.count()
 
-    q2 = run_stream(spark, pages_dir, out, ckpt, available_now=True)
+    q2 = run_stream(spark, pages_dir, out, ckpt)
     q2.awaitTermination(120)
     final = spark.read.parquet(out)
     assert final.count() == 40 + n_new
     assert final.select("url").distinct().count() == 40 + n_new  # no reprocessing
 
     # restart with no new data -> no-op
-    q3 = run_stream(spark, pages_dir, out, ckpt, available_now=True)
+    q3 = run_stream(spark, pages_dir, out, ckpt)
     q3.awaitTermination(120)
     assert spark.read.parquet(out).count() == 40 + n_new
 
@@ -64,6 +64,17 @@ def test_stream_prepare_dedups_then_extracts_and_gates(spark, tmp_path):
         "url", "text", "n_tokens", "lang_guess", "quality", "batch"
     }
     assert corpus1.filter(F.col("quality") < 0.5).count() == 0
+    # the same gate as the batch pipeline: on these 60 pages (distinct
+    # payloads and texts once class 7 is gated out) stream and batch
+    # prepare keep the same rows
+    from jarvis_ocr_service_spark.plans.prepare import prepare_training_data
+
+    def url_text(df):
+        return sorted((r.url, r.text) for r in df.select("url", "text").collect())
+
+    assert url_text(corpus1) == url_text(
+        prepare_training_data(base, near_dup_threshold=None)
+    )
 
     # recrawl: identical payloads under new urls -> all deduped, 0 new rows
     base.withColumn("url", F.concat(F.col("url"), F.lit("-re"))).write.mode(
